@@ -1546,7 +1546,7 @@ class TransactionalLake:
         bounds = self._map_cols(bounds, doc)
         equals = self._map_cols(equals, doc) if equals else equals
         kept, _total, schemas, dvs = self._pruned_state(bounds, equals)
-        df = self._df_for_files(kept, schemas, dvs=dvs)
+        df = self._read_files(kept, schemas, dvs=dvs)
         for col, (lo, hi) in bounds.items():
             c = F.col(col)
             if lo is not None:
@@ -2326,7 +2326,7 @@ class TransactionalLake:
         rewritten files; r11 fix)."""
         if c.get("schema_reset"):
             del schemas[:]
-        if c.get("schema_history"):
+        if c.get("schema_history"):  # written by older restore/clone
             schemas.extend(c["schema_history"])
         elif c.get("schema"):
             schemas.append(c["schema"])
@@ -2361,40 +2361,6 @@ class TransactionalLake:
                         continue  # prev is wider — keep it
                 order[f["name"]] = f  # keeps first-seen position
         return list(order.values())
-
-    def _explicit_read_schema(self, schemas: list[str]):
-        """Explicit parquet read schema (StructType) when the type
-        history is HETEROGENEOUS — i.e. a ``widen_column_type``
-        landed. mergeSchema cannot merge int/long files, but the
-        Spark 4 parquet reader widens per-file against a requested
-        schema (probed on this runtime: every integral chain plus
-        {tinyint,smallint,int,float}->double; bigint->double is NOT
-        reader-supported and widen_column_type refuses it). Returns
-        None for the (overwhelmingly common) homogeneous history —
-        the caller then keeps the mergeSchema path, so tables that
-        never widen see zero behavior change. Fields are forced
-        nullable: a column a file lacks null-fills."""
-        seen: dict[str, str] = {}
-        hetero = False
-        for s in schemas:
-            for f in json.loads(s)["fields"]:
-                t = json.dumps(f["type"], sort_keys=True)
-                if f["name"] in seen and seen[f["name"]] != t:
-                    hetero = True
-                seen[f["name"]] = t
-        if not hetero:
-            return None
-        from pyspark.sql.types import StructType
-
-        return StructType.fromJson(
-            {
-                "type": "struct",
-                "fields": [
-                    {**f, "nullable": True}
-                    for f in self._merged_fields(schemas)
-                ],
-            }
-        )
 
     # widenings the Spark 4 parquet reader handles per-file against
     # a requested schema (probed in this container; note bigint ->
@@ -2760,7 +2726,7 @@ class TransactionalLake:
             # becomes files — a narrow batch after widen_column_type
             # upcasts (the widened schema stays authoritative), and a
             # cross-family divergent batch fails loudly HERE instead
-            # of poisoning every future mergeSchema read
+            # of landing files the log-schema reader cannot read
             df = self._cast_to_committed(df, schemas)
             # r11: omitted defaulted columns materialize here
             df = self._apply_defaults(df, schemas)
@@ -2904,7 +2870,7 @@ class TransactionalLake:
                 },
                 read_version=read_v, read_bounds=read_bounds,
             )
-        snap = self._df_for_files(old, schemas, dvs=dvs)
+        snap = self._read_files(old, schemas, dvs=dvs)
         affected = self._affected_files(snap, match)
         rt = self._row_tracking_state()
         parts: list[DataFrame] = [self._conform(df, schemas)]
@@ -3527,7 +3493,7 @@ class TransactionalLake:
                  "remove": []},
                 read_version=read_v, read_bounds=read_bounds,
             )
-        snap = self._df_for_files(cand, schemas, dvs=dvs)
+        snap = self._read_files(cand, schemas, dvs=dvs)
         match = F.coalesce(F.expr(predicate), F.lit(False))
         affected = self._affected_files(snap, match)
         if not affected:
@@ -3721,7 +3687,7 @@ class TransactionalLake:
             return self._commit({**action_base, "dv": {}},
                                 read_version=read_v,
                                 read_bounds=read_bounds)
-        raw = self._positional_scan(cand, schemas, dvs)
+        raw = self._read_files(cand, schemas, dvs, positions=True)
         hits = (
             raw.filter(F.coalesce(F.expr(predicate), F.lit(False)))
             .select("_row_file", "_row_pos")
@@ -3735,87 +3701,6 @@ class TransactionalLake:
             {**action_base, "dv": self._dv_from_hits(hits, old)},
             read_version=read_v, read_bounds=read_bounds,
         )
-
-    def _positional_scan(
-        self,
-        old: list[str],
-        schemas: list[str],
-        dvs: dict[str, list[int]],
-        with_rt: bool = False,
-    ) -> DataFrame:
-        """Visible-row scan carrying ``_row_file`` / ``_row_pos``
-        position columns — the read side of every merge-on-read
-        writer (dv delete/update/merge). Rows already hidden by a
-        vector are anti-joined away; evolved columns are null-filled
-        WITHOUT ``_conform``'s strict select (it would drop the
-        position columns the whole scan exists for).
-
-        ``with_rt``: surface the materialized row-tracking columns
-        (null-filled where a file lacks them) — the read side of
-        id-preserving rewrites. Default hides them: they are physical
-        internals, never data."""
-        reader = self.spark.read.option("basePath", self.path)
-        struct = self._explicit_read_schema(schemas)
-        if struct is not None:
-            if with_rt:
-                from pyspark.sql.types import (
-                    LongType,
-                    StructField,
-                    StructType,
-                )
-
-                struct = StructType(
-                    struct.fields
-                    + [
-                        StructField(c, LongType(), True)
-                        for c in self._RT_COLS
-                    ]
-                )
-            reader = reader.schema(struct)
-        else:
-            reader = reader.option("mergeSchema", "true")
-        raw = reader.parquet(*[os.path.join(self.path, f) for f in old])
-        if with_rt:
-            for c in self._RT_COLS:
-                if c not in raw.columns:
-                    raw = raw.withColumn(c, F.lit(None).cast("long"))
-        else:
-            raw = raw.drop(*self._RT_COLS)
-        # substring_index beats split+element_at: no per-row array
-        # allocation (r11 rt-read diagnosis, AB_BENCH r11_rt_read)
-        fname = F.substring_index(F.col("_metadata.file_path"), "/", -1)
-        raw = raw.withColumn("_row_file", fname).withColumn(
-            "_row_pos", F.col("_metadata.row_index")
-        )
-        if dvs:
-            pairs = [
-                (os.path.basename(rel), int(p))
-                for rel, ps in dvs.items()
-                for p in ps
-            ]
-            dv_df = local_df(self.spark, 
-                pairs, "_dv_file string, _dv_pos bigint"
-            )
-            raw = raw.join(
-                F.broadcast(dv_df),
-                (F.col("_row_file") == F.col("_dv_file"))
-                & (F.col("_row_pos") == F.col("_dv_pos")),
-                "left_anti",
-            )
-        if schemas:
-            from pyspark.sql.types import StructField, StructType
-
-            for fld in self._merged_fields(schemas):
-                if fld["name"] not in raw.columns:
-                    raw = raw.withColumn(
-                        fld["name"],
-                        F.lit(None).cast(
-                            StructType([StructField.fromJson(fld)])
-                            .fields[0]
-                            .dataType
-                        ),
-                    )
-        return raw
 
     def _dv_from_hits(self, hits, old: list[str]) -> dict[str, list[int]]:
         """(file, position) collect rows -> the commit's dv map,
@@ -3888,7 +3773,7 @@ class TransactionalLake:
         # a one-file read still serves the column validation below
         # when nothing can match
         cand = self._dml_prune(old, predicate)
-        snap = self._df_for_files(cand or old[:1], schemas, dvs=dvs)
+        snap = self._read_files(cand or old[:1], schemas, dvs=dvs)
         # validate against the FULL table schema: a legitimately
         # evolved column is assignable even when no affected file
         # happens to carry it physically
@@ -3961,8 +3846,8 @@ class TransactionalLake:
                 {**action_base, "dv": {}, "add": []}, read_version=read_v, read_bounds=read_bounds
             )
         rt = self._row_tracking_state()
-        raw = self._positional_scan(
-            cand or old[:1], schemas, dvs, with_rt=bool(rt)
+        raw = self._read_files(
+            cand or old[:1], schemas, dvs, positions=True, keep_rt=bool(rt)
         )
         unknown = set(assignments) - (
             set(raw.columns) - {"_row_file", "_row_pos", *self._RT_COLS}
@@ -4040,7 +3925,9 @@ class TransactionalLake:
         insert anti-join)."""
         action_base = {"op": "merge_dv", **txn_action}
         rt = self._row_tracking_state()
-        raw = self._positional_scan(old, schemas, dvs, with_rt=bool(rt))
+        raw = self._read_files(
+            old, schemas, dvs, positions=True, keep_rt=bool(rt)
+        )
         if src_bytes is None:
             src_bytes = self._measured_bytes(source)
         src_keys = self._maybe_broadcast(
@@ -4437,8 +4324,8 @@ class TransactionalLake:
         autoMerge): source columns the target lacks EVOLVE the table
         schema in this merge's commit — update postimages and inserts
         carry them, survivors and untouched files null-fill on read
-        (the same heterogeneous-file machinery append's mergeSchema
-        uses). Off by default: an unknown column is a loud error, not
+        (the reader reads every file with the log's table schema).
+        Off by default: an unknown column is a loud error, not
         silent evolution. Merge KEYS must already exist in the
         target either way.
 
@@ -4947,7 +4834,7 @@ class TransactionalLake:
                 not_matched_condition=not_matched_condition,
                 matched_clauses=matched_clauses,
             )
-        snap = self._df_for_files(probe_files or old[:1], schemas, dvs=dvs)
+        snap = self._read_files(probe_files or old[:1], schemas, dvs=dvs)
         # size-gated hint: a CDC micro-batch's keys broadcast (no
         # shuffle), a bulk-backfill's keys do not (AQE chooses) —
         # forcing the hint on a huge source OOMs the executors. The
@@ -5266,9 +5153,9 @@ class TransactionalLake:
             parts.append(ins)
         out: DataFrame | None = None
         for p in parts:
-            # null-fill columns a pre-evolution file or the source
-            # lacks (mergeSchema reads over a SUBSET of files only
-            # carry the columns present in that subset)
+            # null-fill columns a part lacks: inserts carry only the
+            # source's columns, survivors and postimages lack the
+            # columns this merge evolves in
             out = p if out is None else out.unionByName(
                 p, allowMissingColumns=True
             )
@@ -5346,7 +5233,7 @@ class TransactionalLake:
         files, schemas, v, dvs = self._snapshot_state(version, timestamp)
         doc = self._column_mapping_doc(as_of=v)
         if not with_row_ids:
-            df = self._df_for_files(files, schemas, dvs=dvs)
+            df = self._read_files(files, schemas, dvs=dvs)
             return self._to_logical(df, doc)
         rt = self._row_tracking_state(as_of=v)
         if rt is None:
@@ -5358,13 +5245,15 @@ class TransactionalLake:
         rid = F.col(self._RT_ID).alias("_row_id")
         rver = F.col(self._RT_VER).alias("_row_commit_version")
         if not files:
-            df = self._df_for_files(files, schemas)  # empty, typed
+            df = self._read_files(files, schemas)  # empty, typed
             df = df.withColumn(
                 "_row_id", F.lit(None).cast("bigint")
             ).withColumn("_row_commit_version", F.lit(None).cast("bigint"))
         else:
             raw = self._rt_attach(
-                self._positional_scan(files, schemas, dvs, with_rt=True),
+                self._read_files(
+                    files, schemas, dvs, positions=True, keep_rt=True
+                ),
                 files,
                 rt,
             )
@@ -5386,94 +5275,100 @@ class TransactionalLake:
             "_row_commit_version",
         )
 
-    def _df_for_files(
+    def _read_files(
         self,
         files: list[str],
         schemas: list[str],
         dvs: dict[str, list[int]] | None = None,
+        *,
+        positions: bool = False,
+        keep_rt: bool = False,
     ) -> DataFrame:
-        """DataFrame over an explicit live-file list (so callers that
-        also need the file list for a commit resolve state once).
-        ``dvs`` applies deletion vectors: rows at the given positions
-        of the given files are filtered out via a broadcast anti-join
-        on (file basename, ``_metadata.row_index``) — merge-on-read,
-        no data rewritten."""
+        """The one reader of lake data files: every read surface
+        (snapshot, time travel, pruned scans, DML, CDC) comes here.
+
+        The log owns the schema, so the read never opens a footer to
+        merge one: data columns take the log's merged types in log
+        order (the parquet reader null-fills columns a file lacks and
+        upcasts files written before a ``widen_column_type``);
+        partition columns — the keys of the files' ``k=v`` path
+        segments — are left to Spark's path inference and follow the
+        data columns. ``keep_rt`` also requests the row-tracking
+        physical columns (null where a file lacks them); otherwise
+        they are never read. ``dvs`` applies deletion vectors by a
+        broadcast anti-join on (file basename, row index) —
+        merge-on-read, no data rewritten. ``positions`` keeps that
+        pair as ``_row_file`` / ``_row_pos``, the read side of every
+        positional writer.
+
+        An empty file set reads as an empty frame typed by the log
+        alone (partition columns included, as committed)."""
+        from pyspark.sql.types import StructType
+
+        fields = self._merged_fields(schemas)
         if not files:
-            if schemas:
-                from pyspark.sql.types import StructType
-
-                return local_df(self.spark, 
-                    [],
-                    StructType.fromJson(
-                        {
-                            "type": "struct",
-                            "fields": self._merged_fields(schemas),
-                        }
-                    ),
-                )
-            raise ValueError("empty table: no commits")
-        reader = self.spark.read.option("basePath", self.path)
-        struct = self._explicit_read_schema(schemas)
-        if struct is not None:
-            # widened table: the reader upcasts narrow files against
-            # the log-owned schema (mergeSchema would fail to merge)
-            reader = reader.schema(struct)
-        else:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(
-            *[os.path.join(self.path, f) for f in files]
-        ).drop(*self._RT_COLS)
-        have = set(df.columns)
-        virtual = [
-            f
-            for f in self._merged_fields(schemas)
-            if f["name"] not in have
+            if not schemas:
+                raise ValueError("empty table: no commits")
+            return local_df(
+                self.spark,
+                [],
+                StructType.fromJson({"type": "struct", "fields": fields}),
+            )
+        part = {
+            unquote(seg.split("=", 1)[0])
+            for f in files
+            for seg in f.split("/")[:-1]
+            if "=" in seg
+        }
+        read = [
+            {**f, "nullable": True} for f in fields if f["name"] not in part
         ]
-        if virtual:
-            # fields the TABLE schema carries but no file in this
-            # read set does: a metadata-only add_column (no file has
-            # the column yet) or a pruned subset of pre-evolution
-            # files — null-fill so every read surface sees the full
-            # schema (the explicit-schema path above already does)
-            from pyspark.sql.types import StructField, StructType
-
-            for f in virtual:
-                df = df.withColumn(
-                    f["name"],
-                    F.lit(None).cast(
-                        StructType([StructField.fromJson(f)])
-                        .fields[0]
-                        .dataType
-                    ),
-                )
+        if keep_rt:
+            read += [
+                {"name": c, "type": "long", "nullable": True, "metadata": {}}
+                for c in self._RT_COLS
+            ]
+        df = (
+            self.spark.read.option("basePath", self.path)
+            .schema(StructType.fromJson({"type": "struct", "fields": read}))
+            .parquet(*[os.path.join(self.path, f) for f in files])
+        )
+        keep = set(files)
+        dvs = {f: p for f, p in (dvs or {}).items() if f in keep and p}
+        if not (positions or dvs):
+            return df
+        cols = df.columns
+        # substring_index beats split+element_at: no per-row array
+        # allocation
+        df = df.withColumn(
+            "_row_file",
+            F.substring_index(F.col("_metadata.file_path"), "/", -1),
+        ).withColumn("_row_pos", F.col("_metadata.row_index"))
         if dvs:
-            keep = set(files)
-            pairs = [
+            df = self._dv_join(df, dvs, "left_anti")
+        return df if positions else df.select(*cols)
+
+    def _dv_join(
+        self, df: DataFrame, dvs: dict[str, list[int]], how: str
+    ) -> DataFrame:
+        """Join a positional read (``_row_file`` / ``_row_pos``)
+        against deletion-vector positions: ``left_anti`` hides them,
+        ``left_semi`` keeps only them (CDC's positional changes)."""
+        pairs = local_df(
+            self.spark,
+            [
                 (os.path.basename(rel), int(p))
                 for rel, ps in dvs.items()
-                if rel in keep
                 for p in ps
-            ]
-            if pairs:
-                cols = df.columns
-                dv_df = local_df(self.spark, 
-                    pairs, "_dv_file string, _dv_pos bigint"
-                )
-                fname = F.substring_index(
-                    F.col("_metadata.file_path"), "/", -1
-                )
-                df = (
-                    df.withColumn("_row_file", fname)
-                    .withColumn("_row_pos", F.col("_metadata.row_index"))
-                    .join(
-                        F.broadcast(dv_df),
-                        (F.col("_row_file") == F.col("_dv_file"))
-                        & (F.col("_row_pos") == F.col("_dv_pos")),
-                        "left_anti",
-                    )
-                    .select(*cols)
-                )
-        return df
+            ],
+            "_dv_file string, _dv_pos bigint",
+        )
+        return df.join(
+            F.broadcast(pairs),
+            (F.col("_row_file") == F.col("_dv_file"))
+            & (F.col("_row_pos") == F.col("_dv_pos")),
+            how,
+        )
 
     def version_at_or_after(self, timestamp: str | float) -> int:
         """First commit version whose (monotonic) timestamp is at or
@@ -5584,61 +5479,9 @@ class TransactionalLake:
                     f"retention (oldest retained commit: v{oldest})"
                 )
         # running schema history, seeded from the checkpoint below the
-        # oldest retained commit (r10: a clone/restore commit can add
-        # files from MIXED type eras after widen_column_type —
-        # mergeSchema cannot merge those, so reads go explicit once
-        # the history turns heterogeneous)
+        # oldest retained commit: each emission reads its files with
+        # the table schema as of its commit
         run_schemas: list[str] = []
-
-        def _read_paths(
-            paths: list[str],
-            keep_rt: bool = False,
-            schemas: list[str] | None = None,
-        ) -> DataFrame:
-            reader = self.spark.read.option("basePath", self.path)
-            struct = self._explicit_read_schema(
-                run_schemas if schemas is None else schemas
-            )
-            if struct is not None:
-                if keep_rt:
-                    from pyspark.sql.types import (
-                        LongType,
-                        StructField,
-                        StructType,
-                    )
-
-                    struct = StructType(
-                        struct.fields
-                        + [
-                            StructField(c, LongType(), True)
-                            for c in self._RT_COLS
-                        ]
-                    )
-                reader = reader.schema(struct)
-            else:
-                reader = reader.option("mergeSchema", "true")
-            df = reader.parquet(
-                *[os.path.join(self.path, f) for f in paths]
-            )
-            if not keep_rt:
-                return df.drop(*self._RT_COLS)
-            for c in self._RT_COLS:
-                if c not in df.columns:
-                    df = df.withColumn(c, F.lit(None).cast("long"))
-            return df
-
-        def _with_pos(
-            paths: list[str],
-            keep_rt: bool = False,
-            schemas: list[str] | None = None,
-        ) -> DataFrame:
-            df = _read_paths(paths, keep_rt=keep_rt, schemas=schemas)
-            fname = F.substring_index(
-                F.col("_metadata.file_path"), "/", -1
-            )
-            return df.withColumn("_row_file", fname).withColumn(
-                "_row_pos", F.col("_metadata.row_index")
-            )
 
         def _rt_ids(df: DataFrame, paths: list[str]) -> DataFrame:
             missing = [f for f in paths if f not in all_base]
@@ -5649,54 +5492,11 @@ class TransactionalLake:
                     "before row tracking was enabled; start the feed "
                     "at or after the enabling commit"
                 )
-            bdf = local_df(self.spark, 
-                [
-                    (
-                        os.path.basename(f),
-                        int(all_base[f][0]),
-                        int(all_base[f][1]),
-                    )
-                    for f in paths
-                ],
-                "_rtb_file string, _rtb_base bigint, _rtb_ver bigint",
-            )
-            out = df.join(
-                F.broadcast(bdf),
-                F.col("_row_file") == F.col("_rtb_file"),
-                "left",
-            )
             return (
-                out.withColumn(
-                    "_row_id",
-                    F.coalesce(
-                        F.col(self._RT_ID),
-                        F.col("_rtb_base") + F.col("_row_pos"),
-                    ),
-                )
-                .withColumn(
-                    "_row_commit_version",
-                    F.coalesce(F.col(self._RT_VER), F.col("_rtb_ver")),
-                )
-                .drop("_rtb_file", "_rtb_base", "_rtb_ver",
-                      *self._RT_COLS)
-            )
-
-        def _pair_df(dv: dict[str, list[int]]) -> DataFrame:
-            pairs = [
-                (os.path.basename(rel), int(p))
-                for rel, ps in dv.items()
-                for p in ps
-            ]
-            return local_df(self.spark, 
-                pairs, "_dv_file string, _dv_pos bigint"
-            )
-
-        def _pair_join(df: DataFrame, dv, how: str) -> DataFrame:
-            return df.join(
-                F.broadcast(_pair_df(dv)),
-                (F.col("_row_file") == F.col("_dv_file"))
-                & (F.col("_row_pos") == F.col("_dv_pos")),
-                how,
+                self._rt_attach(df, paths, {"base": all_base})
+                .withColumn("_row_id", F.col(self._RT_ID))
+                .withColumn("_row_commit_version", F.col(self._RT_VER))
+                .drop(*self._RT_COLS)
             )
 
         # running DV state (as of each commit's PREDECESSOR), so a
@@ -5769,23 +5569,19 @@ class TransactionalLake:
                     sch = (
                         pre_schemas
                         if change == "delete" and pre_schemas is not None
-                        else None
+                        else run_schemas
+                    )
+                    df = self._read_files(
+                        paths,
+                        sch,
+                        skip,
+                        positions=with_row_ids,
+                        keep_rt=with_row_ids,
                     )
                     if with_row_ids:
-                        df = _with_pos(paths, keep_rt=True, schemas=sch)
-                        if skip:
-                            df = _pair_join(df, skip, "left_anti")
                         df = _rt_ids(df, paths).drop(
                             "_row_file", "_row_pos"
                         )
-                    elif skip:
-                        df = _pair_join(
-                            _with_pos(paths, schemas=sch),
-                            skip,
-                            "left_anti",
-                        ).drop("_row_file", "_row_pos")
-                    else:
-                        df = _read_paths(paths, schemas=sch)
                     emit.append(
                         df.withColumn("_change_type", F.lit(change))
                         .withColumn("_commit_version", F.lit(v))
@@ -5794,8 +5590,13 @@ class TransactionalLake:
                     # positional delete: emit exactly this commit's
                     # newly-deleted rows (a clone's vectors carry
                     # state, not new deletions)
-                    dvp = _pair_join(
-                        _with_pos(list(c["dv"]), keep_rt=with_row_ids),
+                    dvp = self._dv_join(
+                        self._read_files(
+                            list(c["dv"]),
+                            run_schemas,
+                            positions=True,
+                            keep_rt=with_row_ids,
+                        ),
                         c["dv"],
                         "left_semi",
                     )
@@ -5825,9 +5626,12 @@ class TransactionalLake:
                 for dv_map, change in ((hidden, "delete"),
                                        (unhidden, "insert")):
                     if dv_map:
-                        rp = _pair_join(
-                            _with_pos(
-                                list(dv_map), keep_rt=with_row_ids
+                        rp = self._dv_join(
+                            self._read_files(
+                                list(dv_map),
+                                run_schemas,
+                                positions=True,
+                                keep_rt=with_row_ids,
                             ),
                             dv_map,
                             "left_semi",
@@ -5861,7 +5665,7 @@ class TransactionalLake:
             # crash on maintenance-only activity
             files, schemas, _v, _dvs = self._snapshot_state()
             base = self._to_logical(
-                self._df_for_files(files, schemas),
+                self._read_files(files, schemas),
                 self._column_mapping_doc(),
             )
             base = (
@@ -6442,43 +6246,28 @@ class TransactionalLake:
         if dv_reset:
             action["dv_reset"] = dv_reset
         if target_schemas:
-            # restart the schema history at the TARGET's full history
-            # (not a merged pin: the per-batch entries keep widening
-            # detection working — _explicit_read_schema needs to see
-            # the heterogeneous types to upcast narrow files). The
+            # restart the schema at the TARGET's merged schema. The
             # reset stops the rolled-back era's columns from being
             # resurrected by the merged union — but TYPE WIDENING is
             # a one-way door (the wide type is a safe superset and
             # post-widen files may physically carry it), so fields
-            # the rolled-back era widened keep the wide type via one
-            # extra widen-only entry.
-            hist = list(target_schemas)
-            tgt_fields = {
-                f["name"]: f
-                for f in self._merged_fields(target_schemas)
+            # the rolled-back era widened keep the wide type.
+            cur_types = {
+                f["name"]: f["type"] for f in self._merged_fields(_schemas)
             }
-            widened = []
-            for f in self._merged_fields(_schemas):
-                t = tgt_fields.get(f["name"])
-                if t is None or t["type"] == f["type"]:
-                    continue
-                a = (
-                    self._JSON_TO_SIMPLE.get(t["type"])
-                    if isinstance(t["type"], str)
-                    else None
-                )
-                b = (
-                    self._JSON_TO_SIMPLE.get(f["type"])
-                    if isinstance(f["type"], str)
-                    else None
+            fields = []
+            for t in self._merged_fields(target_schemas):
+                wide = cur_types.get(t["name"], t["type"])
+                a, b = (
+                    self._JSON_TO_SIMPLE.get(x) if isinstance(x, str) else None
+                    for x in (t["type"], wide)
                 )
                 if a and b and (a, b) in self._WIDENINGS:
-                    widened.append({**t, "type": f["type"]})
-            if widened:
-                hist.append(
-                    json.dumps({"type": "struct", "fields": widened})
-                )
-            action["schema_history"] = hist
+                    t = {**t, "type": wide}
+                fields.append(t)
+            action["schema"] = json.dumps(
+                {"type": "struct", "fields": fields}
+            )
             action["schema_reset"] = True
         # the column mapping rolls back WITH the file set: a restore
         # across a rename/drop must re-adopt the target's names. When
@@ -6623,12 +6412,6 @@ class TransactionalLake:
             action["schema"] = json.dumps(
                 {"type": "struct", "fields": self._merged_fields(schemas)}
             )
-            # a WIDENED source's files span type eras: one merged
-            # entry would read as homogeneous and the clone's
-            # mergeSchema read would die on the mixed files — carry
-            # the raw history so heterogeneity detection survives
-            if self._explicit_read_schema(schemas) is not None:
-                action["schema_history"] = list(schemas)
         if dvs:
             action["dv"] = {f: list(p) for f, p in dvs.items()}
         # table metadata rides the clone commit (Delta clones carry
@@ -7036,9 +6819,9 @@ class TransactionalLake:
     def add_column(self, name: str, dtype: str) -> int:
         """Metadata-only ADD COLUMN (Delta ``ALTER TABLE ... ADD
         COLUMNS`` parity): one log write, zero data touched — every
-        existing file null-fills the new column on read through the
-        same heterogeneous-file machinery append evolution uses, and
-        future writers may carry it without ``merge_schema``. Under
+        existing file null-fills the new column on read (the reader
+        reads every file with the log's table schema), and future
+        writers may carry it without ``merge_schema``. Under
         column mapping, a name that ever belonged to a DROPPED column
         binds a fresh physical slot, so the old bytes stay dead
         instead of resurrecting (Delta's field-id semantics).
@@ -7569,10 +7352,12 @@ class TransactionalLake:
         materialize-on-rewrite trade)."""
         if rt is None:
             return self._conform(
-                self._df_for_files(affected, schemas, dvs=dvs), schemas
+                self._read_files(affected, schemas, dvs=dvs), schemas
             )
         raw = self._rt_attach(
-            self._positional_scan(affected, schemas, dvs, with_rt=True),
+            self._read_files(
+                affected, schemas, dvs, positions=True, keep_rt=True
+            ),
             affected,
             rt,
         )
@@ -7852,7 +7637,7 @@ class TransactionalLake:
         files, schemas, v, dvs = self._snapshot_state()
         doc = self._column_mapping_doc()
         snap = self._to_logical(
-            self._df_for_files(files, schemas, dvs=dvs), doc
+            self._read_files(files, schemas, dvs=dvs), doc
         )
         cols = list(columns) if columns is not None else snap.columns
         unknown = [c for c in cols if c not in snap.columns]
@@ -8420,7 +8205,13 @@ class TransactionalLake:
         if new == self.partition_by:
             return self.version
         old, schemas, read_v, dvs = self._snapshot_state()
-        snap = self._df_for_files(old, schemas, dvs=dvs)
+        # cast back to the log's types: a column leaving the path
+        # would otherwise land in the files as its discovered type
+        # (a string date as DATE) that the log-schema reader can't
+        # read as the committed one
+        snap = self._conform(
+            self._read_files(old, schemas, dvs=dvs), schemas
+        )
         prev = self.partition_by
         self.partition_by = new
         # rollback covers the COMMIT too: if a concurrent writer wins

@@ -83,3 +83,31 @@ def test_txn_append_constraint_rides_write(spark, tmp_path):
     tx.append(df, skip_empty=True)
     used = _jobs_so_far(spark) - before
     assert used <= 3, f"append ran {used} jobs (validate/isEmpty resurrected?)"
+
+
+def test_log_schema_reads_run_no_jobs(spark, tmp_path):
+    """snapshot(), time travel and read_changes take the table schema
+    from the log, so building the DataFrame runs ZERO Spark jobs (no
+    footer-merge job). The lake stays under Spark's 32-path parallel
+    listing threshold, which would add a listing job of its own."""
+    from market_data_lakehouse_spark.txnlog import TransactionalLake
+
+    tx = TransactionalLake(spark, str(tmp_path / "tx"), partition_by=("date",))
+    for i in range(4):
+        tx.append(
+            spark.createDataFrame(
+                [("AAPL", 150.0 + i, f"2024-06-1{i}")],
+                "symbol string, price double, date string",
+            )
+        )
+    assert len(tx._snapshot_state()[0]) < 32
+    reads = {
+        "snapshot()": tx.snapshot,
+        "snapshot(version=1)": lambda: tx.snapshot(version=1),
+        "read_changes(0)": lambda: tx.read_changes(0),
+    }
+    for name, read in reads.items():
+        before = _jobs_so_far(spark)
+        read()
+        used = _jobs_so_far(spark) - before
+        assert used == 0, f"{name} ran {used} jobs before any action"

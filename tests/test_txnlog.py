@@ -761,6 +761,33 @@ class TestPartitioningContract:
         cdc = lake.read_changes(starting_version=v0 + 1)
         assert {r.symbol for r in cdc.collect()} == {"TSLA"}
 
+    def test_set_partitioning_off_date_keeps_log_types(self, spark, tmp_path):
+        """Moving ``date`` out of the path writes it back into the
+        files as the log's type (string), not the DATE that partition
+        discovery gave it — otherwise the files no longer match the
+        log and every read of ``date`` after the relayout fails."""
+        path = str(tmp_path / "p")
+        lake = TransactionalLake(spark, path, partition_by=("date",))
+        v0 = lake.append(_df(spark, [("AAPL", 150), ("MSFT", 300)]))
+        assert dict(lake.snapshot(version=v0).dtypes)["date"] == "date"
+        lake.set_partitioning(("symbol",))
+        snap = lake.snapshot()
+        assert dict(snap.dtypes)["date"] == "string"
+        assert sorted(tuple(r) for r in snap.select(
+            "symbol", "price", "date"
+        ).collect()) == [
+            ("AAPL", 150.0, "2024-06-15"),
+            ("MSFT", 300.0, "2024-06-15"),
+        ]
+        # pre-relayout time travel still reads the path-inferred type
+        assert dict(lake.snapshot(version=v0).dtypes)["date"] == "date"
+        # later writers and DML keep working on the relaid table
+        lake.append(_df(spark, [("TSLA", 900)], date="2024-06-16"))
+        lake.delete_where("date = '2024-06-15' AND symbol = 'MSFT'")
+        assert sorted(
+            (r.symbol, r.date) for r in lake.snapshot().collect()
+        ) == [("AAPL", "2024-06-15"), ("TSLA", "2024-06-16")]
+
     def test_set_partitioning_unknown_column(self, spark, lake):
         lake.append(_df(spark, [("AAPL", 150)]))
         with pytest.raises(ValueError, match="unknown partition"):
@@ -1825,6 +1852,24 @@ class TestMergedSchemaHistory:
         got = sorted(r.id for r in lake.snapshot().collect())
         assert got == [1, 2], got
 
+    def test_pruned_read_keeps_snapshot_column_order(self, spark, tmp_path):
+        """A stats-pruned read that keeps only pre-evolution files
+        still returns the table's columns in snapshot() order: data
+        columns in log order, then partition columns."""
+        lake = TransactionalLake(
+            spark, str(tmp_path / "ms8"), partition_by=("date",))
+        lake.append(spark.createDataFrame(
+            [("A", 0, "2024-06-15")], "sym string, v int, date string"))
+        lake.append(spark.createDataFrame(
+            [("B", 5, "2024-06-16", 9)],
+            "sym string, v int, date string, x int"),
+            merge_schema=True)
+        kept = lake._pruned_state({"v": (0, 1)}, None)[0]
+        assert len(kept) == 1  # only the pre-evolution file
+        pruned = lake.scan_between({"v": (0, 1)})
+        assert pruned.dtypes == lake.snapshot().dtypes
+        assert [(r.sym, r.x) for r in pruned.collect()] == [("A", None)]
+
 
 class TestColumnMappingInteractions:
     """Renames against the columns other table machinery binds to:
@@ -2082,6 +2127,34 @@ class TestTypeWidening:
         assert dict(snap.dtypes)["v"] == "bigint"
         assert sorted((r.id, r.v) for r in snap.collect()) == [
             (1, 10), (2, 20)]
+
+    def test_widen_keeps_partition_column_type(self, spark, tmp_path):
+        """Widening a data column leaves a partition column's type
+        alone: partition columns take their type from the path on
+        every read surface, so a date partition stays DATE."""
+        lake = TransactionalLake(
+            spark, str(tmp_path / "twp"), partition_by=("date",))
+        lake.append(spark.createDataFrame(
+            [(1, 10, "2024-06-15"), (2, 20, "2024-06-16")],
+            "id bigint, v int, date string"))
+        v0 = lake.version
+        lake.widen_column_type("v", "bigint")
+        lake.append(spark.createDataFrame(
+            [(3, 2**40, "2024-06-16")], "id bigint, v bigint, date string"))
+        reads = {
+            "snapshot": lake.snapshot(),
+            "time travel": lake.snapshot(version=v0),
+            "scan_between": lake.scan_between({"v": (0, 2**41)}),
+            "read_changes": lake.read_changes(0).filter(
+                "_change_type = 'insert'"),
+        }
+        for name, df in reads.items():
+            assert dict(df.dtypes)["date"] == "date", (name, df.dtypes)
+        snap = reads["snapshot"]
+        assert dict(snap.dtypes)["v"] == "bigint"
+        assert sorted((r.id, r.v, str(r.date)) for r in snap.collect()) == [
+            (1, 10, "2024-06-15"), (2, 20, "2024-06-16"),
+            (3, 2**40, "2024-06-16")]
 
 
 class TestRowTracking:

@@ -287,7 +287,7 @@ def iterative_graph_structure(spark, sf_dir: str) -> dict:
 
 def dv_dml_probe(spark, sf_dir: str) -> dict:
     """r10 (VERDICT r9 directive 6): two-point scale evidence for the
-    merge-on-read DML path (``_positional_scan`` + dv commit). Each
+    merge-on-read DML path (``_read_files`` + dv commit). Each
     verb gets a FRESH flat lake built from events (build excluded
     from timing): dv DELETE with matched rows growing with the table,
     dv DELETE with a FIXED matched set, dv UPDATE, dv MERGE, plus the
