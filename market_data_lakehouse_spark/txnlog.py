@@ -957,89 +957,158 @@ class TransactionalLake:
             idx.update(c.get("blooms", {}))
         return idx
 
-    @classmethod
-    def _bound_cmp(cls, a, b) -> int | None:
-        """Three-way compare of a logged stat / partition value
-        against a declared-read-bound value, for the scoped-rebase
-        PROOF — None means "cannot prove", and every caller must
-        treat that as may-match (conflict), never as disjoint.
-        Numeric pairs compare numerically; string pairs go through
-        ``_dml_cmp``'s quoted-string care (ISO 'T'->' ' + date->
-        midnight normalization on BOTH sides, timezone refusal,
-        proper-prefix refusal, numeric/lexical agreement); mixed
-        numeric/string pairs are unprovable. r13 (ADVICE): the old
-        raw ``<``/``>`` compare would lexically "prove" a matching
-        concurrent append disjoint when the bound and the stat
-        spelled the same instant differently (' ' vs 'T') — the
-        silent lost-delete class."""
-        num = (int, float)
-        if (
-            isinstance(a, num) and not isinstance(a, bool)
-            and isinstance(b, num) and not isinstance(b, bool)
-        ):
-            return (a > b) - (a < b)
-        if isinstance(a, str) and isinstance(b, str):
-            return cls._dml_cmp(a, "'" + b + "'")
-        return None
+    _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
     @classmethod
-    def _pv_bound_cmp(cls, v: str, b) -> int | None:
-        """_bound_cmp for a PARTITION-DIR value: per-file constants
-        are untyped strings, so a numeric bound may safely compare
-        numerically when the value parses (the pointwise rule
-        _dml_cmp applies on the DML side)."""
-        if isinstance(b, str):
-            return cls._bound_cmp(v, b)
-        try:
-            fv = float(v)
-        except (TypeError, ValueError):
+    def _bound_cmp(cls, stat, bound, *, pointwise: bool = False) -> int | None:
+        """THE stats comparator: three-way compare of a logged stat or
+        partition value against a bound VALUE (a quoted SQL literal is
+        a ``str``, an unquoted one an ``int``/``float``). Every file
+        skip — reads, DML, MERGE, the concurrent-append proof — is
+        decided here, and None means "cannot prove": the caller keeps
+        the file. The column's true type is not visible to the log,
+        so a verdict counts only when every reading the column could
+        have gives it:
+
+        - numeric stat: numeric compare iff the bound parses as a
+          number (Spark casts the literal to the column's type).
+        - string stat vs numeric bound: Spark compares per row as
+          numbers, but a string column's logged min/max are LEXICAL
+          endpoints that do not bound the numeric values (file
+          {'10', '5', '9'} logs ['10', '9']). Only a per-file
+          constant (``pointwise``: a partition value, or a stat with
+          min == max) compares numerically.
+        - two numeric-looking strings: the lexical and the numeric
+          order must agree (a partition value is an untyped string
+          Spark may read as a number).
+        - ISO temporal strings: both sides must be ISO and carry no
+          timezone suffix. The RAW lexical order (a string column),
+          the order after 'T' -> ' ' with a date-only side read as
+          midnight (a timestamp column), and — for a date-only stat
+          against a bound with a time part — the order against the
+          bound truncated to its date (a DATE column: Spark casts the
+          bound to a date) must all agree. A proper-prefix pair after
+          normalization (sub-second width, an exact time boundary)
+          refuses.
+        - any other string pair compares lexically; anything else
+          (bool, None, NaN, mixed types) is unprovable."""
+        num = (int, float)
+        if isinstance(stat, bool) or isinstance(bound, bool):
             return None
-        if isinstance(b, (int, float)) and not isinstance(b, bool):
-            return (fv > b) - (fv < b)
-        return None
+        if isinstance(stat, num) or (
+            pointwise and isinstance(stat, str) and isinstance(bound, num)
+        ):
+            try:
+                x = stat if isinstance(stat, num) else float(stat)
+                y = bound if isinstance(bound, num) else float(bound)
+            except (TypeError, ValueError):
+                return None
+            if x != x or y != y:
+                return None  # NaN is unordered
+            return (x > y) - (x < y)
+        if not (isinstance(stat, str) and isinstance(bound, str)):
+            return None
+        raw = (stat > bound) - (stat < bound)
+        iso = cls._ISO_PREFIX_RE.match
+        if iso(stat) or iso(bound):
+            if not (iso(stat) and iso(bound)):
+                return None
+            tz = cls._TZ_SUFFIX_RE.search
+            if tz(stat[10:]) or tz(bound[10:]):
+                return None
+            a, b = stat.replace("T", " "), bound.replace("T", " ")
+            a += " 00:00:00" if len(a) == 10 else ""
+            b += " 00:00:00" if len(b) == 10 else ""
+            if a != b and (a.startswith(b) or b.startswith(a)):
+                return None
+            readings = {raw, (a > b) - (a < b)}
+            if len(stat) == 10 and len(bound) > 10:
+                d = bound[:10]
+                readings.add((stat > d) - (stat < d))
+            return raw if len(readings) == 1 else None
+        try:
+            fa, fb = float(stat), float(bound)
+        except ValueError:
+            return raw
+        return raw if raw == (fa > fb) - (fa < fb) else None
+
+    @classmethod
+    def _partition_values(cls, rel: str) -> dict[str, str | None]:
+        """The decoded ``key=value`` directory segments of a data
+        file's relative path (the writer percent-encodes special
+        characters); the hive NULL sentinel maps to None."""
+        out: dict[str, str | None] = {}
+        for seg in rel.split("/")[:-1]:
+            if "=" in seg:
+                k, _, raw = seg.partition("=")
+                v = unquote(raw)
+                out[unquote(k)] = None if v == cls._HIVE_NULL else v
+        return out
+
+    @staticmethod
+    def _bound_constraints(
+        bounds: dict[str, tuple]
+    ) -> list[tuple[str, str, object]]:
+        """CLOSED ``{col: (lo, hi)}`` bounds (None = unbounded side)
+        as ``(col, op, value)`` constraints."""
+        out: list[tuple[str, str, object]] = []
+        for col, (lo, hi) in bounds.items():
+            if lo is not None:
+                out.append((col, ">=", lo))
+            if hi is not None:
+                out.append((col, "<=", hi))
+        return out
+
+    @classmethod
+    def _file_may_match(
+        cls,
+        rel: str,
+        stats: dict | None,
+        constraints: list[tuple[str, str, object]],
+    ) -> bool:
+        """The one file-skipping check: False only when some
+        ``(col, op, value)`` constraint (op one of ``= < <= > >=``)
+        PROVABLY matches none of the file's rows — by its partition
+        value (a per-file constant; the hive NULL partition never
+        satisfies a comparison) or by its logged ``[min, max]``.
+        Every compare goes through :meth:`_bound_cmp`; an unprovable
+        one, a statless column or a missing partition segment keeps
+        the file. Sound for any subset of a conjunction's conjuncts:
+        a row matching the whole AND matches each of them."""
+        parts = cls._partition_values(rel)
+        for col, op, val in constraints:
+            if col in parts:
+                if parts[col] is None:
+                    return False
+                lo = hi = parts[col]
+                pointwise = True
+            else:
+                st = (stats or {}).get(col)
+                if not st:
+                    continue
+                lo, hi = st[0], st[1]
+                pointwise = lo == hi
+            if op in ("=", "<", "<="):
+                c = cls._bound_cmp(lo, val, pointwise=pointwise)
+                if c is not None and (c > 0 or (c == 0 and op == "<")):
+                    return False
+            if op in ("=", ">", ">="):
+                c = cls._bound_cmp(hi, val, pointwise=pointwise)
+                if c is not None and (c < 0 or (c == 0 and op == ">")):
+                    return False
+        return True
 
     def _added_file_may_match(
         self, rel: str, stats: dict | None, bounds: dict[str, tuple]
     ) -> bool:
         """True unless the file's partition path or logged min/max
-        stats PROVE no row can fall inside ``bounds`` — the same
-        conservative logic as read-side pruning, applied to a
-        concurrent writer's added file. Every comparison goes
-        through the typed ``_bound_cmp`` proof: an unprovable pair
-        keeps the file (conflict), it never fakes disjointness."""
-        for col, (lo, hi) in bounds.items():
-            if col in self.partition_by:
-                for seg in rel.split(os.sep)[:-1]:
-                    if seg.startswith(f"{col}="):
-                        v = unquote(seg[len(col) + 1:])
-                        cl = (
-                            self._pv_bound_cmp(v, lo)
-                            if lo is not None
-                            else None
-                        )
-                        if cl is not None and cl < 0:
-                            return False
-                        ch = (
-                            self._pv_bound_cmp(v, hi)
-                            if hi is not None
-                            else None
-                        )
-                        if ch is not None and ch > 0:
-                            return False
-                        break
-        for col, (lo, hi) in bounds.items():
-            st = (stats or {}).get(col)
-            if st is None:
-                continue
-            if lo is not None:
-                c = self._bound_cmp(st[1], lo)
-                if c is not None and c < 0:
-                    return False
-            if hi is not None:
-                c = self._bound_cmp(st[0], hi)
-                if c is not None and c > 0:
-                    return False
-        return True
+        stats PROVE no row can fall inside ``bounds`` — the read-side
+        file check, applied to a concurrent writer's added file: an
+        unprovable pair keeps the file (conflict), it never fakes
+        disjointness."""
+        return self._file_may_match(
+            rel, stats, self._bound_constraints(bounds)
+        )
 
     @staticmethod
     def _predicate_columns(predicate: str, table_cols: set[str]) -> set[str]:
@@ -1423,11 +1492,12 @@ class TransactionalLake:
     ) -> tuple[list[str], int, list[str], dict[str, list[int]]]:
         """Stats-based file skipping: ``bounds`` maps column ->
         (lo, hi) CLOSED interval (either side None = unbounded). A
-        file is skipped only when its logged [min, max] provably
-        cannot intersect; files without stats for a bounded column
-        are kept (unknown never skips). Temporal bounds are passed as
-        the same ISO strings the stats store. Returns
-        (kept_files, total_live_files, schemas).
+        file is skipped only when its partition values or logged
+        [min, max] provably cannot intersect (:meth:`_file_may_match`,
+        every compare through :meth:`_bound_cmp`); files without
+        stats for a bounded column are kept (unknown never skips).
+        Temporal bounds are passed as ISO strings. Returns
+        (kept_files, total_live_files, schemas, deletion_vectors).
 
         ``equals`` maps column -> exact value (a point lookup). Each
         equality is first folded into ``bounds`` as the degenerate
@@ -1437,15 +1507,7 @@ class TransactionalLake:
         unset) skips the file even when [min, max] straddles the key,
         which is exactly the high-cardinality-unsorted case min/max
         cannot help with. Bloom false positives only KEEP files —
-        never a wrong skip.
-
-        PARTITION columns are not in parquet footers (they live in
-        the directory name), so bounds on them prune by the
-        hive-encoded path value instead — each partition dir holds
-        exactly one value, making the "range" a point comparison.
-        String comparison is correct for ISO dates and strings;
-        values that parse as numbers compare numerically (a string
-        compare would put "9" after "10")."""
+        never a wrong skip."""
         equals = equals or {}
         bounds = {
             **bounds,
@@ -1454,6 +1516,7 @@ class TransactionalLake:
         derived = self._derived_partition_bounds(bounds)
         if derived:
             bounds = {**derived, **bounds}
+        cons = self._bound_constraints(bounds)
         files, schemas, _v, dvs = self._snapshot_state()
         idx = self._stats_index()
         bloom_idx = self._blooms_index() if equals else {}
@@ -1462,52 +1525,10 @@ class TransactionalLake:
             for c, v in equals.items()
             if (h := _bloom_hashes(v)) is not None
         }
-        part_bounds = {
-            c: b for c, b in bounds.items() if c in self.partition_by
-        }
-
-        def _part_val(rel: str, col: str):
-            for seg in rel.split(os.sep)[:-1]:
-                if seg.startswith(f"{col}="):
-                    return unquote(seg[len(col) + 1 :])
-            return None
-
-        def _cmp_ok(v: str, lo, hi) -> bool:
-            try:
-                fv = float(v)
-                flo = float(lo) if lo is not None else None
-                fhi = float(hi) if hi is not None else None
-                return (flo is None or fv >= flo) and (
-                    fhi is None or fv <= fhi
-                )
-            except (TypeError, ValueError):
-                pass
-            try:
-                return (lo is None or v >= str(lo)) and (
-                    hi is None or v <= str(hi)
-                )
-            except TypeError:
-                return True  # incomparable: conservative keep
 
         def may_match(rel: str) -> bool:
-            for col, (lo, hi) in part_bounds.items():
-                v = _part_val(rel, col)
-                if v is not None and not _cmp_ok(v, lo, hi):
-                    return False
-            st = idx.get(rel)
-            if not st:
-                return True
-            for col, (lo, hi) in bounds.items():
-                s = st.get(col)
-                if s is None:
-                    continue
-                try:
-                    if lo is not None and s[1] < lo:
-                        return False
-                    if hi is not None and s[0] > hi:
-                        return False
-                except TypeError:
-                    continue  # incomparable bound: conservative keep
+            if not self._file_may_match(rel, idx.get(rel), cons):
+                return False
             bl = bloom_idx.get(rel)
             if bl:
                 for col, hashes in probes.items():
@@ -2941,7 +2962,6 @@ class TransactionalLake:
         )
         return self._rel_paths(list(row["fs"] or []))
 
-    _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
     _PD_CMP = re.compile(
         r"^\s*`?(?P<col>\w+)`?\s*(?P<op>==|=|<=|>=|<|>)\s*"
         r"(?P<val>'[^']*'|-?\d+(?:\.\d+)?)\s*$"
@@ -2954,15 +2974,18 @@ class TransactionalLake:
     _PD_LIT = re.compile(r"^\s*(?P<hi>'[^']*'|-?\d+(?:\.\d+)?)\s*$")
 
     def _predicate_constraints(
-        self, predicate: str
+        self, predicate: str, *, partial: bool = False
     ) -> list[tuple[str, str, str]] | None:
-        """FULL parse of a (physical-name) predicate into a
-        conjunction of simple comparisons ``[(col, op, literal),
-        ...]``: ``=``, ``<``, ``<=``, ``>``, ``>=``, ``BETWEEN``,
-        joined by top-level AND. Returns None for anything else (OR,
-        parens, functions, IN, IS NULL, !=, any unparseable
-        conjunct) — callers that can tolerate a PARTIAL parse
-        (_dml_prune) do their own lenient pass."""
+        """Parse a (physical-name) predicate into a conjunction of
+        simple comparisons ``[(col, op, literal token), ...]``: ``=``,
+        ``<``, ``<=``, ``>``, ``>=``, ``BETWEEN``, joined by top-level
+        AND (``_literal`` turns a token into the value the comparator
+        takes). Returns None for OR, parens, functions, IN, IS NULL,
+        != anywhere. An unparseable conjunct returns None too, unless
+        ``partial`` — then it is left out, which file pruning can
+        afford (pruning on any subset of the conjuncts is sound) and
+        a proof (a metadata-only delete, a derived read scope)
+        cannot."""
         if re.search(r"[()]|\bOR\b|\bNOT\b|\bIN\b|\bIS\b|!=|<>",
                      predicate, re.IGNORECASE):
             return None
@@ -2970,31 +2993,37 @@ class TransactionalLake:
         out: list[tuple[str, str, str]] = []
         i = 0
         while i < len(parts):
-            piece = parts[i]
-            mb = self._PD_BETWEEN_HEAD.match(piece)
-            if mb:
-                # the split ate BETWEEN's own AND: the next piece is
-                # the upper literal
-                if i + 1 >= len(parts):
-                    return None
-                mh = self._PD_LIT.match(parts[i + 1])
-                if not mh:
-                    return None
+            # the split ate BETWEEN's own AND: the next piece is the
+            # upper literal
+            mb = self._PD_BETWEEN_HEAD.match(parts[i])
+            mh = mb and i + 1 < len(parts) and self._PD_LIT.match(
+                parts[i + 1]
+            )
+            if mh:
                 col = mb.group("col")
                 out.append((col, ">=", mb.group("lo")))
                 out.append((col, "<=", mh.group("hi")))
                 i += 2
                 continue
-            mc = self._PD_CMP.match(piece)
-            if not mc:
+            mc = self._PD_CMP.match(parts[i])
+            if mc:
+                out.append(
+                    (mc.group("col"),
+                     "=" if mc.group("op") == "==" else mc.group("op"),
+                     mc.group("val"))
+                )
+            elif not partial:
                 return None
-            out.append(
-                (mc.group("col"),
-                 "=" if mc.group("op") == "==" else mc.group("op"),
-                 mc.group("val"))
-            )
             i += 1
         return out or None
+
+    @staticmethod
+    def _literal(tok: str) -> object:
+        """A parsed literal token as a value: quoted -> ``str``,
+        unquoted -> ``int`` or ``float``."""
+        if tok.startswith("'"):
+            return tok[1:-1]
+        return int(tok) if re.fullmatch(r"-?\d+", tok) else float(tok)
 
     def _predicate_partition_constraints(
         self, predicate: str
@@ -3031,175 +3060,30 @@ class TransactionalLake:
             return None
         return self._derive_read_bounds(cons)
 
-    @classmethod
-    def _dml_cmp(cls, stat, lit: str, pointwise: bool = False) -> int | None:
-        """Three-way compare of a logged stat (or partition-dir
-        string) against a SQL predicate literal token, returning None
-        whenever the verdict could depend on a typing choice we
-        cannot see — a wrong answer here silently deletes or skips
-        the wrong rows, so every ambiguity is "cannot prove":
-
-        - numeric stat: compare as numbers iff the literal parses.
-        - string stat + UNQUOTED literal: Spark casts the column to
-          double and compares NUMERICALLY per row — but the logged
-          min/max are the LEXICAL endpoints of the strings, which do
-          not bound the numeric values (file {'10','5','9'} logs
-          ['10','9']; 10 > 5 would "prove" code=5 can't match while
-          row '5' does). Only a per-file-CONSTANT value — a
-          partition-dir segment, or a degenerate stat with min==max
-          (``pointwise``) — is safely float-compared; a true range
-          endpoint returns None (ADVICE r12: this was a silent
-          lost-delete).
-        - string stat + QUOTED literal: lexical compare — except
-          (a) when BOTH parse as numbers and the numeric and lexical
-          orders DISAGREE, the column's true type decides and we
-          don't know it (partition-dir values are untyped strings);
-          (b) ISO temporal strings normalize 'T'->' ' and date-only
-          to midnight first, refuse timezone suffixes, and refuse a
-          proper-prefix relationship (an exact time boundary Spark
-          resolves by timestamp equality, not lexical order)."""
-        quoted = lit.startswith("'")
-        s = lit[1:-1] if quoted else lit
-        if isinstance(stat, (int, float)) and not isinstance(stat, bool):
-            try:
-                f = float(s)
-            except (TypeError, ValueError):
-                return None
-            return (stat > f) - (stat < f)
-        if not isinstance(stat, str):
-            return None
-        if not quoted:
-            if not pointwise:
-                return None  # lexical endpoint ≠ numeric bound
-            try:
-                fs, f = float(stat), float(s)
-            except (TypeError, ValueError):
-                return None
-            return (fs > f) - (fs < f)
-        a, b = stat, s
-        if cls._ISO_PREFIX_RE.match(a) or cls._ISO_PREFIX_RE.match(b):
-            if not (
-                cls._ISO_PREFIX_RE.match(a) and cls._ISO_PREFIX_RE.match(b)
-            ):
-                return None
-            if cls._TZ_SUFFIX_RE.search(a[10:]) or cls._TZ_SUFFIX_RE.search(
-                b[10:]
-            ):
-                return None
-            a, b = a.replace("T", " "), b.replace("T", " ")
-            if len(a) == 10:
-                a += " 00:00:00"
-            if len(b) == 10:
-                b += " 00:00:00"
-            if a != b and (a.startswith(b) or b.startswith(a)):
-                return None  # sub-second/width boundary: can't prove
-            norm = (a > b) - (a < b)
-            if (a, b) != (stat, s):
-                # review find r13: the column's true type is unknown
-                # — a STRING column compares the RAW spellings
-                # lexically (' ' < 'T'), a temporal column compares
-                # the normalized instants. When normalization
-                # changed either side, the verdict is provable only
-                # if BOTH orders agree (the same rule the
-                # numeric/lexical branch below applies).
-                raw = (stat > s) - (stat < s)
-                if raw != norm:
-                    return None
-            return norm
-        lex = (a > b) - (a < b)
-        try:
-            fa, fb = float(a), float(b)
-        except (TypeError, ValueError):
-            return lex
-        num = (fa > fb) - (fa < fb)
-        return lex if lex == num else None
-
     def _dml_prune(
         self, files: list[str], predicate: str
     ) -> list[str]:
         """DATA-SKIPPING DML (r12, Delta parity): shrink a DML
         operation's candidate file list with the LOGGED per-file
-        stats and partition values before any scan. A file is dropped
-        only when some parsed conjunct PROVABLY matches none of its
-        rows (its [min, max] cannot intersect, or its partition value
-        fails, or its partition is the hive NULL sentinel — NULL
-        never matches a comparison); everything else — unparseable
-        conjuncts, OR/NOT/parens, statless columns, mixed-type
-        compares — keeps the file. Sound by construction: a row
-        matching the whole AND matches every conjunct, so pruning on
-        any subset of conjuncts can only drop provably-unmatchable
-        files. On a 100 TB table this is what turns `DELETE WHERE ts
-        BETWEEN ...` from a full-table scan into a scan of the
-        matching files — the same skipping reads already get, now on
-        the write path."""
-        if re.search(r"[()]|\bOR\b|\bNOT\b|\bIN\b|\bIS\b|!=|<>",
-                     predicate, re.IGNORECASE):
-            return files
-        cons: list[tuple[str, str, str]] = []
-        parts = re.split(r"\s+AND\s+", predicate, flags=re.IGNORECASE)
-        i = 0
-        while i < len(parts):
-            mb = self._PD_BETWEEN_HEAD.match(parts[i])
-            if mb and i + 1 < len(parts):
-                mh = self._PD_LIT.match(parts[i + 1])
-                if mh:
-                    cons.append((mb.group("col"), ">=", mb.group("lo")))
-                    cons.append((mb.group("col"), "<=", mh.group("hi")))
-                    i += 2
-                    continue
-            mc = self._PD_CMP.match(parts[i])
-            if mc:
-                cons.append(
-                    (mc.group("col"),
-                     "=" if mc.group("op") == "==" else mc.group("op"),
-                     mc.group("val"))
-                )
-            i += 1  # unparseable conjunct: others still prune
+        stats and partition values before any scan. The predicate's
+        conjuncts come from a partial parse (an unparseable one simply
+        prunes nothing) and each file goes through
+        :meth:`_file_may_match`, so a file is dropped only when some
+        conjunct PROVABLY matches none of its rows; OR/NOT/parens,
+        statless columns and unprovable compares keep it. On a 100 TB
+        table this is what turns `DELETE WHERE ts BETWEEN ...` from a
+        full-table scan into a scan of the matching files — the same
+        skipping reads already get, now on the write path."""
+        cons = self._predicate_constraints(predicate, partial=True)
         if not cons:
             return files
+        cons = [(col, op, self._literal(lit)) for col, op, lit in cons]
         idx = self._stats_index()
-        pcols = set(self.partition_by)
+        return [f for f in files if self._file_may_match(f, idx.get(f), cons)]
 
-        def keep(rel: str) -> bool:
-            vals: dict[str, str] = {}
-            for seg in rel.split(os.sep)[:-1]:
-                if "=" in seg:
-                    k, _, raw = seg.partition("=")
-                    vals[k] = unquote(raw)
-            st = idx.get(rel, {})
-            for col, op, lit in cons:
-                if col in pcols:
-                    v = vals.get(col)
-                    if v == self._HIVE_NULL:
-                        return False  # NULL never matches — certain
-                    if v is None:
-                        continue  # layout surprise: keep
-                    lo_hi = (v, v)
-                else:
-                    s = st.get(col)
-                    if not s:
-                        continue  # statless: keep
-                    lo_hi = (s[0], s[1])
-                pw = lo_hi[0] == lo_hi[1]
-                clo = self._dml_cmp(lo_hi[0], lit, pointwise=pw)
-                chi = self._dml_cmp(lo_hi[1], lit, pointwise=pw)
-                if clo is None or chi is None:
-                    continue  # incomparable: keep
-                if (
-                    (op == "=" and (chi < 0 or clo > 0))
-                    or (op == "<" and clo >= 0)
-                    or (op == "<=" and clo > 0)
-                    or (op == ">" and chi <= 0)
-                    or (op == ">=" and chi < 0)
-                ):
-                    return False
-            return True
-
-        return [f for f in files if keep(f)]
-
-    @staticmethod
+    @classmethod
     def _derive_read_bounds(
-        cons: list[tuple[str, str, str]]
+        cls, cons: list[tuple[str, str, str]]
     ) -> dict[str, tuple] | None:
         """Turn parsed predicate constraints into a ``prune_files``
         bounds dict, or None when any piece is ambiguous (typing, a
@@ -3208,35 +3092,26 @@ class TransactionalLake:
         never a missed one."""
         rb: dict[str, list] = {}
         for col, op, lit in cons:
-            quoted = lit.startswith("'")
-            s = lit[1:-1] if quoted else lit
-            if quoted:
-                if TransactionalLake._ISO_PREFIX_RE.match(s):
-                    # ADVICE r12 + r13: temporal literals DO derive
-                    # bounds — "delete yesterday" is the workload
-                    # scoped rebase exists for — and they derive RAW
-                    # (review find r13: normalizing here was itself
-                    # unsound — a STRING column compares the user's
-                    # original spelling lexically, so a 'T'->' '
-                    # rewrite of the bound changed which rows it
-                    # covers under that interpretation). Soundness
-                    # lives entirely in _bound_cmp: a proof requires
-                    # the RAW-lexical and NORMALIZED orders to agree,
-                    # which covers both the string and the temporal
-                    # reading of the column; disagreement = conflict.
-                    # Timezone suffixes still refuse (session-tz
-                    # resolution is invisible to the log).
-                    if TransactionalLake._TZ_SUFFIX_RE.search(s[10:]):
+            val = cls._literal(lit)
+            if isinstance(val, str):
+                if cls._ISO_PREFIX_RE.match(val):
+                    # temporal literals DO derive bounds — "delete
+                    # yesterday" is the workload scoped rebase exists
+                    # for — and they derive RAW: a STRING column
+                    # compares the user's own spelling lexically, so
+                    # normalizing the bound would change which rows it
+                    # covers. Soundness lives in _bound_cmp, which
+                    # proves only when every reading of the column
+                    # agrees. Timezone suffixes still refuse
+                    # (session-tz resolution is invisible to the log).
+                    if cls._TZ_SUFFIX_RE.search(val[10:]):
                         return None
-                    val: object = s
                 else:
                     try:
-                        float(s)
+                        float(val)
                         return None  # numeric-looking string: ambiguous
-                    except (TypeError, ValueError):
-                        val = s
-            else:
-                val = int(s) if re.fullmatch(r"-?\d+", s) else float(s)
+                    except ValueError:
+                        pass
             lo, hi = rb.get(col, [None, None])
             if op == "=":
                 if lo is not None or hi is not None:
@@ -3257,70 +3132,22 @@ class TransactionalLake:
     ) -> list[str]:
         """MERGE's data skipping: drop files whose logged stats (or
         partition values) provably exclude a join key's whole
-        [min, max] envelope. Range values come from the SOURCE's own
-        columns — already cast to the target's committed types — so
-        unlike predicate literals there is no typing ambiguity:
-        same-type compares apply natively, anything else keeps the
-        file. NULL-keyed target rows never equi-match, so the
-        stats' null-blindness cannot cause a wrong skip."""
-        norm: dict[str, tuple] = {}
+        [min, max] envelope (:meth:`_file_may_match`). Range values
+        come from the SOURCE's own columns, already cast to the
+        target's committed types. NULL-keyed target rows never
+        equi-match, so the stats' null-blindness cannot cause a wrong
+        skip."""
+        bounds = {}
         for c, (lo, hi) in ranges.items():
             lo, hi = self._stat_val(lo), self._stat_val(hi)
             if lo is None or hi is None:
                 continue  # all-NULL source key column: prunes nothing
-            norm[c] = (lo, hi)
-        if not norm:
+            bounds[c] = (lo, hi)
+        if not bounds:
             return files
+        cons = self._bound_constraints(bounds)
         idx = self._stats_index()
-        pcols = set(self.partition_by)
-
-        def _cmp(a, b):
-            num = (int, float)
-            if isinstance(a, str) and isinstance(b, str):
-                return (a > b) - (a < b)
-            if (
-                isinstance(a, num) and not isinstance(a, bool)
-                and isinstance(b, num) and not isinstance(b, bool)
-            ):
-                return (a > b) - (a < b)
-            return None
-
-        def keep(rel: str) -> bool:
-            vals: dict[str, str] = {}
-            for seg in rel.split(os.sep)[:-1]:
-                if "=" in seg:
-                    k, _, raw = seg.partition("=")
-                    vals[k] = unquote(raw)
-            st = idx.get(rel, {})
-            for c, (lo, hi) in norm.items():
-                if c in pcols:
-                    v = vals.get(c)
-                    if v == self._HIVE_NULL:
-                        return False  # NULL partition never matches
-                    if v is None:
-                        continue
-                    if isinstance(lo, str):
-                        fmin: object = v
-                        fmax: object = v
-                    else:
-                        try:
-                            fmin = fmax = float(v)
-                        except (TypeError, ValueError):
-                            continue
-                else:
-                    s = st.get(c)
-                    if not s:
-                        continue
-                    fmin, fmax = s[0], s[1]
-                cl = _cmp(fmax, lo)
-                ch = _cmp(fmin, hi)
-                if cl is None or ch is None:
-                    continue
-                if cl < 0 or ch > 0:
-                    return False  # file range disjoint from envelope
-            return True
-
-        return [f for f in files if keep(f)]
+        return [f for f in files if self._file_may_match(f, idx.get(f), cons)]
 
     def _try_partition_delete(
         self,
@@ -3336,30 +3163,26 @@ class TransactionalLake:
         never match (SQL: NULL comparisons are unknown, DELETE keeps
         the row). Returns None — falling back to the scan path — if
         the predicate doesn't parse or any file's status can't be
-        PROVEN (missing segment, mixed-type compare)."""
+        PROVEN (missing segment, unprovable compare)."""
         cons = self._predicate_partition_constraints(predicate)
         if cons is None:
             return None
+        cons = [(col, op, self._literal(lit)) for col, op, lit in cons]
         old, schemas, read_v, _dvs = self._snapshot_state()
         self._check_read_bounds(predicate, read_bounds, schemas)
         to_remove: list[str] = []
         for rel in old:
-            vals: dict[str, str] = {}
-            for seg in rel.split(os.sep)[:-1]:
-                if "=" in seg:
-                    k, _, raw = seg.partition("=")
-                    vals[k] = unquote(raw)
+            vals = self._partition_values(rel)
             match = True
-            for col, op, lit in cons:
-                v = vals.get(col)
-                if v is None:
+            for col, op, val in cons:
+                if col not in vals:
                     return None  # layout surprise: prove nothing
-                if v == self._HIVE_NULL:
+                if vals[col] is None:
                     match = False  # NULL never matches — certain
                     break
-                c = self._dml_cmp(v, lit, pointwise=True)
+                c = self._bound_cmp(vals[col], val, pointwise=True)
                 if c is None:
-                    return None  # mixed-type compare: scan path
+                    return None  # unprovable compare: scan path
                 ok = {
                     "=": c == 0, "<": c < 0, "<=": c <= 0,
                     ">": c > 0, ">=": c >= 0,
@@ -5314,12 +5137,7 @@ class TransactionalLake:
                 [],
                 StructType.fromJson({"type": "struct", "fields": fields}),
             )
-        part = {
-            unquote(seg.split("=", 1)[0])
-            for f in files
-            for seg in f.split("/")[:-1]
-            if "=" in seg
-        }
+        part = {k for f in files for k in self._partition_values(f)}
         read = [
             {**f, "nullable": True} for f in fields if f["name"] not in part
         ]
@@ -6098,13 +5916,11 @@ class TransactionalLake:
         listing the partitions of a 100 TB table costs one walk over
         the live-file list, not a distinct-scan over rows (what
         ``SELECT DISTINCT keys`` would shuffle). Values are
-        URL-DECODED (ADVICE r12): the writer percent-encodes special
-        characters into directory names, and the pruning/delete
-        paths this listing mirrors (_dml_prune,
-        _try_partition_delete) compare the DECODED values — so a
-        partition written as ``sym=A%20B`` lists as ``A B``, the
-        value predicates actually match (Spark/Delta SHOW PARTITIONS
-        parity). The hive NULL sentinel maps to SQL NULL. Raises on
+        URL-DECODED by ``_partition_values``, the same parse every
+        file-skipping check uses: a partition written as
+        ``sym=A%20B`` lists as ``A B``, the value predicates actually
+        match (Spark/Delta SHOW PARTITIONS parity). The hive NULL
+        sentinel maps to SQL NULL. Raises on
         an unpartitioned table (Spark's own SHOW PARTITIONS
         contract)."""
         keys = tuple(
@@ -6118,12 +5934,7 @@ class TransactionalLake:
         live, _schemas, _v, _dvs = self._snapshot_state()
         seen: set[tuple] = set()
         for rel in live:
-            vals: dict[str, str | None] = {}
-            for seg in rel.split("/")[:-1]:
-                if "=" in seg:
-                    k, _, val = seg.partition("=")
-                    dec = unquote(val)
-                    vals[k] = None if dec == self._HIVE_NULL else dec
+            vals = self._partition_values(rel)
             seen.add(tuple(vals.get(k) for k in keys))
         rows = sorted(
             seen, key=lambda t: tuple("" if v is None else v for v in t)

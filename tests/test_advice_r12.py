@@ -52,10 +52,10 @@ class TestStringStatNumericLiteral:
 
     def test_cmp_refuses_range_endpoint_allows_pointwise(self):
         # a lexical range endpoint proves nothing numerically ...
-        assert TransactionalLake._dml_cmp("10", "5") is None
+        assert TransactionalLake._bound_cmp("10", 5) is None
         # ... but a per-file-constant value is a real number
-        assert TransactionalLake._dml_cmp("10", "5", pointwise=True) == 1
-        assert TransactionalLake._dml_cmp("5", "5", pointwise=True) == 0
+        assert TransactionalLake._bound_cmp("10", 5, pointwise=True) == 1
+        assert TransactionalLake._bound_cmp("5", 5, pointwise=True) == 0
 
     def test_partition_fast_path_still_prunes_numeric_strings(
         self, spark, tmp_path
@@ -142,6 +142,12 @@ class TestTemporalAutoScope:
         assert cmp("10", "5") is None
         # mixed type: cannot prove
         assert cmp("10", 5) is None
+        # a date-only stat (a DATE column) against a bound with a time
+        # part: the midnight reading says below, the truncated-date
+        # reading (Spark casts the bound to a date) says equal
+        assert cmp("2024-01-01", "2024-01-01 10:00:00") is None
+        # every reading agrees the next day is above
+        assert cmp("2024-01-02", "2024-01-01 10:00:00") == 1
 
     def test_matching_append_conflicts_even_with_t_spelling(
         self, spark, tmp_path

@@ -361,3 +361,142 @@ def test_merge_matches_python_upsert(spark, tmp_path_factory, target, source):
     want = {k: float(v) for k, v in target}
     want.update({k: float(v) for k, v in source})
     assert got == want
+
+
+# pruning soundness: one small lake, bounds drawn from the stored
+# values' own pools in several spellings (int/float/str numbers,
+# ' '/'T'/date-only instants, dates with and without a time part)
+_DAYS = ["2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04"]
+_SKIP_COLS = ("i", "ns", "ts", "dt", "p")
+# (partition p, rows of (i, ns, ts, dt)): one data file each
+_SKIP_FILES = [
+    ("2024-01-01", [(1, "10", "2024-01-01 10:00:00", "2024-01-01"),
+                    (3, "9", "2024-01-01T10:00:00", "2024-01-01")]),
+    ("2024-01-01", [(5, "5", "2024-01-02", "2024-01-03")]),
+    ("2024-01-02", [(7, "100", "2024-01-01T23:00:00", "2024-01-02"),
+                    (8, "10", "2024-01-02 00:00:00", "2024-01-02")]),
+    ("2024-01-03", [(10, "9", "2024-01-02T00:00:00", "2024-01-01"),
+                    (12, "5", "2024-01-01", "2024-01-03")]),
+    ("2024-01-03", [(12, "10", "2024-01-01 23:00:00", "2024-01-03")]),
+]
+_day_spelled = st.builds(
+    str.__add__,
+    st.sampled_from(_DAYS),
+    st.sampled_from(["", " 00:00:00", " 10:00:00", "T00:00:00", "T10:00:00"]),
+)
+_SKIP_POOLS = {
+    # int column: integral strings only (ANSI casts '5.5' -> error)
+    "i": st.integers(0, 13).flatmap(
+        lambda v: st.sampled_from([v, float(v), v + 0.5, str(v)])
+    ),
+    # numeric-looking strings: quoted compares lexically, unquoted
+    # casts the column to a number
+    "ns": st.sampled_from(["5", "9", "10", "50", "100"]).flatmap(
+        lambda s: st.sampled_from([s, int(s), float(s)])
+    ),
+    "ts": st.one_of(
+        st.sampled_from(_DAYS),
+        st.builds(
+            lambda d, sep, t: d + sep + t,
+            st.sampled_from(_DAYS),
+            st.sampled_from([" ", "T"]),
+            st.sampled_from(["00:00:00", "10:00:00", "23:00:00"]),
+        ),
+    ),
+    "dt": _day_spelled,
+    "p": _day_spelled,
+}
+
+
+def _col_value(col):
+    return st.tuples(st.just(col), _SKIP_POOLS[col])
+
+
+_any_value = st.sampled_from(_SKIP_COLS).flatmap(_col_value)
+
+
+def _sql_literal(v) -> str:
+    return f"'{v}'" if isinstance(v, str) else str(v)
+
+
+@st.composite
+def _dml_predicate(draw):
+    pieces = []
+    for _ in range(draw(st.integers(1, 2))):
+        col, v = draw(_any_value)
+        if draw(st.booleans()):
+            op = draw(st.sampled_from(["=", "<", "<=", ">", ">="]))
+            pieces.append(f"{col} {op} {_sql_literal(v)}")
+        else:
+            hi = draw(_SKIP_POOLS[col])
+            pieces.append(
+                f"{col} BETWEEN {_sql_literal(v)} AND {_sql_literal(hi)}"
+            )
+    if draw(st.booleans()):
+        pieces.append("i + 1 > 0")  # unparseable: prunes nothing
+    return " AND ".join(pieces)
+
+
+@pytest.fixture(scope="module")
+def skip_lake(spark, tmp_path_factory):
+    from pyspark.sql import functions as F
+
+    from market_data_lakehouse_spark.txnlog import TransactionalLake
+
+    root = tmp_path_factory.mktemp("skip_prop")
+    lake = TransactionalLake(spark, str(root / "tx"), partition_by=("p",))
+    for p, rows in _SKIP_FILES:
+        lake.append(
+            spark.createDataFrame(
+                [(*r, p) for r in rows],
+                "i long, ns string, ts string, dt string, p string",
+            )
+            .withColumn("dt", F.to_date("dt"))
+            .coalesce(1)
+        )
+    return lake
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select(*_SKIP_COLS).collect())
+
+
+@settings(max_examples=5, deadline=None)
+@given(
+    bound=_any_value.flatmap(
+        lambda cv: st.tuples(
+            st.just(cv[0]),
+            st.none() | _SKIP_POOLS[cv[0]],
+            st.none() | _SKIP_POOLS[cv[0]],
+        )
+    ),
+    equals=st.none() | _any_value,
+)
+def test_scan_between_never_skips_matching_rows(skip_lake, bound, equals):
+    """Stats and partition-value skipping only removes I/O: for any
+    bounds and point value, ``scan_between`` returns exactly the rows
+    of the snapshot filtered the same way."""
+    from pyspark.sql import functions as F
+
+    col, lo, hi = bound
+    eq = dict([equals]) if equals else None
+    want = skip_lake.snapshot()
+    if lo is not None:
+        want = want.filter(F.col(col) >= F.lit(lo))
+    if hi is not None:
+        want = want.filter(F.col(col) <= F.lit(hi))
+    for c, v in (eq or {}).items():
+        want = want.filter(F.col(c) == F.lit(v))
+    got = skip_lake.scan_between({col: (lo, hi)}, equals=eq)
+    assert _rows(got) == _rows(want)
+
+
+@settings(max_examples=5, deadline=None)
+@given(pred=_dml_predicate())
+def test_dml_prune_never_drops_matching_rows(skip_lake, pred):
+    """DML data skipping keeps every file holding a row the predicate
+    matches: the kept files' matching rows equal the snapshot's."""
+    files, schemas, _v, dvs = skip_lake._snapshot_state()
+    kept = skip_lake._dml_prune(files, pred)
+    got = skip_lake._read_files(kept, schemas, dvs).filter(pred)
+    assert _rows(got) == _rows(skip_lake.snapshot().filter(pred))

@@ -171,6 +171,48 @@ class TestPartitionValuePruning:
         ).count() == 0
 
 
+@pytest.mark.parametrize(
+    "partitioned, lo, hi, op",
+    [
+        (False, "2024-01-01 10:00:00", None, "scan"),
+        (False, "2024-01-01T00:00:00", "2024-01-02", "scan"),
+        (True, "2024-01-01 10:00:00", None, "scan"),
+        (True, "2024-01-01T00:00:00", "2024-01-02", "scan"),
+        (False, "2024-01-01 10:00:00", None, "delete"),
+    ],
+)
+def test_date_against_time_spelled_bound_keeps_rows(
+    spark, tmp_path, partitioned, lo, hi, op
+):
+    """A DATE stat or date partition value is stored date-only; Spark
+    casts a bound spelled with a time part to a DATE, so the file
+    holding that day may match and must not be skipped by reading the
+    stored day as midnight (or by raw string order)."""
+    lk = TransactionalLake(
+        spark,
+        str(tmp_path / "d"),
+        partition_by=("d",) if partitioned else (),
+    )
+    for day in ("2024-01-01", "2024-01-03"):
+        df = spark.createDataFrame([(1, day)], "k long, d string")
+        if not partitioned:  # a DATE column; the partition stays string
+            df = df.withColumn("d", F.to_date("d"))
+        lk.append(df.coalesce(1))
+    pred = " AND ".join(
+        f"d {o} '{v}'" for o, v in ((">=", lo), ("<=", hi)) if v
+    )
+    matching = sorted(str(r.d) for r in lk.snapshot().filter(pred).collect())
+    assert matching  # the 2024-01-01 row matches every case
+    if op == "scan":
+        got = lk.scan_between({"d": (lo, hi)}).collect()
+        assert sorted(str(r.d) for r in got) == matching
+    else:
+        before = sorted(str(r.d) for r in lk.snapshot().collect())
+        lk.delete_where(pred)
+        left = sorted(str(r.d) for r in lk.snapshot().collect())
+        assert left == sorted(set(before) - set(matching))
+
+
 def test_stats_unextractable_type_degrades_not_fails(spark, tmp_path):
     """r12 regression: pyarrow's stats caster raises
     ArrowNotImplementedError for some physical types (INT32-backed
