@@ -87,3 +87,24 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     except Exception:
         # any conversion surprise: the stock path is the contract
         return spark.createDataFrame(rows, schema)
+
+
+def arrow_df(spark: SparkSession, table, schema: StructType) -> DataFrame:
+    """DataFrame over a driver-side ``pyarrow.Table``: a
+    LocalRelation (broadcast and collected like any ``local_df``)
+    that keeps ``table``, so :func:`arrow_of` hands the rows back as
+    Arrow with no Spark job — collecting even a LocalRelation as
+    Arrow runs one. Only this very frame carries the table: MERGE's
+    source pass gets it back only when the frame reaches it
+    unchanged, and collects (one job) once a generated column or an
+    upcast to the committed types has rewritten it."""
+    df = spark.createDataFrame(table, schema)
+    df._arrow_table = table
+    return df
+
+
+def arrow_of(df: DataFrame):
+    """The ``pyarrow.Table`` :func:`arrow_df` built ``df`` from, or
+    None. Any transformation returns a new DataFrame, so a derived
+    frame never inherits its parent's rows."""
+    return vars(df).get("_arrow_table")

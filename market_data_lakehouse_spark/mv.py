@@ -51,7 +51,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from market_data_lakehouse_spark.localrel import arrow_df
 from market_data_lakehouse_spark.txnlog import TransactionalLake
 
 
@@ -266,10 +268,19 @@ class IncrementalAggView:
                 )
             ],
         )
-        # checkpoint once: the null-key guard's tiny probe pays the
-        # pipeline's materialization and the merge then reuses it —
-        # the guard adds a job but not a recompute
-        new_state = new_state.localCheckpoint(eager=False)
+        # one pass over the small delta state: under the broadcast
+        # threshold it is collected once as Arrow, the guard reads it
+        # as a LocalRelation and the MERGE gets its keyed rows as an
+        # arrow_df frame, both with no further job (the state table
+        # has no generated column and takes new_state's own types,
+        # so the frame reaches the merge's source pass unchanged);
+        # above it, a checkpoint lets the guard's probe pay the
+        # pipeline's materialization and the merge reuse it
+        small = self.state._collect_small(new_state)
+        if small is None:
+            new_state = new_state.localCheckpoint(eager=False)
+        else:
+            new_state = self.spark.createDataFrame(small[0], new_state.schema)
         # Null-key guard, on NET effect only: a null-keyed group whose
         # delta fully cancelled (insert+delete pairs already in
         # history — e.g. the offending rows were deleted AFTER a
@@ -287,7 +298,7 @@ class IncrementalAggView:
                 | (F.col(f"sum_{c}") != 0)
             )
         offending = (F.col("_has_null_key") == 1) & net_nonzero
-        if new_state.filter(offending).limit(1).count():
+        if new_state.filter(offending).limit(1).collect():
             raise ValueError(
                 "group_by columns contain NULLs: null keys never "
                 "equality-match in the state MERGE and would duplicate "
@@ -296,9 +307,29 @@ class IncrementalAggView:
                 "rows; a refresh whose null-key changes fully cancel "
                 "proceeds)"
             )
+        if small is None:
+            keyed = new_state.filter(F.col("_has_null_key") != 1).drop(
+                "_has_null_key"
+            )
+        else:
+            import pyarrow.compute as pc
+
+            tbl = small[0]
+            keyed = arrow_df(
+                self.spark,
+                tbl.filter(pc.not_equal(tbl["_has_null_key"], 1)).drop_columns(
+                    ["_has_null_key"]
+                ),
+                StructType(
+                    [
+                        f
+                        for f in new_state.schema.fields
+                        if f.name != "_has_null_key"
+                    ]
+                ),
+            )
         self.state.merge(
-            new_state.filter(F.col("_has_null_key") != 1)
-            .drop("_has_null_key"),
+            keyed,
             on=self.group_by,
             validate_keys=False,  # grouped by key: unique by construction
             txn=(self.app_id, end),

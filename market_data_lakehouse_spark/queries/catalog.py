@@ -184,6 +184,20 @@ def parquet_colrange_bound(
         out = _scan()
     except (OSError, ValueError, KeyError, TypeError, ImportError):
         out = None
+    except AttributeError as e:
+        # pyarrow footer-API drift: still fail soft (no bound, the
+        # wide path), but loudly — a silent miss disabled the gate
+        # once before
+        import warnings
+
+        warnings.warn(
+            f"parquet_colrange_bound({table}.{column}): pyarrow "
+            f"footer API mismatch ({e}); the colrange narrowing gate "
+            "is off for this column",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        out = None
     _COLRANGE_CACHE[key] = out
     return out
 

@@ -39,14 +39,25 @@ import shutil
 import time
 import uuid
 from datetime import datetime, timezone
+from typing import NamedTuple
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from market_data_lakehouse_spark.localrel import local_df
+from market_data_lakehouse_spark.localrel import arrow_df, arrow_of, local_df
 
 LOG_DIR = "_txn_log"
+
+
+class _MergeSource(NamedTuple):
+    """A MERGE source after its one pass (``_merge_source``)."""
+
+    df: DataFrame  # the source: a LocalRelation, or the checkpointed batch
+    sizes: dict  # row count + per-column bytes (``_cell_bytes``)
+    keys: DataFrame  # unique source keys, plus row index ``_m_row`` if local
+    table: object  # the collected pyarrow.Table; None above the bound
+    ranges: dict | None  # key column -> (min, max), for data skipping
 
 # File-level bloom filters (Delta bloom-filter-index analog). The
 # geometry is SIZED PER FILE-COLUMN from its exact distinct count:
@@ -2570,20 +2581,37 @@ class TransactionalLake:
         "timestamp_ntz": 8,
     }
 
-    def _measured_bytes(
-        self, df: DataFrame, minmax_cols: tuple = ()
-    ) -> dict:
-        """One aggregate job over ``df``: row count (key ``_n``) plus
-        per-column payload bytes — exact ``octet_length`` sums for
+    _VAR_TYPES = ("string", "binary")
+
+    @classmethod
+    def _cell_bytes(cls, dtypes, n: int, var_bytes: dict) -> dict:
+        """Row count (key ``_n``) plus per-column payload bytes:
+        ``var_bytes`` (the summed value bytes) + 8 per cell for
         string/binary, rows x fixed width for scalar types, rows x 50
-        for nested types. Doubles as the checkpoint materialization
-        when ``df`` is a lazy localCheckpoint.
+        for nested types."""
+        out = {"_n": n}
+        for c, dt in dtypes:
+            if dt in cls._VAR_TYPES:
+                # +8/cell: offset + null-tracking overhead in Spark's
+                # unsafe row / broadcast hash relation
+                out[c] = int(var_bytes.get(c) or 0) + 8 * n
+            else:
+                out[c] = cls._DTYPE_BYTES.get(dt, 50) * n
+        return out
+
+    def _measured_bytes(
+        self, df: DataFrame, minmax_cols: tuple = (), distinct_of: tuple = ()
+    ) -> dict:
+        """One aggregate over ``df``: :meth:`_cell_bytes` from exact
+        ``octet_length`` sums.
 
         ``minmax_cols`` (r12): additionally return those columns'
         [min, max] under key ``"_minmax"`` — merge's data-skipping
         envelope rides the SAME job instead of paying a second
-        pass."""
-        var_cols = [c for c, dt in df.dtypes if dt in ("string", "binary")]
+        pass. ``distinct_of``: additionally set ``"_dup"`` when two
+        rows share those columns' values (NULLs compare equal, as in
+        a GROUP BY) — merge's duplicate-key verdict, same job."""
+        var_cols = [c for c, dt in df.dtypes if dt in self._VAR_TYPES]
         aggs = [F.count(F.lit(1)).alias("_n")] + [
             F.sum(F.octet_length(F.col(c))).alias(f"_b_{c}")
             for c in var_cols
@@ -2591,21 +2619,118 @@ class TransactionalLake:
         for c in minmax_cols:
             aggs.append(F.min(c).alias(f"_lo_{c}"))
             aggs.append(F.max(c).alias(f"_hi_{c}"))
+        if distinct_of:
+            aggs.append(
+                F.count_distinct(F.struct(*distinct_of)).alias("_nk")
+            )
         row = df.agg(*aggs).collect()[0]
-        n = row["_n"]
-        out = {"_n": n}
-        for c, dt in df.dtypes:
-            if c in var_cols:
-                # +8/cell: offset + null-tracking overhead in Spark's
-                # unsafe row / broadcast hash relation
-                out[c] = int(row[f"_b_{c}"] or 0) + 8 * n
-            else:
-                out[c] = self._DTYPE_BYTES.get(dt, 50) * n
+        out = self._cell_bytes(
+            df.dtypes, row["_n"], {c: row[f"_b_{c}"] for c in var_cols}
+        )
         if minmax_cols:
             out["_minmax"] = {
                 c: (row[f"_lo_{c}"], row[f"_hi_{c}"]) for c in minmax_cols
             }
+        if distinct_of:
+            out["_dup"] = row["_nk"] < row["_n"]
         return out
+
+    # the most bytes of one string/binary cell _collect_small's first
+    # collect carries; a longer cell travels as its length alone
+    _INLINE_BYTES = 64
+
+    def _collect_small(self, df: DataFrame):
+        """``(arrow_table, sizes)`` for a ``df`` whose measured bytes
+        (:meth:`_cell_bytes`) fit under the broadcast threshold, else
+        None (also when broadcasting is off, or when the plan's known
+        size estimate is already over the threshold, so that Spark
+        would not broadcast ``df`` either). An :func:`arrow_df` frame costs
+        no job. Otherwise the driver never holds much
+        more than the threshold: the first collect takes at most
+        ``threshold // row_max + 1`` rows, where row_max is the most
+        a collected row can hold, because each string/binary cell
+        comes as its ``octet_length`` plus its value only when that
+        is at most ``_INLINE_BYTES`` long. Only when a longer cell
+        exists and the measured total still fits is ``df`` collected
+        whole, a second job. Only flat scalar columns qualify:
+        nested, interval and variant columns do not all survive the
+        Arrow round trip unchanged."""
+        import pyarrow.compute as pc
+        from py4j.protocol import Py4JError
+
+        if not all(
+            dt in self._DTYPE_BYTES
+            or dt in self._VAR_TYPES
+            or dt.startswith("decimal(")
+            for _, dt in df.dtypes
+        ):
+            return None
+        thresh = self._broadcast_threshold()
+        var = [c for c, dt in df.dtypes if dt in self._VAR_TYPES]
+        tbl = arrow_of(df)
+        whole = tbl is not None
+        if whole:
+            lens = {c: pc.binary_length(tbl[c]) for c in var}
+        else:
+            # the analyzed plan's estimate: the optimized one costs an
+            # optimizer pass that the collect below would repeat
+            try:
+                est = int(
+                    df._jdf.queryExecution().analyzed().stats().sizeInBytes()
+                )
+            except (AttributeError, Py4JError):
+                est = None
+            if est is not None and thresh < est < 1 << 62:
+                return None  # Spark would not broadcast it either
+            row_max = sum(
+                8 + 4 + self._INLINE_BYTES
+                if dt in self._VAR_TYPES
+                else self._DTYPE_BYTES.get(dt, 50)
+                for _, dt in df.dtypes
+            )
+            cap = thresh // row_max
+            if cap <= 0:
+                return None
+            len_cols = [f"_m_len{i}" for i in range(len(var))]
+            tbl = (
+                df.select(
+                    *[
+                        F.when(
+                            F.octet_length(c) <= self._INLINE_BYTES,
+                            F.col(c),
+                        ).alias(c)
+                        if c in var
+                        else F.col(c)
+                        for c in df.columns
+                    ],
+                    *[
+                        F.octet_length(c).alias(n)
+                        for c, n in zip(var, len_cols)
+                    ],
+                )
+                .limit(cap + 1)
+                .toArrow()
+            )
+            if tbl.num_rows > cap:
+                return None
+            lens = {c: tbl[n] for c, n in zip(var, len_cols)}
+            tbl = tbl.drop_columns(len_cols)
+        sizes = self._cell_bytes(
+            df.dtypes,
+            tbl.num_rows,
+            {c: pc.sum(v).as_py() for c, v in lens.items()},
+        )
+        if sum(v for c, v in sizes.items() if c != "_n") > thresh:
+            return None
+        if not whole and any(
+            (pc.max(v).as_py() or 0) > self._INLINE_BYTES
+            for v in lens.values()
+        ):
+            # measured to fit: now the long cells may travel
+            tbl = df.toArrow()
+            if tbl.num_rows != sizes["_n"]:
+                return None  # a nondeterministic source
+        return tbl, sizes
 
     def _maybe_broadcast(
         self, df: DataFrame, est_bytes: int | None = None
@@ -3717,7 +3842,7 @@ class TransactionalLake:
 
     def _merge_dv(
         self,
-        source: DataFrame,
+        src: _MergeSource,
         keys: list[str],
         when_matched: str,
         when_not_matched: str,
@@ -3729,7 +3854,6 @@ class TransactionalLake:
         read_bounds: dict[str, tuple] | None = None,
         new_cols: list[str] | None = None,
         map_doc: dict | None = None,
-        src_bytes: dict | None = None,
         set_exprs: dict[str, str] | None = None,
         insert_values: dict[str, str] | None = None,
         matched_condition: str | None = None,
@@ -3742,72 +3866,86 @@ class TransactionalLake:
         (matched rows with source-carried columns replaced) plus the
         unmatched-source inserts are appended as new files — all
         under ONE commit. The collect moves (file, position) pairs
-        only — O(matched rows) of metadata, never row data; the
-        matched frame is checkpointed because three consumers read
-        it (the position collect, the postimage build, and the
-        insert anti-join)."""
+        only — O(matched rows) of metadata, never row data; with a
+        local source it also names the matched source rows, so the
+        inserts need no anti-join. The matched frame is checkpointed
+        because the collect and the postimage build both read it."""
         action_base = {"op": "merge_dv", **txn_action}
+        source = src.df
         rt = self._row_tracking_state()
         raw = self._read_files(
             old, schemas, dvs, positions=True, keep_rt=bool(rt)
         )
-        if src_bytes is None:
-            src_bytes = self._measured_bytes(source)
-        src_keys = self._maybe_broadcast(
-            source.select(*keys).distinct(),
-            est_bytes=sum(src_bytes[k] for k in keys),
-        )
-        matched = raw.join(src_keys, keys, "left_semi")
+        matched = raw.join(src.keys, keys)
         if rt is not None:
             # update postimages keep their row id; versions default
             # to this commit; INSERTS carry no id column at all and
             # get base + row_index in their fresh files
             matched = self._rt_attach(matched, old, rt).drop(self._RT_VER)
         src_cols = [c for c in source.columns if c not in keys]
-        # the insert anti-join keys are ALL key-matched rows — a
-        # matched clause's condition narrows what the clause touches,
-        # never what counts as "matched" (Delta semantics). Pinned:
-        # the condition filter below would otherwise force the
-        # anti-join to re-run the positional scan
-        all_matched_keys = (
-            matched.select(*keys).distinct().localCheckpoint(eager=False)
-        )
+        if src.table is None:
+            # the insert anti-join keys are ALL key-matched rows — a
+            # matched clause's condition narrows what the clause
+            # touches, never what counts as "matched" (Delta
+            # semantics). Pinned: the condition filter below would
+            # otherwise force the anti-join to re-run the scan
+            all_matched_keys = (
+                matched.select(*keys).distinct().localCheckpoint(eager=False)
+            )
+        fires = F.lit(True)
         if matched_clauses is not None:
             # multi-clause (r13): one join, ordered first-true-wins
             # dispatch; EVERY fired row is dv-hidden (delete-fired
             # rows hide with no postimage, update-fired rows re-emit
             # their clause's postimage below)
             matched = self._join_src_slots(
-                matched, source, keys, src_cols, src_bytes
+                matched, source, keys, src_cols, src.sizes
             ).withColumn(
                 "_m_fired", self._fired_col(matched_clauses, src_cols)
-            ).filter(F.col("_m_fired") > 0)
+            )
+            fires = F.col("_m_fired") > 0
         elif matched_condition is not None:
             # conditioned matched clause: the dv hides exactly the
             # condition-passing rows — join the source columns the
-            # condition may read, filter, and carry the _src_ slots
-            # forward so the postimage build skips its own join
+            # condition may read, and carry the _src_ slots forward
+            # so the postimage build skips its own join
             matched = self._join_src_slots(
-                matched, source, keys, src_cols, src_bytes
-            ).filter(
-                F.coalesce(
-                    F.expr(
-                        self._rewrite_source_refs(
-                            matched_condition, src_cols
-                        )
-                    ),
-                    F.lit(False),
-                )
+                matched, source, keys, src_cols, src.sizes
             )
-        matched = matched.localCheckpoint(eager=False)
-        # insert-only merge (r13): no matched clause hides nothing —
-        # matched target rows stay untouched, and the matched frame
-        # serves only the insert anti-join
-        hits = (
-            []
-            if when_matched is None and matched_clauses is None
-            else matched.select("_row_file", "_row_pos").collect()
+            fires = F.coalesce(
+                F.expr(
+                    self._rewrite_source_refs(matched_condition, src_cols)
+                ),
+                F.lit(False),
+            )
+        matched = matched.withColumn("_m_fires", fires).localCheckpoint(
+            eager=False
         )
+        # insert-only merge (r13): no matched clause hides nothing —
+        # matched target rows stay untouched
+        insert_only = when_matched is None and matched_clauses is None
+        hits: list = []
+        if src.table is not None:
+            got = matched.select(
+                "_row_file", "_row_pos", "_m_row", "_m_fires"
+            ).toArrow()
+            matched_rows = got["_m_row"].to_numpy()
+            if not insert_only:
+                hits = got.filter(got["_m_fires"]).to_pylist()
+        elif not insert_only:
+            hits = (
+                matched.filter("_m_fires")
+                .select("_row_file", "_row_pos")
+                .collect()
+            )
+        matched = matched.filter("_m_fires")
+        out_cols = [
+            c for c in matched.columns
+            if c not in (
+                "_row_file", "_row_pos", "_m_fired", "_m_fires", "_m_row"
+            )
+            and not c.startswith("_src_")
+        ]
         parts: list[DataFrame] = []
         if hits and matched_clauses is not None:
             # update-fired rows re-emit their clause's postimage;
@@ -3818,11 +3956,6 @@ class TransactionalLake:
                 if cl["action"] == "update"
             ]
             if upd_idx:
-                out_cols = [
-                    c for c in matched.columns
-                    if c not in ("_row_file", "_row_pos", "_m_fired")
-                    and not c.startswith("_src_")
-                ]
                 ttypes = dict(matched.dtypes)
                 cl_assigned = set().union(
                     *[
@@ -3840,7 +3973,7 @@ class TransactionalLake:
                                 self._clause_proj(
                                     c, matched_clauses, src_cols,
                                     ttypes,
-                                )
+                                ).alias(c)
                                 for c in out_cols
                             ]
                         ),
@@ -3855,14 +3988,9 @@ class TransactionalLake:
                 matched
                 if matched_condition is not None
                 else self._join_src_slots(
-                    matched, source, keys, src_cols, src_bytes
+                    matched, source, keys, src_cols, src.sizes
                 )
             )
-            out_cols = [
-                c for c in matched.columns
-                if c not in ("_row_file", "_row_pos")
-                and not c.startswith("_src_")
-            ]
             if set_exprs is not None:
                 # per-column SET (r13): same projection contract as
                 # the rewrite path — assigned columns evaluate, the
@@ -3903,25 +4031,16 @@ class TransactionalLake:
                     )
                 )
         if when_not_matched == "insert":
-            # anti-join against ALL key-matched rows (not the
-            # condition-filtered set): a matched row whose clause
-            # condition failed is still matched, so its source row
-            # must not insert
-            ins = source.join(all_matched_keys, keys, "left_anti")
-            if not_matched_condition is not None:
-                ins = ins.filter(
-                    F.coalesce(
-                        F.expr(
-                            self._rewrite_source_refs(
-                                not_matched_condition, ()
-                            )
-                        ),
-                        F.lit(False),
-                    )
+            parts.append(
+                self._insert_rows(
+                    self._unmatched_source(src, matched_rows)
+                    if src.table is not None
+                    else source.join(all_matched_keys, keys, "left_anti"),
+                    not_matched_condition,
+                    insert_values,
+                    schemas,
                 )
-            if insert_values is not None:
-                ins = self._insert_part(ins, insert_values, schemas)
-            parts.append(ins)
+            )
         out: DataFrame | None = None
         for p in parts:
             out = p if out is None else out.unionByName(
@@ -4047,7 +4166,7 @@ class TransactionalLake:
             if post is not None:
                 hit = F.col("_m_fired") == i
                 e = F.when(hit, post) if e is None else e.when(hit, post)
-        return (e.otherwise(F.col(c)) if e is not None else F.col(c)).alias(c)
+        return e.otherwise(F.col(c)) if e is not None else F.col(c)
 
     def _join_src_slots(
         self,
@@ -4056,23 +4175,63 @@ class TransactionalLake:
         keys: list[str],
         src_cols,
         src_bytes: dict,
+        how: str = "inner",
     ) -> DataFrame:
         """Join target-side rows to the source with the non-key
         source columns renamed to their ``_src_<col>`` slots — the
         frame every SET expression, clause condition, and whole-row
         postimage reads. Broadcast-gated by the measured source
         bytes; the ONE join shape all merge branches share (review
-        find r13: this block was copy-pasted five times)."""
+        find r13: this block was copy-pasted five times). A ``left``
+        join also carries ``_m_hit``: TRUE on rows with a source
+        match, NULL on the rest."""
+        hit = [F.lit(True).alias("_m_hit")] if how == "left" else []
         return left.join(
             self._maybe_broadcast(
                 source.select(
                     *keys,
                     *[F.col(c).alias(f"_src_{c}") for c in src_cols],
+                    *hit,
                 ),
-                est_bytes=sum(src_bytes[c] for c in source.columns),
+                est_bytes=sum(src_bytes[c] for c in (*keys, *src_cols)),
             ),
             keys,
+            how,
         )
+
+    def _unmatched_source(self, src: _MergeSource, matched_rows) -> DataFrame:
+        """The collected source's rows the probe did not name, as a
+        LocalRelation: MERGE's insert candidates without a join."""
+        import numpy as np
+        import pyarrow as pa
+
+        keep = np.ones(src.table.num_rows, dtype=bool)
+        keep[matched_rows] = False
+        return arrow_df(
+            self.spark, src.table.filter(pa.array(keep)), src.df.schema
+        )
+
+    def _insert_rows(
+        self,
+        ins: DataFrame,
+        not_matched_condition: str | None,
+        insert_values: dict[str, str] | None,
+        schemas: list[str],
+    ) -> DataFrame:
+        """MERGE's NOT MATCHED rows: the clause condition (source
+        columns; not TRUE = no insert), then the named INSERT list."""
+        if not_matched_condition is not None:
+            ins = ins.filter(
+                F.coalesce(
+                    F.expr(
+                        self._rewrite_source_refs(not_matched_condition, ())
+                    ),
+                    F.lit(False),
+                )
+            )
+        if insert_values is not None:
+            ins = self._insert_part(ins, insert_values, schemas)
+        return ins
 
     def _insert_part(
         self,
@@ -4114,6 +4273,123 @@ class TransactionalLake:
         # list that omits a generated expression's INPUT column
         # fails loudly at resolution rather than writing NULL.
         return self._apply_generated(out)
+
+    def _merge_source(
+        self,
+        source: DataFrame,
+        keys: list[str],
+        validate_keys: bool,
+        want_ranges: bool,
+    ) -> _MergeSource:
+        """MERGE's one source pass. Under the broadcast threshold
+        (:meth:`_collect_small`) the source is collected once and the
+        duplicate-key verdict, the sizes and the key envelope come
+        from that Arrow table with no Spark job; the source and its
+        keys come back as LocalRelations, which broadcast without a
+        shuffle. Above it — or for a duplicate-keyed source that
+        skipped validation — the source is checkpointed and one
+        :meth:`_measured_bytes` aggregate sizes it, bounds its keys
+        and checks them."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        key_schema = source.select(*keys).schema  # unknown key: loud
+        small = self._collect_small(source)
+        if small is not None:
+            tbl, sizes = small
+            n = tbl.num_rows
+            # NULL keys group together and -0.0 with 0.0, as in
+            # Spark's GROUP BY
+            kt = pa.table(
+                [
+                    pc.add(tbl[k], 0.0)
+                    if pa.types.is_floating(tbl[k].type)
+                    else tbl[k]
+                    for k in keys
+                ],
+                names=[f"k{i}" for i in range(len(keys))],
+            )
+            dup = len(kt.group_by(kt.column_names).aggregate([])) < n
+            if dup and validate_keys:
+                self._raise_dup_keys(source, keys)
+            if not dup:
+                idx = tbl.select(keys).append_column(
+                    "_m_row", pa.array(range(n), pa.int64())
+                )
+                return _MergeSource(
+                    arrow_df(self.spark, tbl, source.schema),
+                    sizes,
+                    self.spark.createDataFrame(
+                        idx,
+                        StructType(
+                            [*key_schema, StructField("_m_row", LongType())]
+                        ),
+                    ),
+                    tbl,
+                    self._arrow_ranges(tbl, keys) if want_ranges else None,
+                )
+        source = source.localCheckpoint(eager=False)
+        sizes = self._measured_bytes(
+            source,
+            minmax_cols=tuple(keys) if want_ranges else (),
+            distinct_of=tuple(keys) if validate_keys else (),
+        )
+        if sizes.pop("_dup", False):
+            self._raise_dup_keys(source, keys)
+        return _MergeSource(
+            source,
+            sizes,
+            self._maybe_broadcast(
+                source.select(*keys).distinct(),
+                est_bytes=sum(sizes[k] for k in keys),
+            ),
+            None,
+            sizes.pop("_minmax", None),
+        )
+
+    @staticmethod
+    def _arrow_ranges(tbl, keys: list[str]) -> dict:
+        """Each key column's [min, max] as Spark's MIN/MAX would
+        collect it: tz-aware timestamps become naive local time, as
+        in a collected Row. A float column holding NaN gets no range
+        (Spark's MAX is NaN there, which proves nothing)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        def _row_val(v):
+            if isinstance(v, datetime) and v.tzinfo is not None:
+                return v.astimezone().replace(tzinfo=None)
+            return v
+
+        out = {}
+        for k in keys:
+            col = tbl[k]
+            if pa.types.is_floating(col.type) and pc.any(
+                pc.is_nan(col)
+            ).as_py():
+                continue
+            mm = pc.min_max(col)
+            out[k] = (_row_val(mm["min"].as_py()), _row_val(mm["max"].as_py()))
+        return out
+
+    @staticmethod
+    def _raise_dup_keys(source: DataFrame, keys: list[str]) -> None:
+        """The duplicate-key error, with one offending key as the
+        example (an error-path query; the verdict came before)."""
+        dup = (
+            source.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .filter(F.col("_n") > 1)
+            .limit(1)
+            .collect()
+        )
+        raise ValueError(
+            f"merge source has duplicate keys, e.g. "
+            f"{ {k: dup[0][k] for k in keys} }: updates would be "
+            "nondeterministic (pass validate_keys=False to skip "
+            "this check)"
+        )
 
     def merge(
         self,
@@ -4167,20 +4443,28 @@ class TransactionalLake:
         delete+insert; rewritten-survivor churn doesn't exist).
 
         Scale shape — this rewrites ONLY the files that contain a
-        matched key, not the whole table: the target is scanned once
-        with the ``_metadata.file_path`` column and semi-joined to the
-        (distinct, typically small, broadcastable) source keys to find
-        affected files; survivors from just those files are rewritten
-        alongside the merged rows. A merge touching 0.1% of files
-        costs 0.1% of a full rewrite — ``delete_where``'s whole-table
-        rewrite is the fallback shape, this is the upsert fast path.
-        Optimistic concurrency matches overwrite/delete: state is
-        resolved once and the commit fails if the table advanced.
+        matched key, not the whole table, in three passes. The source
+        is read once: under ``autoBroadcastJoinThreshold`` it is
+        collected as Arrow and every later step joins it as a
+        LocalRelation; a larger source is checkpointed and sized by
+        one aggregate (the bounded collect that finds it too large
+        never holds much more than the threshold). The target is
+        probed once, its ``_metadata.file_path`` column joined to the
+        source keys, to
+        find the affected files. One left join of those files' rows
+        to the source then yields survivors and postimages together
+        for the write. A merge touching 0.1% of files costs 0.1% of a
+        full rewrite — ``delete_where``'s whole-table rewrite is the
+        fallback shape, this is the upsert fast path. Optimistic
+        concurrency matches overwrite/delete: state is resolved once
+        and the commit fails if the table advanced.
 
         ``validate_keys``: fail loudly when the source carries
-        duplicate keys (one extra tiny aggregate job) — two source
-        rows updating the same target row is nondeterministic, the
-        error Delta also raises. CDC note: the feed derives from
+        duplicate keys (NULL keys count as equal, as in a GROUP BY) —
+        two source rows updating the same target row is
+        nondeterministic, the error Delta also raises. The verdict
+        comes from the source pass, with no job of its own. CDC
+        note: the feed derives from
         add/remove file lists, so a merge emits each rewritten
         survivor as a delete+insert pair (a semantic no-op for a
         consumer applying deletes before inserts), plus the real
@@ -4340,10 +4624,6 @@ class TransactionalLake:
         txn_action = (
             {"txn": {"app_id": txn[0], "version": txn[1]}} if txn else {}
         )
-        # one evaluation of the source per merge: validate, the
-        # affected-file probe, and the rewrite all reuse the
-        # checkpointed batch instead of recomputing its lineage
-        source = source.localCheckpoint(eager=False)
         if when_matched not in ("update", "delete", None):
             raise ValueError(
                 "when_matched must be 'update', 'delete', or None "
@@ -4479,21 +4759,6 @@ class TransactionalLake:
                 "copy-on-write shape — a dv that hides most of the "
                 "table defeats merge-on-read's point"
             )
-        if validate_keys:
-            dup = (
-                source.groupBy(*keys)
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .filter(F.col("_n") > 1)
-                .limit(1)
-                .collect()
-            )
-            if dup:
-                raise ValueError(
-                    f"merge source has duplicate keys, e.g. "
-                    f"{ {k: dup[0][k] for k in keys} }: updates would be "
-                    "nondeterministic (pass validate_keys=False to skip "
-                    "this check)"
-                )
         old, schemas, read_v, dvs = self._snapshot_state()
         # a merge READS the target rows matching the join keys, so
         # declared bounds must cover every key column or the scoped
@@ -4577,29 +4842,24 @@ class TransactionalLake:
         # final commit can silently evolve a column's type
         source = self._apply_generated(source)
         source = self._cast_to_committed(source, schemas)
+        src = self._merge_source(
+            source, keys, validate_keys,
+            want_ranges=when_not_matched_by_source == "ignore" and bool(old),
+        )
+        source = src.df
         if read_v < 0 or not old:
             # empty table: every source row is unmatched (Delta MERGE
             # into an empty target inserts). The source is conformed
             # to the committed schema (if any) so a narrow source
             # cannot drop evolved columns from the table.
             if when_not_matched == "insert":
-                if not_matched_condition is not None:
-                    source = source.filter(
-                        F.coalesce(
-                            F.expr(
-                                self._rewrite_source_refs(
-                                    not_matched_condition, ()
-                                )
-                            ),
-                            F.lit(False),
-                        )
-                    )
-                if insert_values is not None:
-                    source = self._insert_part(
-                        source, insert_values, schemas
-                    )
                 seeded = self._conform(
-                    source, schemas, keep=tuple(new_cols)
+                    self._insert_rows(
+                        source, not_matched_condition, insert_values,
+                        schemas,
+                    ),
+                    schemas,
+                    keep=tuple(new_cols),
                 )
                 # CHECK constraints apply on the empty-table insert
                 # path too — the non-empty path enforces on the full
@@ -4625,68 +4885,62 @@ class TransactionalLake:
                 {"op": "merge", "add": [], "remove": [], **txn_action},
                 read_version=read_v, read_bounds=read_bounds,
             )
-        # MERGE data skipping (r12, Delta parity): the source-sizing
-        # aggregate the merge ALREADY pays (broadcast gating /
-        # checkpoint materialization) additionally returns each join
-        # key's [min, max]; target files whose logged stats (or
-        # partition values) provably exclude the WHOLE source key
-        # envelope cannot hold a match and drop out of the probe
-        # scan. Sound: a matching target row's key equals some source
-        # key, which lies inside the envelope — so every possibly-
-        # matching file survives, in both modes (the dv scan and the
-        # insert anti-join see every file a source row could match).
-        # WHEN NOT MATCHED BY SOURCE needs unmatched rows table-wide,
-        # so it probes unpruned. Zero extra jobs either way.
-        want_ranges = when_not_matched_by_source == "ignore" and old
-        src_bytes = self._measured_bytes(
-            source, minmax_cols=tuple(keys) if want_ranges else ()
+        # MERGE data skipping (r12, Delta parity): target files whose
+        # logged stats (or partition values) provably exclude the
+        # WHOLE source key envelope cannot hold a match and drop out
+        # of the probe scan. Sound: a matching target row's key
+        # equals some source key, which lies inside the envelope — so
+        # every possibly-matching file survives, in both modes (the
+        # dv scan and the insert filter see every file a source row
+        # could match). WHEN NOT MATCHED BY SOURCE needs unmatched
+        # rows table-wide, so it probes unpruned.
+        probe_files = (
+            self._prune_by_key_ranges(old, src.ranges) if src.ranges else old
         )
-        probe_files = old
-        key_ranges = src_bytes.pop("_minmax", None)
-        if key_ranges:
-            probe_files = self._prune_by_key_ranges(old, key_ranges)
         if mode == "dv":
             return self._merge_dv(
-                source, keys, when_matched, when_not_matched,
+                src, keys, when_matched, when_not_matched,
                 probe_files or old[:1], schemas, read_v, dvs,
                 txn_action, read_bounds,
                 new_cols=new_cols, map_doc=ext_doc,
-                src_bytes=src_bytes, set_exprs=set_exprs,
+                set_exprs=set_exprs,
                 insert_values=insert_values,
                 matched_condition=matched_condition,
                 not_matched_condition=not_matched_condition,
                 matched_clauses=matched_clauses,
             )
+        import pyarrow.compute as pc
+
         snap = self._read_files(probe_files or old[:1], schemas, dvs=dvs)
-        # size-gated hint: a CDC micro-batch's keys broadcast (no
-        # shuffle), a bulk-backfill's keys do not (AQE chooses) —
-        # forcing the hint on a huge source OOMs the executors. The
-        # per-column byte measurement (hoisted above, shared with the
-        # skipping envelope) doubles as the checkpoint
-        # materialization (later jobs reuse the computed batch) and
-        # upper-bounds the distinct projections, so estimates err
-        # unhinted.
-        src_keys = self._maybe_broadcast(
-            source.select(*keys).distinct(),
-            est_bytes=sum(src_bytes[k] for k in keys),
-        )
-        # affected = files containing at least one matched key; the
-        # collect is O(matched files), driver-safe (paths, not rows).
-        # collect_set, not distinct (r17): the map-side partial set
-        # bounds each task at the file count and the final aggregate
-        # is one task — distinct paid a 32-reducer stage wave to
-        # dedupe a handful of path strings.
-        affected = self._rel_paths(
-            list(
-                snap.select(
-                    F.col("_metadata.file_path").alias("f"), *keys
-                )
-                .join(src_keys, keys, "left_semi")
-                .agg(F.collect_set("f").alias("fs"))
-                .first()["fs"]
-                or []
+        # the probe: target rows joined to the source keys. For a
+        # local source the collect moves (file, source row) pairs,
+        # and so also names the source rows that matched: at most
+        # one pair per source row unless the target repeats a key,
+        # so past that many the pairs are aggregated instead and the
+        # driver still holds O(files + source rows). Above the bound
+        # it moves the file set alone (collect_set bounds each task
+        # at the file count).
+        hits = snap.select(
+            F.col("_metadata.file_path").alias("_m_file"), *keys
+        ).join(src.keys, keys)
+        if src.table is not None:
+            import numpy as np
+
+            pairs = hits.select("_m_file", "_m_row")
+            got = pairs.limit(src.table.num_rows + 1).toArrow()
+            if got.num_rows <= src.table.num_rows:
+                files = pc.unique(got["_m_file"]).to_pylist()
+                matched_rows = got["_m_row"].to_numpy()
+            else:
+                files, rows = pairs.agg(
+                    F.collect_set("_m_file"), F.collect_set("_m_row")
+                ).first()
+                matched_rows = np.array(rows, dtype=np.int64)
+            affected = self._rel_paths(files)
+        else:
+            affected = self._rel_paths(
+                list(hits.agg(F.collect_set("_m_file")).first()[0] or [])
             )
-        )
         if when_not_matched_by_source in ("delete", "update"):
             # Delta WHEN NOT MATCHED BY SOURCE THEN DELETE/UPDATE:
             # target rows with no source key match go (or take the
@@ -4699,7 +4953,7 @@ class TransactionalLake:
                     snap.select(
                         F.col("_metadata.file_path").alias("f"), *keys
                     )
-                    .join(src_keys, keys, "left_anti")
+                    .join(src.keys.select(*keys), keys, "left_anti")
                     .agg(F.collect_set("f").alias("fs"))
                     .first()["fs"]
                     or []
@@ -4710,13 +4964,12 @@ class TransactionalLake:
         rt = self._row_tracking_state()
         # INSERT-ONLY merge (r13, review find): no matched clause and
         # no by-source clause means NO existing row changes — the
-        # affected files stay live (remove nothing, rewrite nothing);
-        # aff_df serves only the insert anti-join. Before this, the
-        # matched rows were silently whole-row updated.
+        # affected files stay live (remove nothing, rewrite nothing).
+        # Before this, the matched rows were silently whole-row
+        # updated.
+        has_matched = when_matched is not None or matched_clauses is not None
         insert_only = (
-            when_matched is None
-            and matched_clauses is None
-            and when_not_matched_by_source == "ignore"
+            not has_matched and when_not_matched_by_source == "ignore"
         )
         removes = [] if insert_only else affected
         aff_df = (
@@ -4724,80 +4977,39 @@ class TransactionalLake:
             if affected
             else None
         )
-        if aff_df is not None:
-            bs_cond = (
-                F.coalesce(F.expr(by_source_condition), F.lit(False))
-                if by_source_condition is not None
-                else None
+        src_cols = [c for c in source.columns if c not in keys]
+        if aff_df is not None and not insert_only:
+            # ONE left join of the affected files' rows to the source
+            # yields every output row from one scan: a row with no
+            # source match (``_m_hit`` NULL) is a survivor or a BY
+            # SOURCE target, a matched row takes the matched clause.
+            # Each clause is a keep condition plus per-column
+            # postimages; the output is one filter and one CASE per
+            # column. Without a matched clause the join needs only
+            # the (unique) keys, so matched rows never multiply.
+            j = self._join_src_slots(
+                aff_df,
+                source if has_matched else src.keys,
+                keys,
+                src_cols if has_matched else [],
+                src.sizes,
+                how="left",
             )
-            if when_matched is None and not insert_only:
-                # no matched clause but the files ARE being rewritten
-                # (for their BY SOURCE rows): matched rows pass
-                # through untouched
-                parts.append(aff_df.join(src_keys, keys, "left_semi"))
-            if when_not_matched_by_source == "ignore" and not insert_only:
-                # survivors: rows in affected files whose key has NO
-                # source match
-                parts.append(aff_df.join(src_keys, keys, "left_anti"))
-            elif when_not_matched_by_source == "update":
-                # BY SOURCE UPDATE (r13): the anti-join rows are the
-                # clause's targets — re-emit them through the SET
-                # expressions (target columns only); with row
-                # tracking their ids carry and versions reset. A
-                # clause condition confines the SET to the rows it
-                # is TRUE for — the rest pass through untouched.
-                surv = aff_df.join(src_keys, keys, "left_anti")
-                ttypes = dict(aff_df.dtypes)
-
-                def _bs(c):
-                    if c in by_source_set:
-                        e = F.expr(by_source_set[c]).cast(ttypes[c])
-                        return (
-                            e if bs_cond is None
-                            else F.when(bs_cond, e).otherwise(F.col(c))
-                        ).alias(c)
-                    if c == self._RT_VER:
-                        reset = F.lit(None).cast("bigint")
-                        return (
-                            reset if bs_cond is None
-                            else F.when(bs_cond, reset).otherwise(
-                                F.col(c)
-                            )
-                        ).alias(c)
-                    return F.col(c)
-
-                parts.append(
-                    self._regen_after_assign(
-                        surv.select(*[_bs(c) for c in surv.columns]),
-                        by_source_set,
-                    )
-                )
-            elif bs_cond is not None:
-                # conditional by-source DELETE: anti-join rows where
-                # the condition is NOT true survive (NULL = keep)
-                parts.append(
-                    aff_df.join(src_keys, keys, "left_anti").filter(
-                        ~bs_cond
-                    )
-                )
-            # by-source DELETE (unconditioned): those same rows are
-            # exactly the clause's targets — dropping the survivor
-            # part IS the delete (matched rows re-emit below,
-            # inserts unchanged)
-            src_cols = [c for c in source.columns if c not in keys]
+            hit = F.col("_m_hit").isNotNull()
+            ttypes = dict(aff_df.dtypes)
+            # an updated row keeps its row id; its commit version
+            # resets to this commit (the file default)
+            reset = {self._RT_VER: F.lit(None).cast("bigint")}
+            keep_m, post_m, evolved = F.lit(True), {}, []
+            assigned: set = set()
             if matched_clauses is not None:
-                # multi-clause, FIRST-TRUE-WINS (r13): one join, one
-                # _m_fired column from an ordered F.when chain (1-based
-                # clause index, 0 = no clause fired -> untouched);
-                # delete-fired rows drop, update-fired rows project
-                # their clause's postimage, everything else passes
-                # through
-                upd = self._join_src_slots(
-                    aff_df, source, keys, src_cols, src_bytes
-                )
-                upd = upd.withColumn(
-                    "_m_fired",
-                    self._fired_col(matched_clauses, src_cols),
+                # multi-clause, FIRST-TRUE-WINS (r13): ``_m_fired`` is
+                # the 1-based index of the first clause whose
+                # condition holds (0 = none fired -> untouched);
+                # delete-fired rows drop, update-fired rows take
+                # their clause's postimage
+                j = j.withColumn(
+                    "_m_fired", self._fired_col(matched_clauses, src_cols)
                 )
                 del_idx = [
                     i
@@ -4805,175 +5017,109 @@ class TransactionalLake:
                     if cl["action"] == "delete"
                 ]
                 if del_idx:
-                    upd = upd.filter(~F.col("_m_fired").isin(del_idx))
-                ttypes = dict(aff_df.dtypes)
-                cl_assigned = set().union(
-                    *[
-                        set(cl.get("set") or ())
-                        for cl in matched_clauses
-                        if cl["action"] == "update"
-                    ]
-                )
-                parts.append(
-                    self._regen_after_assign(
-                        upd.select(
-                            *[
-                                self._clause_proj(
-                                    c, matched_clauses, src_cols,
-                                    ttypes,
-                                )
-                                for c in aff_df.columns
-                            ]
-                        ),
-                        cl_assigned,
-                    )
-                )
-            m_cond = (
-                F.coalesce(
+                    keep_m = ~F.col("_m_fired").isin(del_idx)
+                post_m = {
+                    c: self._clause_proj(c, matched_clauses, src_cols, ttypes)
+                    for c in aff_df.columns
+                }
+                for cl in matched_clauses:
+                    if cl["action"] == "update":
+                        assigned |= set(cl.get("set") or ())
+            elif when_matched is not None:
+                # a clause condition that is not TRUE leaves the row
+                # untouched (kept on update, surviving a delete)
+                m_cond = F.coalesce(
                     F.expr(
                         self._rewrite_source_refs(
-                            matched_condition, src_cols
+                            matched_condition or "true", src_cols
                         )
                     ),
                     F.lit(False),
                 )
-                if matched_condition is not None
-                else None
-            )
-            if (
-                matched_clauses is None
-                and when_matched == "delete"
-                and m_cond is not None
-            ):
-                # conditional matched DELETE: matched rows where the
-                # condition is not TRUE survive — the join carries
-                # the _src_ columns the condition may read
-                joined = self._join_src_slots(
-                    aff_df, source, keys, src_cols, src_bytes
-                )
-                parts.append(
-                    joined.filter(~m_cond).select(*aff_df.columns)
-                )
-            if matched_clauses is None and when_matched == "update":
-                # EVERY matched target row is updated in place (Delta
-                # MERGE semantics): join target rows to the unique
-                # source — output multiplicity equals the target's,
-                # so duplicate-keyed target rows are preserved, not
-                # collapsed. Columns the source CARRIES take the
-                # source value; columns it lacks KEEP the target
-                # value (Delta's update-by-name: absent columns are
-                # not in the SET list, so they are untouched — never
-                # nulled).
-                src_cols = [c for c in source.columns if c not in keys]
-                upd = self._join_src_slots(
-                    aff_df, source, keys, src_cols, src_bytes
-                )
-                def _gated(post, c):
-                    # clause condition: rows where it is not TRUE
-                    # keep the target value (untouched)
-                    return (
-                        post if m_cond is None
-                        else F.when(m_cond, post).otherwise(F.col(c))
-                    ).alias(c)
-
-                if set_exprs is not None:
-                    # per-column SET (r13): assigned columns take
-                    # their expression (target cols bare, source
-                    # cols via _src_ slots), the rest KEEP the
-                    # target value; results store-assign to the
-                    # committed types. Evolved source columns ride
-                    # the insert part only (postimages null-fill).
-                    rw = {
-                        c: self._rewrite_source_refs(e, src_cols)
-                        for c, e in set_exprs.items()
-                    }
-                    ttypes = dict(aff_df.dtypes)
-                    parts.append(
-                        self._regen_after_assign(
-                            upd.select(
-                                *[
-                                    _gated(
-                                        F.expr(rw[c]).cast(ttypes[c]),
-                                        c,
-                                    )
-                                    if c in rw
-                                    else (
-                                        _gated(
-                                            F.lit(None).cast("bigint"),
-                                            c,
-                                        )
-                                        if c == self._RT_VER
-                                        else F.col(c)
-                                    )
-                                    for c in aff_df.columns
-                                ]
-                            ),
-                            set_exprs,
-                        )
-                    )
+                if when_matched == "delete":
+                    keep_m = ~m_cond
                 else:
-                    src_types = dict(source.dtypes)
-                    parts.append(
-                        upd.select(
-                            *[
-                                _gated(F.col(f"_src_{c}"), c)
-                                if c in src_cols
-                                else (
-                                    # updated row: id carries, version
-                                    # resets to this commit (file
-                                    # default)
-                                    _gated(
-                                        F.lit(None).cast("bigint"), c
-                                    )
-                                    if c == self._RT_VER
-                                    else F.col(c)
-                                )
-                                for c in aff_df.columns
-                            ],
-                            # schema evolution: postimages carry the
-                            # source's NEW columns too (absent from
-                            # aff_df — survivors null-fill in the
-                            # union; a condition-failing row stays
-                            # null there too)
-                            *[
-                                (
-                                    F.col(f"_src_{c}")
-                                    if m_cond is None
-                                    else F.when(
-                                        m_cond, F.col(f"_src_{c}")
-                                    ).otherwise(
-                                        F.lit(None).cast(src_types[c])
-                                    )
-                                ).alias(c)
-                                for c in new_cols
-                            ],
-                        )
-                    )
-        if when_not_matched == "insert":
-            # a source key with ANY target match made its file
-            # affected, so the insert anti-join needs only the
-            # affected files' keys — never a full-table distinct
-            ins = (
-                source.join(
-                    aff_df.select(*keys).distinct(), keys, "left_anti"
-                )
-                if aff_df is not None
-                else source
+                    if set_exprs is not None:
+                        # per-column SET (r13): assigned columns take
+                        # their expression (target cols bare, source
+                        # cols via _src_ slots) store-assigned to the
+                        # committed type; the rest keep the target
+                        assigned = set(set_exprs)
+                        post = {
+                            c: F.expr(
+                                self._rewrite_source_refs(e, src_cols)
+                            ).cast(ttypes[c])
+                            for c, e in set_exprs.items()
+                        }
+                    else:
+                        # whole row (Delta update-by-name): columns the
+                        # source carries take its value, the rest keep
+                        # the target's — never nulled. Evolved source
+                        # columns ride the postimage too.
+                        post = {c: F.col(f"_src_{c}") for c in src_cols}
+                        evolved = [
+                            F.when(hit & m_cond, F.col(f"_src_{c}")).alias(c)
+                            for c in new_cols
+                        ]
+                    post_m = {
+                        c: F.when(m_cond, e).otherwise(F.col(c))
+                        for c, e in {**post, **reset}.items()
+                        if c in ttypes
+                    }
+            # the unmatched side: survivors, or the BY SOURCE clause
+            # (r12/r13; target columns only — there is no source row)
+            keep_u, post_u = F.lit(True), {}
+            bs_cond = F.coalesce(
+                F.expr(by_source_condition or "true"), F.lit(False)
             )
-            if not_matched_condition is not None:
-                ins = ins.filter(
-                    F.coalesce(
-                        F.expr(
-                            self._rewrite_source_refs(
-                                not_matched_condition, ()
-                            )
-                        ),
-                        F.lit(False),
-                    )
+            if when_not_matched_by_source == "delete":
+                keep_u = ~bs_cond
+            elif when_not_matched_by_source == "update":
+                assigned |= set(by_source_set)
+                post_u = {
+                    c: F.when(bs_cond, e).otherwise(F.col(c))
+                    for c, e in {
+                        **{
+                            c: F.expr(e).cast(ttypes[c])
+                            for c, e in by_source_set.items()
+                        },
+                        **reset,
+                    }.items()
+                    if c in ttypes
+                }
+            parts.append(
+                self._regen_after_assign(
+                    j.filter(F.when(hit, keep_m).otherwise(keep_u)).select(
+                        *[
+                            F.when(hit, post_m.get(c, F.col(c)))
+                            .otherwise(post_u.get(c, F.col(c)))
+                            .alias(c)
+                            for c in aff_df.columns
+                        ],
+                        *evolved,
+                    ),
+                    assigned,
                 )
-            if insert_values is not None:
-                ins = self._insert_part(ins, insert_values, schemas)
-            parts.append(ins)
+            )
+        if when_not_matched == "insert":
+            parts.append(
+                self._insert_rows(
+                    self._unmatched_source(src, matched_rows)
+                    if src.table is not None
+                    # a source key with ANY target match made its
+                    # file affected, so the anti-join needs only the
+                    # affected files' keys — never a full-table
+                    # distinct
+                    else source.join(
+                        aff_df.select(*keys).distinct(), keys, "left_anti"
+                    )
+                    if aff_df is not None
+                    else source,
+                    not_matched_condition,
+                    insert_values,
+                    schemas,
+                )
+            )
         out: DataFrame | None = None
         for p in parts:
             # null-fill columns a part lacks: inserts carry only the

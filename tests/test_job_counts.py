@@ -111,3 +111,69 @@ def test_log_schema_reads_run_no_jobs(spark, tmp_path):
         read()
         used = _jobs_so_far(spark) - before
         assert used == 0, f"{name} ran {used} jobs before any action"
+
+
+
+def _bar_frame(spark, pdf):
+    """Bench-shaped bars (BAR_SCHEMA + ``date``) built the way a
+    pandas feed arrives: an Arrow-backed LocalRelation."""
+    from pyspark.sql import functions as F
+
+    from market_data_lakehouse_spark import BAR_SCHEMA
+
+    return spark.createDataFrame(
+        pdf[BAR_SCHEMA.fieldNames()], schema=BAR_SCHEMA
+    ).withColumn("date", F.to_date("timestamp"))
+
+
+def _bars_pdf(n, start, step_s, seed):
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    return pd.DataFrame({
+        "symbol": rng.choice(["AAPL", "MSFT", "GOOG", "AMZN"], n),
+        "timestamp": pd.Timestamp(start)
+        + pd.to_timedelta(np.arange(n) * step_s, unit="s"),
+        "open": 1.0, "high": 2.0, "low": 0.5, "close": rng.random(n),
+        "volume": rng.integers(1, 1000, n), "asset_class": "equity",
+    })
+
+
+def test_merge_and_view_refresh_job_budget(spark, tmp_path):
+    """A source under the broadcast threshold is read in one pass, so
+    the bench's 40-update + 40-insert upsert on (symbol, timestamp)
+    runs at most 5 jobs (source pass, probe, write, and the probe's
+    and write's broadcasts) and an IncrementalAggView refresh after a
+    300-row append at most 7."""
+    import pandas as pd
+
+    from market_data_lakehouse_spark.mv import IncrementalAggView
+    from market_data_lakehouse_spark.txnlog import TransactionalLake
+
+    tx = TransactionalLake(spark, str(tmp_path / "tx"))
+    for d in range(10):
+        tx.append(
+            _bar_frame(spark, _bars_pdf(60, datetime(2024, 1, 1 + d), 600, d))
+        )
+    assert len(tx._snapshot_state()[0]) >= 10
+    view = IncrementalAggView(
+        spark, tx, str(tmp_path / "mv"), group_by=["symbol", "date"],
+        sum_cols=["volume"],
+    )
+    view.refresh()
+    upd = tx.snapshot().limit(40).toPandas()
+    upd["close"] += 0.25
+    new = _bars_pdf(40, datetime(2024, 2, 1), 60, 99)
+    src = _bar_frame(spark, pd.concat([upd, new], ignore_index=True))
+    before = _jobs_so_far(spark)
+    tx.merge(src, on=["symbol", "timestamp"])
+    used = _jobs_so_far(spark) - before
+    assert used <= 5, f"merge ran {used} jobs"
+    assert tx.snapshot().count() == 640
+
+    tx.append(_bar_frame(spark, _bars_pdf(300, datetime(2024, 2, 2), 60, 7)))
+    before = _jobs_so_far(spark)
+    view.refresh()
+    used = _jobs_so_far(spark) - before
+    assert used <= 7, f"view refresh ran {used} jobs"

@@ -166,6 +166,34 @@ class TestParquetFooterBound:
 
         assert parquet_rowcount_bound(str(tmp_path), "nope") is None
 
+    def test_colrange_api_drift_fails_soft_and_warns(
+        self, tmp_path, monkeypatch
+    ):
+        """An AttributeError from the pyarrow footer API turns the
+        colrange gate off (None: the wide path) with a warning, not
+        a crash of the calling query."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        import pytest
+
+        from market_data_lakehouse_spark.queries.catalog import (
+            parquet_colrange_bound,
+        )
+
+        pq.write_table(
+            pa.table({"id": [1, 2, 3]}), str(tmp_path / "t.parquet")
+        )
+        assert parquet_colrange_bound(str(tmp_path), "t", "id") == (1, 3)
+
+        def _drifted(*a, **k):
+            raise AttributeError("'FileMetaData' has no attribute 'x'")
+
+        monkeypatch.setattr(pq, "ParquetFile", _drifted)
+        with pytest.warns(RuntimeWarning, match="colrange narrowing gate"):
+            assert parquet_colrange_bound(
+                str(tmp_path), "t", "id2"
+            ) is None
+
     def test_footer_bound_feeds_cc_gate(self, spark):
         """Same labels, same broadcast choice, one fewer job than the
         exact-count path — on the real documents table."""
