@@ -22,31 +22,32 @@ Everything here derives from public knowledge only: the Apache Spark
 API and the reference repo's observable behavior.
 """
 
-from market_data_lakehouse_spark.asof import asof_join
-from market_data_lakehouse_spark.lakehouse import (
-    AssetClass,
-    DataLakehouse,
-    IngestionStats,
-    OHLCVBar,
-    PartitionManager,
-    QueryResult,
-)
-from market_data_lakehouse_spark.schema import BAR_SCHEMA, TICK_SCHEMA
-from market_data_lakehouse_spark.session import get_spark
-from market_data_lakehouse_spark.txnlog import TransactionalLake
+import importlib
 
-__all__ = [
-    "AssetClass",
-    "DataLakehouse",
-    "IngestionStats",
-    "OHLCVBar",
-    "PartitionManager",
-    "QueryResult",
-    "TransactionalLake",
-    "asof_join",
-    "BAR_SCHEMA",
-    "TICK_SCHEMA",
-    "get_spark",
-]
+# public name -> defining submodule. Imported on first use (PEP 562),
+# so importing a pyspark-free submodule such as ``logcore`` (the
+# ``lake_changes`` workers' log reader) never loads pyspark.
+_EXPORTS = {
+    "AssetClass": "lakehouse",
+    "DataLakehouse": "lakehouse",
+    "IngestionStats": "lakehouse",
+    "OHLCVBar": "lakehouse",
+    "PartitionManager": "lakehouse",
+    "QueryResult": "lakehouse",
+    "TransactionalLake": "txnlog",
+    "asof_join": "asof",
+    "BAR_SCHEMA": "schema",
+    "TICK_SCHEMA": "schema",
+    "get_spark": "session",
+}
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    mod = _EXPORTS.get(name)
+    if mod is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    return getattr(importlib.import_module(f"{__name__}.{mod}"), name)
+
 
 __version__ = "0.1.0"

@@ -51,9 +51,7 @@ The checkpoint makes the ladder exactly-once either way.
 
 from __future__ import annotations
 
-import json
 import os
-from urllib.parse import unquote
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -62,134 +60,34 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StructField, StructType
 
-LOG_DIR = "_txn_log"
-HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+from market_data_lakehouse_spark import logcore
 
 
-def _log_path(table_path: str) -> str:
-    return os.path.join(table_path, LOG_DIR)
-
-
-def _commit_versions(table_path: str) -> list[int]:
-    lp = _log_path(table_path)
-    if not os.path.isdir(lp):
-        return []
-    return sorted(
-        int(f.split(".")[0]) for f in os.listdir(lp) if f.endswith(".json")
-    )
-
-
-def _read_commit(table_path: str, v: int) -> dict:
-    with open(os.path.join(_log_path(table_path), f"{v:08d}.json")) as fh:
-        return json.load(fh)
-
-
-def _latest_checkpoint(table_path: str) -> dict | None:
-    lp = _log_path(table_path)
-    if not os.path.isdir(lp):
-        return None
-    cps = sorted(
-        (f for f in os.listdir(lp) if f.endswith(".checkpoint")),
-        reverse=True,
-    )
-    for name in cps:
-        try:
-            with open(os.path.join(lp, name)) as fh:
-                return json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-    return None
-
-
-def _column_map(table_path: str) -> dict[str, str] | None:
-    """Active logical -> physical column map (column-mapping tables),
-    None when the feature is unused — the newest checkpoint's doc
-    plus the commit tail, last doc wins (mirrors
-    ``TransactionalLake._column_mapping_doc``)."""
-    cp = _latest_checkpoint(table_path)
-    doc = cp.get("column_mapping") if cp else None
-    start = cp["version"] + 1 if cp else 0
-    for v in _commit_versions(table_path):
-        if v < start:
-            continue
-        c = _read_commit(table_path, v)
-        if c.get("column_mapping") is not None:
-            doc = c["column_mapping"]
-    return dict(doc["cols"]) if doc else None
-
-
-def _table_schema(table_path: str) -> StructType:
-    """Latest committed schema, read straight from the log (newest
-    commit carrying one, else the newest checkpoint's history).
+def _table_schema(state: dict, table_path: str) -> StructType:
+    """The committed table schema of a log fold: the MERGED
+    batch-schema history (a narrow batch landing last must not hide
+    evolved columns from the stream; ``schema_reset`` restarts it).
     Column-mapping tables project to LOGICAL names — same contract
     as ``snapshot()``; the per-file reads still key on the physical
     names, which never change, so a mid-stream rename cannot break
     a running stream (it keeps its start-time schema until
     restart, like any Structured Streaming schema)."""
-    # the table schema is the MERGED batch-schema history (r10: a
-    # narrow batch landing last must not hide evolved columns from
-    # the stream), newest type wins per field, first-seen order
-    history: list[str] = []
-    cp = _latest_checkpoint(table_path)
-    start = 0
-    if cp and cp.get("schemas"):
-        history.extend(cp["schemas"])
-        start = cp["version"] + 1
-    for v in _commit_versions(table_path):
-        if v < start:
-            continue
-        c = _read_commit(table_path, v)
-        if c.get("schema_history"):
-            history.extend(c["schema_history"])
-        elif c.get("schema"):
-            history.append(c["schema"])
-    if not history:
+    if not state["schemas"]:
         raise ValueError(
             f"lake_changes: no committed schema found at {table_path!r}"
         )
-    # same union fold as the lake's own reads (widest type wins on a
-    # widen_column_type history, newest otherwise)
-    from market_data_lakehouse_spark.txnlog import TransactionalLake
-
     phys = StructType.fromJson(
-        {
-            "type": "struct",
-            "fields": TransactionalLake._merged_fields(history),
-        }
+        {"type": "struct", "fields": logcore.merged_fields(state["schemas"])}
     )
-    cmap = _column_map(table_path)
-    if cmap is None:
+    doc = state["column_mapping"]
+    if doc is None:
         return phys
     by_phys = {f.name: f for f in phys.fields}
     out = StructType()
-    for logical, physical in cmap.items():
+    for logical, physical in doc["cols"].items():
         f = by_phys.get(physical)
         if f is not None:
             out.add(logical, f.dataType, f.nullable)
-    return out
-
-
-def _row_base_map(table_path: str) -> dict[str, list[int]]:
-    """Immutable per-file base row-id map (row tracking): the newest
-    checkpoint's folded map plus every commit's ``row_base``
-    assignments. Empty when the feature is unused. Per-file bases
-    are write-once, so a plain union fold is exact."""
-    out: dict[str, list[int]] = {}
-    cp = _latest_checkpoint(table_path)
-    start = 0
-    if cp:
-        start = cp["version"] + 1
-        if cp.get("row_tracking"):
-            out.update(
-                {f: list(b) for f, b in cp["row_tracking"]["base"].items()}
-            )
-    for v in _commit_versions(table_path):
-        if v < start:
-            continue
-        for f, b in _read_commit(table_path, v).get(
-            "row_base", {}
-        ).items():
-            out[f] = list(b)
     return out
 
 
@@ -212,6 +110,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("lake_changes requires option 'path'")
+        self.log_path = os.path.join(self.path, logcore.LOG_DIR)
         self.start_version = int(options.get("starting_version", 0))
         st = options.get("starting_timestamp")
         if st is not None:
@@ -224,19 +123,12 @@ class LakeChangesStreamReader(DataSourceStreamReader):
                     "lake_changes: pass starting_version OR "
                     "starting_timestamp, not both"
                 )
-            try:
-                target = float(st)
-            except ValueError:
-                from datetime import datetime, timezone
-
-                dt = datetime.fromisoformat(st)
-                if dt.tzinfo is None:
-                    dt = dt.replace(tzinfo=timezone.utc)
-                target = dt.timestamp()
-            versions = _commit_versions(self.path)
+            target = logcore.epoch(st)
+            versions = logcore.commit_versions(self.log_path)
             self.start_version = (versions[-1] + 1) if versions else 0
             for v in versions:
-                if _read_commit(self.path, v).get("timestamp", 0) >= target:
+                c = logcore.read_commit(self.log_path, v)
+                if c.get("timestamp", 0) >= target:
                     self.start_version = v
                     break
         self.ignore_deletes = (
@@ -267,23 +159,24 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         self.with_row_ids = (
             str(options.get("with_row_ids", "false")).lower() == "true"
         )
-        # immutable per-file base row-id map, seeded at stream start;
-        # partitions() extends it from each planned commit's own
-        # row_base so files added mid-stream resolve without a refold
-        self._row_base: dict[str, list[int]] = (
-            _row_base_map(self.path) if self.with_row_ids else {}
-        )
-        if self.with_row_ids and not self._row_base:
+        head = logcore.fold(self.log_path)
+        if self.with_row_ids and head["row_tracking"] is None:
             raise ValueError(
                 "lake_changes: with_row_ids=true requires "
                 "enable_row_tracking() on the source table"
             )
+        # immutable per-file base row-id map, seeded at stream start;
+        # partitions() extends it from each planned commit's own
+        # row_base so files added mid-stream resolve without a refold
+        self._row_base: dict[str, list[int]] = (
+            logcore.row_bases(self.log_path) if self.with_row_ids else {}
+        )
         self.schema = schema
         # logical -> physical translation for column-mapping tables:
         # schema names are logical, parquet/partition-dir names are
         # physical (resolved once at stream start; physical names
         # never change, so this stays valid for the stream's life)
-        self.cmap = _column_map(self.path) or {}
+        self.cmap = dict((head["column_mapping"] or {"cols": {}})["cols"])
         # An Arrow type is only ever needed for a column that must be
         # SYNTHESIZED at read time — a hive partition value restored
         # from the directory name, or an evolved column null-filled
@@ -312,9 +205,9 @@ class LakeChangesStreamReader(DataSourceStreamReader):
 
     # -- offsets --------------------------------------------------------
     def initialOffset(self):
-        versions = _commit_versions(self.path)
+        versions = logcore.commit_versions(self.log_path)
         oldest = versions[0] if versions else 0
-        cp = _latest_checkpoint(self.path)
+        cp = logcore.latest_checkpoint(self.log_path)
         if self.start_version < oldest and cp is not None and (
             self.start_version <= cp["version"]
         ):
@@ -325,15 +218,14 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         return {"version": self.start_version}
 
     def latestOffset(self):
-        versions = _commit_versions(self.path)
-        head_next = (versions[-1] + 1) if versions else 0
+        head_next = logcore.version(self.log_path) + 1
         if self.max_files is None and self.max_rows is None:
             return {"version": head_next}
         end = max(self._cursor, self.start_version)
         files = rows = 0
         while end < head_next:
             try:
-                c = _read_commit(self.path, end)
+                c = logcore.read_commit(self.log_path, end)
             except FileNotFoundError:
                 break  # below retention: partitions() owns the error
             adds = c.get("add", [])
@@ -367,7 +259,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         parts: list[_AddFilePartition] = []
         for v in range(start["version"], end["version"]):
             try:
-                c = _read_commit(self.path, v)
+                c = logcore.read_commit(self.log_path, v)
             except FileNotFoundError:
                 raise ValueError(
                     f"lake_changes: commit v{v} was removed by log "
@@ -423,12 +315,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         tbl = pq.read_table(partition.abs_path)
         n = tbl.num_rows
         # hive partition values live in the directory names
-        part_vals: dict[str, str | None] = {}
-        for seg in partition.rel_path.split(os.sep)[:-1]:
-            if "=" in seg:
-                col, raw = seg.split("=", 1)
-                raw = unquote(raw)
-                part_vals[col] = None if raw == HIVE_NULL else raw
+        part_vals = logcore.partition_values(partition.rel_path)
         cols = []
         for field in self.schema.fields:
             phys = self.cmap.get(field.name, field.name)
@@ -578,7 +465,10 @@ class LakeChangesDataSource(DataSource):
         return "lake_changes"
 
     def schema(self) -> StructType:
-        base = _table_schema(self.options["path"])
+        path = self.options["path"]
+        base = _table_schema(
+            logcore.fold(os.path.join(path, logcore.LOG_DIR)), path
+        )
         rt = (
             str(self.options.get("with_row_ids", "false")).lower()
             == "true"

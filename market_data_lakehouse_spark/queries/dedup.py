@@ -31,6 +31,8 @@ from market_data_lakehouse_spark.queries.catalog import (
 N_MINHASH = 32
 N_BANDS = 8  # 4 rows per band
 SHINGLE = 3
+# _shingles_exploded's shingle array: one struct of SHINGLE token slots each
+SHINGLE_ARRAY = "array<struct<`0`:string,`1`:string,`2`:string>>"
 
 # ---------------------------------------------------------------------------
 # Candidate-volume observability (r6 VERDICT directive 4): the LSH
@@ -98,18 +100,30 @@ def _shingles_exploded(
     array whose struct carries NULL tail fields — concat_ws skips
     NULLs, so its shingle is byte-identical to the old branch's
     ``concat_ws(" ", toks)``."""
-    toks = _tokens()
     cols = ["doc_id", *carry]
+    return (
+        df.select(*cols, F.explode(_shingle_slots()).alias("zz"))
+        .select(*cols, F.concat_ws(" ", "zz.0", "zz.1", "zz.2").alias("s"))
+    )
+
+
+def _shingle_slots() -> F.Column:
+    """Per document, its shingles typed ``SHINGLE_ARRAY``: one struct
+    of SHINGLE token slots per shingle, or the whole text in slot 0
+    of a single struct when the document is shorter."""
+    toks = _tokens()
     # coalesce: size(NULL) is NULL (not -1), which a bare comparison
     # would silently reject — NULL-text docs must still get the ''
     # fallback shingle (concat_ws on a NULL array yields ''), not
     # vanish
     n = F.coalesce(F.size(toks), F.lit(0))
+    # cast to the struct type ``whole`` carries, so the when/otherwise
+    # below never depends on how arrays_zip names its fields
     z = F.arrays_zip(
         F.slice(toks, 1, n - 2),
         F.slice(toks, 2, n - 2),
         F.slice(toks, 3, n - 2),
-    )
+    ).cast(SHINGLE_ARRAY)
     whole = F.array(
         F.struct(
             F.concat_ws(" ", toks).alias("0"),
@@ -117,11 +131,7 @@ def _shingles_exploded(
             F.lit(None).cast("string").alias("2"),
         )
     )
-    zz = F.when(n >= SHINGLE, z).otherwise(whole)
-    return (
-        df.select(*cols, F.explode(zz).alias("zz"))
-        .select(*cols, F.concat_ws(" ", "zz.0", "zz.1", "zz.2").alias("s"))
-    )
+    return F.when(n >= SHINGLE, z).otherwise(whole)
 
 
 @register(

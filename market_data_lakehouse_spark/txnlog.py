@@ -38,16 +38,17 @@ import re
 import shutil
 import time
 import uuid
-from datetime import datetime, timezone
+from datetime import datetime
 from typing import NamedTuple
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from market_data_lakehouse_spark import logcore
 from market_data_lakehouse_spark.localrel import arrow_df, arrow_of, local_df
 
-LOG_DIR = "_txn_log"
+LOG_DIR = logcore.LOG_DIR
 
 
 class _MergeSource(NamedTuple):
@@ -311,142 +312,27 @@ class TransactionalLake:
     # ------------------------------------------------------------------
     # log primitives
     # ------------------------------------------------------------------
-    def _commit_files(self) -> list[str]:
-        return sorted(
-            f for f in os.listdir(self.log_path) if f.endswith(".json")
-        )
-
     @property
     def version(self) -> int:
-        """Latest committed version, -1 for an empty log. After
-        vacuum_log the newest checkpoint may BE the head (zero
-        commit files left) — the checkpoint version counts.
-
-        Resolves through the ``_last_checkpoint`` pointer when one
-        exists: walk version numbers upward from the pointer until
-        the first missing commit file — O(tail), not O(log-length)
-        listdir (commit files are contiguous above the floor)."""
-        try:
-            with open(
-                os.path.join(self.log_path, "_last_checkpoint")
-            ) as fh:
-                v = int(json.load(fh)["version"])
-            while os.path.exists(
-                os.path.join(self.log_path, f"{v + 1:08d}.json")
-            ):
-                v += 1
-            return v
-        except (OSError, json.JSONDecodeError, KeyError, ValueError):
-            pass
-        commits = self._commit_files()
-        head = int(commits[-1].split(".")[0]) if commits else -1
-        if head < 0:
-            cp = self._latest_checkpoint()
-            if cp is not None:
-                return cp["version"]
-        return head
+        """Latest committed version, -1 for an empty log
+        (:func:`logcore.version`: no directory listing once a
+        checkpoint exists)."""
+        return logcore.version(self.log_path)
 
     def _read_commit(self, version: int) -> dict:
-        with open(os.path.join(self.log_path, f"{version:08d}.json")) as fh:
-            return json.load(fh)
+        return logcore.read_commit(self.log_path, version)
 
     # ------------------------------------------------------------------
     # log checkpoints (Delta checkpoint design: head reads parse one
     # checkpoint + the commit tail, never the whole log)
     # ------------------------------------------------------------------
-    def _latest_checkpoint(
-        self,
-        max_version: int | None = None,
-        max_timestamp: float | None = None,
-    ) -> dict | None:
-        """Newest readable checkpoint (optionally bounded: at or
-        before a version / commit timestamp — time-travel resolution
-        needs the newest checkpoint NOT past its target), or None. A
-        torn/corrupt file (crash mid-write is impossible — the write
-        is tmp+rename — but defend anyway) is skipped: checkpoints
-        are pure optimization, the commit log stays the source of
-        truth.
-
-        HEAD reads (no bounds) resolve through the ``_last_checkpoint``
-        pointer file (Delta parity) — O(1), no directory listing;
-        a missing/stale/corrupt pointer falls back to the listing."""
-        if max_version is None and max_timestamp is None:
-            try:
-                with open(
-                    os.path.join(self.log_path, "_last_checkpoint")
-                ) as fh:
-                    ptr = json.load(fh)
-                return self._load_checkpoint(
-                    os.path.join(
-                        self.log_path,
-                        f"{int(ptr['version']):08d}.checkpoint",
-                    )
-                )
-            except (OSError, json.JSONDecodeError, KeyError, ValueError):
-                pass
-        cps = sorted(
-            f
-            for f in os.listdir(self.log_path)
-            if f.endswith(".checkpoint")
-        )
-        for name in reversed(cps):
-            if max_version is not None and int(name.split(".")[0]) > (
-                max_version
-            ):
-                continue
-            try:
-                cp = self._load_checkpoint(
-                    os.path.join(self.log_path, name)
-                )
-            except (OSError, json.JSONDecodeError, KeyError, ValueError):
-                continue
-            if (
-                max_timestamp is not None
-                and cp.get("timestamp") is not None
-                and cp["timestamp"] > max_timestamp
-            ):
-                continue
-            return cp
-        return None
-
-    @staticmethod
-    def _cp_part_name(version: int, i: int, n: int) -> str:
-        return f"{version:08d}.checkpoint-part-{i:04d}-of-{n:04d}"
-
-    def _load_checkpoint(self, path: str) -> dict:
-        """Load a checkpoint, reassembling a MULTIPART one (r12,
-        Delta ``checkpoint.partSize`` parity): the root file carries
-        every table-level field plus ``parts: n``; the per-FILE maps
-        (live list, stats, rows, bytes, blooms, dv, row-tracking
-        bases) are sharded across n part files. A missing or corrupt
-        part raises — the caller's existing defense skips to an older
-        checkpoint (or the full log fold); a half-written part set is
-        invisible anyway because the root is written LAST."""
-        with open(path) as fh:
-            cp = json.load(fh)
-        n = cp.get("parts")
-        if not n:
-            return cp
-        v = int(os.path.basename(path).split(".")[0])
-        for i in range(int(n)):
-            with open(
-                os.path.join(
-                    self.log_path, self._cp_part_name(v, i, int(n))
-                )
-            ) as fh:
-                part = json.load(fh)
-            cp["live"].extend(part["live"])
-            for k in ("stats", "rows", "bytes", "blooms", "dv"):
-                cp[k].update(part.get(k, {}))
-            if cp.get("row_tracking") and part.get("rt_base"):
-                cp["row_tracking"]["base"].update(part["rt_base"])
-        return cp
-
     def _write_checkpoint(self, version: int) -> None:
-        """Fold (previous checkpoint + tail) up to ``version`` and
-        write it atomically. O(tail), never a full-log refold. File
-        stats are filtered to the live set so the checkpoint stays
-        bounded by table size, not table history.
+        """Write the fold at ``version`` (:func:`logcore.fold`:
+        previous checkpoint + tail, never a full-log refold) as a
+        checkpoint, atomically. Per-file entries are narrowed to the
+        live set, so the checkpoint stays bounded by table size, not
+        table history. The layout keys record this handle's, as every
+        commit does.
 
         With table property ``checkpoint.partSize = N`` (Delta's
         ``delta.checkpoint.partSize``) and more than N live files,
@@ -458,200 +344,15 @@ class TransactionalLake:
         checkpoints exist for exactly this). Parts are written FIRST,
         the root last, the pointer after that — a crash mid-sequence
         leaves the new checkpoint invisible, never torn."""
-        cp = self._latest_checkpoint()
-        live: dict[str, None] = (
-            dict.fromkeys(cp["live"]) if cp else {}
-        )
-        schemas: list[str] = list(cp["schemas"]) if cp else []
-        stats: dict[str, dict] = dict(cp.get("stats", {})) if cp else {}
-        rows: dict[str, int] = dict(cp.get("rows", {})) if cp else {}
-        fbytes: dict[str, int] = dict(cp.get("bytes", {})) if cp else {}
-        blooms: dict[str, dict] = dict(cp.get("blooms", {})) if cp else {}
-        dv: dict[str, list[int]] = (
-            {f: list(p) for f, p in cp.get("dv", {}).items()} if cp else {}
-        )
-        txn: dict[str, int] = dict(cp.get("txn", {})) if cp else {}
-        # table metadata that must SURVIVE log vacuum: CHECK
-        # constraints and the identity column's high-water mark are
-        # resolved from the commit log, so a checkpoint that doesn't
-        # carry them would silently drop both once vacuum_log removes
-        # their defining commits
-        constraints: dict[str, str] = (
-            dict(cp.get("constraints", {})) if cp else {}
-        )
-        identity: dict | None = dict(cp["identity"]) if (
-            cp and cp.get("identity")
-        ) else None
-        col_map: dict | None = (
-            json.loads(json.dumps(cp["column_mapping"]))
-            if cp and cp.get("column_mapping")
-            else None
-        )
-        props: dict[str, str] = (
-            dict(cp.get("properties", {})) if cp else {}
-        )
-        rtrack: dict | None = (
-            {
-                "enabled": True,
-                "high_water": int(cp["row_tracking"]["high_water"]),
-                "base": {
-                    f: list(b)
-                    for f, b in cp["row_tracking"]["base"].items()
-                },
-            }
-            if cp and cp.get("row_tracking")
-            else None
-        )
-        cluster_state: dict | None = (
-            {
-                "cols": list(cp["clustering"]["cols"]),
-                "clustered": set(cp["clustering"]["clustered"]),
-            }
-            if cp and cp.get("clustering")
-            else None
-        )
-        defaults: dict[str, str] = (
-            dict(cp.get("defaults", {})) if cp else {}
-        )
-        tstats: dict | None = (
-            json.loads(json.dumps(cp["table_stats"]))
-            if cp and cp.get("table_stats")
-            else None
-        )
-        feats: set[str] = set(cp.get("features", [])) if cp else set()
-        copy_srcs: set[str] = (
-            set(cp.get("copy_sources", [])) if cp else set()
-        )
-        start = cp["version"] + 1 if cp else 0
-        for name in self._commit_files():
-            v = int(name.split(".")[0])
-            if v < start or v > version:
-                continue
-            c = self._read_commit(v)
-            cluster_state = self._fold_clustering(cluster_state, c)
-            # copy_into's loaded-source record survives log vacuum:
-            # forgetting a loaded file would re-ingest it
-            copy_srcs.update(c.get("copy_sources", []))
-            # each commit's "features" is the COMPLETE recorded set
-            # as of that commit — newest WINS (a union would silently
-            # resurrect a drop_feature(); r12). Pre-feature-era
-            # commits lack the key and leave the fold unchanged.
-            if "features" in c:
-                feats = set(c["features"])
-            if c.get("table_stats") is not None:
-                tstats = c["table_stats"]
-            if c.get("defaults"):
-                for k, dval in c["defaults"].items():
-                    if dval is None:
-                        defaults.pop(k, None)
-                    else:
-                        defaults[k] = dval
-            for f in c.get("add", []):
-                live[f] = None
-            for f in c.get("remove", []):
-                live.pop(f, None)
-                dv.pop(f, None)
-            for f, pos in c.get("dv", {}).items():
-                dv[f] = sorted(set(dv.get(f, [])) | set(pos))
-            for f, pos in c.get("dv_reset", {}).items():
-                # restore: SET the file's vector exactly (empty = clear)
-                if pos:
-                    dv[f] = sorted(pos)
-                else:
-                    dv.pop(f, None)
-            self._fold_schemas(schemas, c)
-            stats.update(c.get("stats", {}))
-            rows.update(c.get("rows", {}))
-            fbytes.update(c.get("bytes", {}))
-            blooms.update(c.get("blooms", {}))
-            t = c.get("txn")
-            if t:
-                txn[t["app_id"]] = max(
-                    txn.get(t["app_id"], -1), t["version"]
-                )
-            if c.get("op") == "add_constraint":
-                constraints[c["constraint"]["name"]] = c["constraint"]["expr"]
-            elif c.get("op") == "drop_constraint":
-                constraints.pop(c["constraint"]["name"], None)
-            elif c.get("op") == "clone" and c.get("constraints"):
-                constraints.update(c["constraints"])
-            if c.get("op") in ("set_identity", "clone") and c.get("identity"):
-                identity = dict(c["identity"])
-            elif identity is not None and c.get("identity_next") is not None:
-                identity["next"] = max(
-                    identity["next"], c["identity_next"]
-                )
-            if c.get("column_mapping") is not None:
-                col_map = c["column_mapping"]
-            if c.get("op") == "set_properties":
-                for k, val in c["properties"].items():
-                    if val is None:
-                        props.pop(k, None)
-                    else:
-                        props[k] = val
-            elif c.get("op") == "clone" and c.get("properties"):
-                props.update(c["properties"])
-            if c.get("row_tracking") is not None and rtrack is None:
-                rtrack = {"enabled": True, "high_water": 0, "base": {}}
-            if rtrack is not None:
-                for f in c.get("remove", []):
-                    rtrack["base"].pop(f, None)
-                for f, bv in c.get("row_base", {}).items():
-                    rtrack["base"][f] = list(bv)
-                if c.get("row_high_water") is not None:
-                    rtrack["high_water"] = max(
-                        rtrack["high_water"], int(c["row_high_water"])
-                    )
-        if rtrack is not None:
-            rtrack["base"] = {
-                f: b for f, b in rtrack["base"].items() if f in live
-            }
-        stats = {f: s for f, s in stats.items() if f in live}
-        rows = {f: n for f, n in rows.items() if f in live}
-        fbytes = {f: n for f, n in fbytes.items() if f in live}
-        blooms = {f: b for f, b in blooms.items() if f in live}
-        dv = {f: p for f, p in dv.items() if f in live}
-        payload = {
-            "version": version,
-            # commit-at-version timestamp + layout: lets timestamp
-            # time-travel use the fast path, and keeps version/layout
-            # resolvable after vacuum_log truncates the commit tail
-            "timestamp": self._read_commit(version)["timestamp"],
-            "partition_by": list(self.partition_by),
-            "generated_columns": dict(self.generated_columns),
-            "bloom_columns": list(self.bloom_columns),
-            "live": list(live),
-            "schemas": schemas,
-            "stats": stats,
-            "rows": rows,
-            "bytes": fbytes,
-            "blooms": blooms,
-            "dv": dv,
-            "txn": txn,
-            "constraints": constraints,
-            "identity": identity,
-            "column_mapping": col_map,
-            "properties": props,
-            "row_tracking": rtrack,
-            "clustering": (
-                {
-                    "cols": cluster_state["cols"],
-                    "clustered": sorted(
-                        f
-                        for f in cluster_state["clustered"]
-                        if f in live
-                    ),
-                }
-                if cluster_state is not None
-                else None
-            ),
-            "defaults": defaults,
-            "table_stats": tstats,
-            "features": sorted(feats),
-            "copy_sources": sorted(copy_srcs),
-        }
+        payload = logcore.fold(self.log_path, version)
+        payload["partition_by"] = list(self.partition_by)
+        payload["generated_columns"] = dict(self.generated_columns)
+        payload["bloom_columns"] = list(self.bloom_columns)
+        rtrack = payload["row_tracking"]
         try:
-            part_size = int(props.get("checkpoint.partSize", "0"))
+            part_size = int(
+                payload["properties"].get("checkpoint.partSize", "0")
+            )
         except (TypeError, ValueError):
             part_size = 0
         live_list = payload["live"]
@@ -660,7 +361,7 @@ class TransactionalLake:
             for i in range(n):
                 shard = live_list[i * part_size: (i + 1) * part_size]
                 part: dict = {"live": shard}
-                for k in ("stats", "rows", "bytes", "blooms", "dv"):
+                for k in logcore.PER_FILE:
                     part[k] = {
                         f: payload[k][f] for f in shard if f in payload[k]
                     }
@@ -678,15 +379,15 @@ class TransactionalLake:
                 os.replace(
                     ptmp,
                     os.path.join(
-                        self.log_path, self._cp_part_name(version, i, n)
+                        self.log_path, logcore.part_name(version, i, n)
                     ),
                 )
             payload["parts"] = n
             payload["live"] = []
-            for k in ("stats", "rows", "bytes", "blooms", "dv"):
+            for k in logcore.PER_FILE:
                 payload[k] = {}
-            if payload.get("row_tracking"):
-                payload["row_tracking"]["base"] = {}
+            if rtrack is not None:
+                rtrack["base"] = {}
         tmp = os.path.join(self.log_path, f".cp_tmp_{uuid.uuid4().hex}")
         with open(tmp, "w") as fh:
             json.dump(payload, fh)
@@ -700,7 +401,7 @@ class TransactionalLake:
         tmp = os.path.join(self.log_path, f".lcp_tmp_{uuid.uuid4().hex}")
         with open(tmp, "w") as fh:
             json.dump({"version": version}, fh)
-        os.replace(tmp, os.path.join(self.log_path, "_last_checkpoint"))
+        os.replace(tmp, os.path.join(self.log_path, logcore.POINTER))
 
     # ------------------------------------------------------------------
     # file-level statistics (Delta-style data skipping)
@@ -958,17 +659,8 @@ class TransactionalLake:
         return out
 
     def _blooms_index(self) -> dict[str, dict]:
-        """rel_path -> {col: bloom} for live files, folded from the
-        latest checkpoint plus the commit tail (same shape as
-        :meth:`_stats_index`)."""
-        cp = self._latest_checkpoint()
-        idx: dict[str, dict] = dict(cp.get("blooms", {})) if cp else {}
-        start = cp["version"] + 1 if cp else 0
-        for c in self._iter_commits_after(start):
-            idx.update(c.get("blooms", {}))
-        return idx
-
-    _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+        """rel_path -> {col: bloom} for the head's live files."""
+        return logcore.fold(self.log_path)["blooms"]
 
     @classmethod
     def _bound_cmp(cls, stat, bound, *, pointwise: bool = False) -> int | None:
@@ -983,6 +675,10 @@ class TransactionalLake:
 
         - numeric stat: numeric compare iff the bound parses as a
           number (Spark casts the literal to the column's type).
+        - a quoted FRACTIONAL bound against an integral stat is
+          unprovable: with ANSI off Spark casts '5.5' to the int 5,
+          so ``i >= '5.5'`` matches 5, which the exact compare would
+          skip.
         - string stat vs numeric bound: Spark compares per row as
           numbers, but a string column's logged min/max are LEXICAL
           endpoints that do not bound the numeric values (file
@@ -1006,6 +702,15 @@ class TransactionalLake:
         num = (int, float)
         if isinstance(stat, bool) or isinstance(bound, bool):
             return None
+        if isinstance(bound, str):
+            try:
+                if not float(bound).is_integer() and (
+                    isinstance(stat, int)
+                    or (isinstance(stat, str) and float(stat).is_integer())
+                ):
+                    return None
+            except (TypeError, ValueError):
+                pass
         if isinstance(stat, num) or (
             pointwise and isinstance(stat, str) and isinstance(bound, num)
         ):
@@ -1043,19 +748,6 @@ class TransactionalLake:
             return raw
         return raw if raw == (fa > fb) - (fa < fb) else None
 
-    @classmethod
-    def _partition_values(cls, rel: str) -> dict[str, str | None]:
-        """The decoded ``key=value`` directory segments of a data
-        file's relative path (the writer percent-encodes special
-        characters); the hive NULL sentinel maps to None."""
-        out: dict[str, str | None] = {}
-        for seg in rel.split("/")[:-1]:
-            if "=" in seg:
-                k, _, raw = seg.partition("=")
-                v = unquote(raw)
-                out[unquote(k)] = None if v == cls._HIVE_NULL else v
-        return out
-
     @staticmethod
     def _bound_constraints(
         bounds: dict[str, tuple]
@@ -1086,7 +778,7 @@ class TransactionalLake:
         one, a statless column or a missing partition segment keeps
         the file. Sound for any subset of a conjunction's conjuncts:
         a row matching the whole AND matches each of them."""
-        parts = cls._partition_values(rel)
+        parts = logcore.partition_values(rel)
         for col, op, val in constraints:
             if col in parts:
                 if parts[col] is None:
@@ -1155,7 +847,7 @@ class TransactionalLake:
         conservatively) or an explicit iterable of column names."""
         if read_bounds is None or not schemas:
             return
-        cols = {f["name"] for f in self._merged_fields(schemas)}
+        cols = {f["name"] for f in logcore.merged_fields(schemas)}
         if isinstance(referenced, str):
             needed = self._predicate_columns(referenced, cols)
         else:
@@ -1190,18 +882,6 @@ class TransactionalLake:
                     return False
         return True
 
-    def _rows_index(self, upto: int) -> dict[str, int]:
-        """rel_path -> logged row count, folded from the newest
-        checkpoint at or before ``upto`` plus the retained commit
-        tail. Files committed before row counts were recorded are
-        simply absent (``count_rows`` falls back to their footers)."""
-        cp = self._latest_checkpoint(max_version=upto)
-        idx: dict[str, int] = dict(cp.get("rows", {})) if cp else {}
-        start = cp["version"] + 1 if cp else 0
-        for c in self._iter_commits_after(start, upto):
-            idx.update(c.get("rows", {}))
-        return idx
-
     def count_rows(
         self, version: int | None = None, timestamp: str | None = None
     ) -> int:
@@ -1233,13 +913,13 @@ class TransactionalLake:
                 return int(crc["total_rows"]) - int(
                     crc.get("dv_deleted_rows", 0)
                 )
-        old, _schemas, resolved, dvs = self._snapshot_state(
-            version, timestamp
-        )
-        idx = self._rows_index(resolved)
+        st = logcore.fold(self.log_path, version, timestamp)
+        dvs = st["dv"]
         total = 0
-        for f in old:
-            n = idx.get(f)
+        for f in st["live"]:
+            # files committed before row counts were logged fall
+            # back to their footers
+            n = st["rows"].get(f)
             if n is None:
                 n = self._parquet_rows(os.path.join(self.path, f))
                 if n < 0:
@@ -1249,19 +929,6 @@ class TransactionalLake:
                     )
             total += n
         return total - sum(len(p) for p in dvs.values())
-
-    def _bytes_index(self, upto: int) -> dict[str, int]:
-        """rel_path -> logged on-disk size, folded like
-        :meth:`_rows_index` (checkpoint + retained tail). Files
-        committed before sizes were recorded are absent — the
-        checksum's full fold stats them once and the next checkpoint
-        carries nothing for them (honest absence, never a guess)."""
-        cp = self._latest_checkpoint(max_version=upto)
-        idx: dict[str, int] = dict(cp.get("bytes", {})) if cp else {}
-        start = cp["version"] + 1 if cp else 0
-        for c in self._iter_commits_after(start, upto):
-            idx.update(c.get("bytes", {}))
-        return idx
 
     # ------------------------------------------------------------------
     # per-commit checksums (Delta version-checksum / .crc design:
@@ -1293,40 +960,25 @@ class TransactionalLake:
         log (checkpoint + tail, no data I/O unless a pre-feature file
         lacks a logged row count / size). The shape every checksum
         carries and :meth:`verify_checksum` re-derives."""
-        # the commit path folds the version it JUST committed: take
-        # the O(tail) head read (no listdir — the r11 metadata-probe
-        # win) and only fall back to the listing time-travel path if
-        # a racing writer advanced the head past the target
-        live, _schemas, resolved, dvs = self._snapshot_state()
-        if resolved != version:
-            live, _schemas, resolved, dvs = self._snapshot_state(version)
-        ridx = self._rows_index(resolved)
-        bidx = self._bytes_index(resolved)
+        st = logcore.fold(self.log_path, version)
+        live, dvs = st["live"], st["dv"]
         total_rows = 0
-        total_bytes = 0
         set_hash = 0
         rows_exact = True
         for f in live:
-            n = ridx.get(f)
+            n = st["rows"].get(f)
             if n is None:
                 n = self._parquet_rows(os.path.join(self.path, f))
                 n = n if n >= 0 else None
-            b = bidx.get(f)
-            if b is None:
-                try:
-                    b = os.path.getsize(os.path.join(self.path, f))
-                except OSError:
-                    b = 0
             if n is None:
                 rows_exact = False
             total_rows += n or 0
-            total_bytes += b
             set_hash ^= self._file_token(f, n)
         return {
-            "version": resolved,
+            "version": st["version"],
             "num_files": len(live),
             "total_rows": total_rows,
-            "total_bytes": total_bytes,
+            "total_bytes": sum(self._file_sizes(live, st["bytes"])),
             "num_dv_files": len(dvs),
             "dv_deleted_rows": sum(len(p) for p in dvs.values()),
             "files_hash": f"{set_hash:032x}",
@@ -1417,16 +1069,8 @@ class TransactionalLake:
         return actual
 
     def _stats_index(self) -> dict[str, dict]:
-        """rel_path -> {col: [min, max]} for live files, folded from
-        the latest checkpoint plus the commit tail (files removed
-        later drop out naturally when the caller intersects with the
-        live-file list)."""
-        cp = self._latest_checkpoint()
-        idx: dict[str, dict] = dict(cp.get("stats", {})) if cp else {}
-        start = cp["version"] + 1 if cp else 0
-        for c in self._iter_commits_after(start):
-            idx.update(c.get("stats", {}))
-        return idx
+        """rel_path -> {col: [min, max]} for the head's live files."""
+        return logcore.fold(self.log_path)["stats"]
 
     def prune_files(
         self, bounds: dict[str, tuple], equals: dict | None = None
@@ -1498,6 +1142,13 @@ class TransactionalLake:
                 out[name] = (dlo, dhi)
         return out
 
+    # logged column type -> the Python value type a bloom probe of it
+    # may take (_bloom_hashes refuses bools)
+    _BLOOM_PY_TYPES = {
+        "string": str,
+        **dict.fromkeys(("byte", "short", "integer", "long"), int),
+    }
+
     def _pruned_state(
         self, bounds: dict[str, tuple], equals: dict | None = None
     ) -> tuple[list[str], int, list[str], dict[str, list[int]]]:
@@ -1517,8 +1168,13 @@ class TransactionalLake:
         filter when one exists: a definite miss (any probe bit
         unset) skips the file even when [min, max] straddles the key,
         which is exactly the high-cardinality-unsorted case min/max
-        cannot help with. Bloom false positives only KEEP files —
-        never a wrong skip."""
+        cannot help with. A bloom hashes the value's canonical string,
+        so it is probed only when the value's Python type is the
+        column's logged type (``str`` for a string column, a non-bool
+        ``int`` for an integral one): Spark casts a mistyped literal
+        (``s = 5`` matches ``'05'``), which a probe of ``'5'`` would
+        miss. Bloom false positives only KEEP files — never a wrong
+        skip."""
         equals = equals or {}
         bounds = {
             **bounds,
@@ -1531,10 +1187,14 @@ class TransactionalLake:
         files, schemas, _v, dvs = self._snapshot_state()
         idx = self._stats_index()
         bloom_idx = self._blooms_index() if equals else {}
+        types = {
+            f["name"]: f["type"] for f in logcore.merged_fields(schemas)
+        } if equals else {}
         probes = {
             c: h
             for c, v in equals.items()
-            if (h := _bloom_hashes(v)) is not None
+            if isinstance(v, self._BLOOM_PY_TYPES.get(types.get(c), ()))
+            and (h := _bloom_hashes(v)) is not None
         }
 
         def may_match(rel: str) -> bool:
@@ -1621,15 +1281,15 @@ class TransactionalLake:
         raise a clear retention error instead of resolving a
         silently-partial state; DATA files are untouched
         (``vacuum()`` owns those)."""
-        boundary = self._latest_checkpoint(
-            max_version=self.version - max(0, retain_last)
+        boundary = logcore.latest_checkpoint(
+            self.log_path, max_version=self.version - max(0, retain_last)
         )
         if boundary is None:
             return 0
         removed = 0
-        for name in self._commit_files():
-            if int(name.split(".")[0]) <= boundary["version"]:
-                os.unlink(os.path.join(self.log_path, name))
+        for v in logcore.commit_versions(self.log_path):
+            if v <= boundary["version"]:
+                os.unlink(os.path.join(self.log_path, f"{v:08d}.json"))
                 removed += 1
         for name in os.listdir(self.log_path):
             # checksum sidecars below the boundary go with their
@@ -1771,6 +1431,11 @@ class TransactionalLake:
                 return current
             version = current + 1
             payload_action = action
+            # ONE fold of the head serves every read below (on a
+            # many-file table each fold parses the whole checkpoint).
+            # A head past ``current`` means a racer took ``version``:
+            # the link below fails and the loop re-reads
+            st = logcore.fold(self.log_path)
             if action.get("add"):
                 # row tracking: reserve a contiguous id range per
                 # added file off the high-water mark AT THIS HEAD —
@@ -1779,7 +1444,7 @@ class TransactionalLake:
                 # head and two writers can never claim the same ids;
                 # files whose base the caller already fixed (restore
                 # re-adding old files, clone) keep it
-                rt = self._row_tracking_state()
+                rt = st["row_tracking"]
                 if rt is not None:
                     base = {
                         f: list(b)
@@ -1819,14 +1484,16 @@ class TransactionalLake:
                 try:
                     prev_ts = float(self._read_commit(current)["timestamp"])
                 except (OSError, KeyError, ValueError):
-                    cp_prev = self._latest_checkpoint(max_version=current)
+                    cp_prev = logcore.latest_checkpoint(
+                        self.log_path, max_version=current
+                    )
                     if cp_prev is not None and cp_prev.get("timestamp"):
                         prev_ts = float(cp_prev["timestamp"])
             # cumulative table-features stamp: recorded head set ∪
             # whatever this action activates (∪ a clone's inherited
             # set) — the forward-compat lockout older builds read
             feats = (
-                set(self.table_features())
+                set(st["features"])
                 | self._action_features(payload_action)
                 | set(payload_action.get("inherit_features", ()))
             ) - set(payload_action.get("drop_features", ()))
@@ -1877,8 +1544,12 @@ class TransactionalLake:
             # table follows one recorded policy instead of whatever
             # its constructor happened to say. Invalid values fall
             # back to the ctor arg rather than failing the commit.
+            # The properties are the ones THIS commit leaves: its own
+            # effect replayed onto the state it was written on.
+            after = logcore.state_from(st)
+            logcore.apply(after, payload)
             interval = self.checkpoint_every
-            p = self.properties().get("checkpointInterval")
+            p = after["properties"].get("checkpointInterval")
             if p is not None:
                 try:
                     interval = max(0, int(p))
@@ -1900,62 +1571,28 @@ class TransactionalLake:
     def _recorded_partitioning(
         self, as_of: int | None = None
     ) -> tuple[str, ...] | None:
-        """Layout recorded by the latest commit that carries one
-        (pre-recording logs return None — ctor value applies).
-        ``as_of``: resolve at that version instead of head — restore()
-        uses this to roll table METADATA back with the file set."""
-        for name in reversed(self._commit_files()):
-            v = int(name.split(".")[0])
-            if as_of is not None and v > as_of:
-                continue
-            c = self._read_commit(v)
-            if "partition_by" in c:
-                return tuple(c["partition_by"])
-        # all commits vacuumed (head == checkpoint): layout rides the
-        # checkpoint
-        cp = self._latest_checkpoint()
-        if cp is not None and (as_of is None or cp["version"] <= as_of):
-            return tuple(cp["partition_by"])
-        return None
+        """Layout the log records as of ``as_of`` (head by default);
+        None on a pre-recording log, where the ctor value applies.
+        restore() passes ``as_of`` to roll table METADATA back with
+        the file set."""
+        rec = logcore.fold(self.log_path, as_of)["partition_by"]
+        return tuple(rec) if rec is not None else None
 
     def _recorded_generated(
         self, as_of: int | None = None
     ) -> dict[str, str] | None:
-        """Generated-column expressions recorded by the latest commit
-        that carries them (None = pre-recording log, ctor value
-        applies) — same log-ownership contract as the partition
-        layout."""
-        for name in reversed(self._commit_files()):
-            v = int(name.split(".")[0])
-            if as_of is not None and v > as_of:
-                continue
-            c = self._read_commit(v)
-            if "generated_columns" in c:
-                return dict(c["generated_columns"])
-        cp = self._latest_checkpoint()
-        if cp is not None and (as_of is None or cp["version"] <= as_of):
-            if "generated_columns" in cp:
-                return dict(cp["generated_columns"])
-        return None
+        """Generated-column expressions the log records (None =
+        pre-recording log, ctor value applies) — same log-ownership
+        contract as the partition layout."""
+        rec = logcore.fold(self.log_path, as_of)["generated_columns"]
+        return dict(rec) if rec is not None else None
 
-    def _recorded_blooms(
-        self, as_of: int | None = None
-    ) -> tuple[str, ...] | None:
-        """Bloom-column set recorded by the latest commit that
-        carries it (None = pre-recording log, ctor value applies) —
-        same log-ownership contract as generated columns."""
-        for name in reversed(self._commit_files()):
-            v = int(name.split(".")[0])
-            if as_of is not None and v > as_of:
-                continue
-            c = self._read_commit(v)
-            if "bloom_columns" in c:
-                return tuple(c["bloom_columns"])
-        cp = self._latest_checkpoint()
-        if cp is not None and (as_of is None or cp["version"] <= as_of):
-            if "bloom_columns" in cp:
-                return tuple(cp["bloom_columns"])
-        return None
+    def _recorded_blooms(self) -> tuple[str, ...] | None:
+        """Bloom-column set the head records (None = pre-recording
+        log, ctor value applies) — same contract as generated
+        columns."""
+        rec = logcore.fold(self.log_path)["bloom_columns"]
+        return tuple(rec) if rec is not None else None
 
     def set_bloom_columns(self, columns) -> int:
         """Change the table's bloom-filter column set as a metadata
@@ -1978,96 +1615,10 @@ class TransactionalLake:
         self, version: int | None = None, timestamp: str | None = None
     ) -> tuple[list[str], list[str], int, dict[str, list[int]]]:
         """(live files, schema-json history, resolved version,
-        deletion vectors {rel: sorted row positions}).
-
-        Head reads (no version/timestamp) start from the latest
-        checkpoint and fold only the commit tail; explicit
-        time-travel takes the full-log path (it may target a version
-        BEFORE the checkpoint).
-
-        DV fold rules: a ``dv`` commit unions positions into its
-        file's vector; removing a file drops its vector (the rewrite
-        that removed it materialized the surviving rows, or the file
-        left the table entirely)."""
-        if timestamp is not None:
-            if isinstance(timestamp, str):
-                dt = datetime.fromisoformat(timestamp)
-                if dt.tzinfo is None:
-                    # commit timestamps are UTC epoch (time.time());
-                    # naive ISO strings must be read as UTC too, or
-                    # the snapshot shifts by the host's TZ offset
-                    dt = dt.replace(tzinfo=timezone.utc)
-                ts = dt.timestamp()
-            else:
-                ts = float(timestamp)
-        live: dict[str, None] = {}
-        schemas: list[str] = []
-        dvs: dict[str, list[int]] = {}
-        resolved = -1
-        # newest checkpoint not past the target: head reads take the
-        # newest overall; version/timestamp travel takes the newest at
-        # or before the target, then folds the retained tail commits
-        if version is not None:
-            cp = self._latest_checkpoint(max_version=version)
-        elif timestamp is not None:
-            cp = self._latest_checkpoint(max_timestamp=ts)
-        else:
-            cp = self._latest_checkpoint()
-        if cp is not None:
-            live = dict.fromkeys(cp["live"])
-            schemas = list(cp["schemas"])
-            dvs = {f: list(p) for f, p in cp.get("dv", {}).items()}
-            resolved = cp["version"]
-        else:
-            # no checkpoint at or before the target: the full-log fold
-            # is valid only while the log still starts at v0 — after
-            # vacuum_log, resolving from a truncated prefix would
-            # silently MISS the early adds, so fail instead
-            names = self._commit_files()
-            truncated = not names or int(names[0].split(".")[0]) > 0
-            if truncated and self._latest_checkpoint() is not None:
-                oldest = (
-                    int(names[0].split(".")[0]) if names else None
-                )
-                raise ValueError(
-                    "requested snapshot predates log retention: early "
-                    "commits were removed by vacuum_log (oldest retained "
-                    f"commit: {'v%d' % oldest if oldest is not None else 'none'})"
-                )
-        if timestamp is not None:
-            # walk to the first commit past ts (the loop breaks there)
-            commits = self._iter_commits_after(resolved + 1)
-        else:
-            # head AND version travel: O(tail) direct version walk —
-            # _iter_commits_after falls back to a listing only for a
-            # vacuumed prefix (start below the retention floor)
-            commits = self._iter_commits_after(resolved + 1, version)
-        for c in commits:
-            if version is not None and c["version"] > version:
-                break
-            if timestamp is not None and c["timestamp"] > ts:
-                break
-            for f in c.get("add", []):
-                live[f] = None
-            for f in c.get("remove", []):
-                live.pop(f, None)
-                dvs.pop(f, None)
-            for f, pos in c.get("dv", {}).items():
-                dvs[f] = sorted(set(dvs.get(f, [])) | set(pos))
-            for f, pos in c.get("dv_reset", {}).items():
-                # restore: SET the file's vector exactly (empty = clear)
-                if pos:
-                    dvs[f] = sorted(pos)
-                else:
-                    dvs.pop(f, None)
-            self._fold_schemas(schemas, c)
-            resolved = c["version"]
-        if version is not None and resolved < version:
-            raise ValueError(
-                f"version {version} does not exist (latest: {resolved})"
-            )
-        dvs = {f: p for f, p in dvs.items() if f in live}
-        return list(live), schemas, resolved, dvs
+        deletion vectors {rel: sorted row positions}) at the head, a
+        version or a timestamp: a read of :func:`logcore.fold`."""
+        st = logcore.fold(self.log_path, version, timestamp)
+        return st["live"], st["schemas"], st["version"], st["dv"]
 
     # ------------------------------------------------------------------
     # writes
@@ -2323,7 +1874,7 @@ class TransactionalLake:
         # (Delta's mergeSchema contract, reference README.md:29).
         # Checked against the MERGED history: a column evolved in at
         # any commit stays known even after narrower batches land.
-        last = {f["name"] for f in self._merged_fields(schemas)}
+        last = {f["name"] for f in logcore.merged_fields(schemas)}
         new = {f for f in df.schema.fieldNames()} - last
         if new and not merge_schema:
             raise ValueError(
@@ -2340,59 +1891,8 @@ class TransactionalLake:
     _RT_COLS = (_RT_ID, _RT_VER)
 
     # schema-JSON primitive name <-> Catalyst simpleString
-    _JSON_TO_SIMPLE = {
-        "byte": "tinyint", "short": "smallint", "integer": "int",
-        "long": "bigint", "float": "float", "double": "double",
-    }
+    _JSON_TO_SIMPLE = logcore.JSON_TO_SIMPLE
     _SIMPLE_TO_JSON = {v: k for k, v in _JSON_TO_SIMPLE.items()}
-
-    @staticmethod
-    def _fold_schemas(schemas: list[str], c: dict) -> None:
-        """Fold ONE commit's schema contribution into a running
-        history list (in place). ``schema_reset`` marks commits that
-        REPLACE the table's contents (overwrite / restore /
-        reorg_purge): the history restarts there — without the
-        reset, the merged-schema union would resurrect columns the
-        replacing commit dropped (a narrower overwrite followed by
-        any CoW DML null-filled the dropped column back into
-        rewritten files; r11 fix)."""
-        if c.get("schema_reset"):
-            del schemas[:]
-        if c.get("schema_history"):  # written by older restore/clone
-            schemas.extend(c["schema_history"])
-        elif c.get("schema"):
-            schemas.append(c["schema"])
-
-    @classmethod
-    def _merged_fields(cls, schemas: list[str]) -> list[dict]:
-        """The TABLE schema from the batch-schema history: each
-        commit records the schema of ITS batch, so the table schema
-        is the UNION in first-seen field order. r10 (found by the
-        column-mapping model test): every consumer that read
-        ``schemas[-1]`` as "the table schema" silently forgot evolved
-        columns the moment a narrower batch landed — for ``_conform``
-        that was a real DATA-LOSS bug (a DELETE rewriting a wide file
-        after a narrow append nulled the survivors' evolved columns).
-
-        Same-name type conflicts resolve to the WIDER type when the
-        pair is an upcast (type widening: a ``widen_type`` commit
-        must not be reverted by a later batch that still carries the
-        narrow type), newest otherwise."""
-        order: dict[str, dict] = {}
-        for s in schemas:
-            for f in json.loads(s)["fields"]:
-                prev = order.get(f["name"])
-                if prev is not None and prev["type"] != f["type"]:
-                    a = cls._JSON_TO_SIMPLE.get(
-                        prev["type"]
-                    ) if isinstance(prev["type"], str) else None
-                    b = cls._JSON_TO_SIMPLE.get(
-                        f["type"]
-                    ) if isinstance(f["type"], str) else None
-                    if a and b and (b, a) in cls._UPCASTS:
-                        continue  # prev is wider — keep it
-                order[f["name"]] = f  # keeps first-seen position
-        return list(order.values())
 
     # widenings the Spark 4 parquet reader handles per-file against
     # a requested schema (probed in this container; note bigint ->
@@ -2431,7 +1931,7 @@ class TransactionalLake:
         _files, schemas, read_v, _dvs = self._snapshot_state()
         if not schemas:
             raise ValueError("no committed schema (write data first)")
-        fields = self._merged_fields(schemas)
+        fields = logcore.merged_fields(schemas)
         by = {f["name"]: f for f in fields}
         if phys not in by:
             raise ValueError(f"no such column: {column!r}")
@@ -2496,7 +1996,7 @@ class TransactionalLake:
         committed contract."""
         if not schemas:
             return df
-        fields = self._merged_fields(schemas)
+        fields = logcore.merged_fields(schemas)
         from pyspark.sql.types import StructField, StructType
 
         have = dict(df.dtypes)
@@ -2516,20 +2016,8 @@ class TransactionalLake:
             *[F.col(c) for c in keep if c in have],
         )
 
-    # widenings Spark's store-assignment (ANSI) policy treats as
-    # implicit and lossless-enough: value-preserving integral chains
-    # plus integral/float promotion into double. Everything else
-    # (narrowing, string<->numeric, temporal<->anything) must fail
-    # loudly rather than silently evolve or null-out the column.
-    _UPCASTS = {
-        ("tinyint", "smallint"), ("tinyint", "int"), ("tinyint", "bigint"),
-        ("tinyint", "float"), ("tinyint", "double"),
-        ("smallint", "int"), ("smallint", "bigint"),
-        ("smallint", "float"), ("smallint", "double"),
-        ("int", "bigint"), ("int", "double"),
-        ("bigint", "double"),
-        ("float", "double"),
-    }
+    # implicit widenings on the write path (see logcore.UPCASTS)
+    _UPCASTS = logcore.UPCASTS
 
     def _cast_to_committed(self, df: DataFrame, schemas: list[str]) -> DataFrame:
         """Cast df's columns to the committed field types (Delta's
@@ -2542,7 +2030,7 @@ class TransactionalLake:
         if not schemas:
             return df
         committed = {
-            f["name"]: f for f in self._merged_fields(schemas)
+            f["name"]: f for f in logcore.merged_fields(schemas)
         }
         from pyspark.sql.types import StructField, StructType
 
@@ -2799,24 +2287,32 @@ class TransactionalLake:
         concurrent writers — every call folds in whatever new commits
         exist on disk before answering. A cold cache (fresh handle on
         an old table) seeds from the latest checkpoint's txn index
-        instead of refolding the whole log."""
-        if self._txn_cache_upto < 0:
-            cp = self._latest_checkpoint()
-            if cp is not None:
+        instead of refolding the whole log. So does a warm one whose
+        next commit is gone while the head moved past it: a
+        ``vacuum_log`` deleted it, and the walk below would stop at
+        the gap for good (every later txn invisible, a replayed batch
+        committed twice); the checkpoint's txn map covers the
+        vacuumed span."""
+        upto = self._txn_cache_upto
+        if upto < 0 or (
+            not os.path.exists(
+                os.path.join(self.log_path, f"{upto + 1:08d}.json")
+            )
+            and self.version > upto
+        ):
+            cp = logcore.latest_checkpoint(self.log_path)
+            if cp is not None and cp["version"] > upto:
                 self._txn_cache = {
                     k: int(v) for k, v in cp.get("txn", {}).items()
                 }
                 self._txn_cache_upto = cp["version"]
-        for name in self._commit_files():
-            v = int(name.split(".")[0])
-            if v <= self._txn_cache_upto:
-                continue
-            t = self._read_commit(v).get("txn")
+        for c in logcore.iter_commits(self.log_path, self._txn_cache_upto + 1):
+            t = c.get("txn")
             if t:
                 self._txn_cache[t["app_id"]] = max(
                     self._txn_cache.get(t["app_id"], -1), t["version"]
                 )
-            self._txn_cache_upto = v
+            self._txn_cache_upto = c["version"]
         return self._txn_cache.get(app_id, -1)
 
     def append(
@@ -3297,7 +2793,7 @@ class TransactionalLake:
         self._check_read_bounds(predicate, read_bounds, schemas)
         to_remove: list[str] = []
         for rel in old:
-            vals = self._partition_values(rel)
+            vals = logcore.partition_values(rel)
             match = True
             for col, op, val in cons:
                 if col not in vals:
@@ -3518,21 +3014,15 @@ class TransactionalLake:
         return missing
 
     def _copy_sources(self) -> set[str]:
-        """Absolute source paths every prior copy_into loaded —
-        folded checkpoint + tail like all log-owned metadata, so
-        discovery is O(tail) even after millions of loads. The set is
-        bounded by the SOURCE tree's file count (the same state
-        Databricks' COPY INTO keeps in its RocksDB loaded-files
-        store), not by table history: vacuum_log folds it into the
-        checkpoint instead of dropping it, because forgetting a
-        loaded file would re-ingest it — the exact duplication the
-        feature exists to prevent."""
-        cp = self._latest_checkpoint()
-        out: set[str] = set(cp.get("copy_sources", [])) if cp else set()
-        start = cp["version"] + 1 if cp else 0
-        for c in self._iter_commits_after(start, None):
-            out.update(c.get("copy_sources", []))
-        return out
+        """Absolute source paths every prior copy_into loaded — a
+        read of the log fold, so discovery is O(tail) even after
+        millions of loads. The set is bounded by the SOURCE tree's
+        file count (the same state Databricks' COPY INTO keeps in its
+        RocksDB loaded-files store), not by table history: vacuum_log
+        folds it into the checkpoint instead of dropping it, because
+        forgetting a loaded file would re-ingest it — the exact
+        duplication the feature exists to prevent."""
+        return set(logcore.fold(self.log_path)["copy_sources"])
 
     def copy_into(
         self,
@@ -4253,7 +3743,7 @@ class TransactionalLake:
                 f["name"]: StructType([StructField.fromJson(f)])
                 .fields[0]
                 .dataType
-                for f in self._merged_fields(schemas)
+                for f in logcore.merged_fields(schemas)
             }
             if schemas
             else {}
@@ -4811,7 +4301,7 @@ class TransactionalLake:
             set_exprs or by_source_set or insert_values
             or any(cl.get("set") for cl in matched_clauses or ())
         ):
-            known_t = {f["name"] for f in self._merged_fields(schemas)}
+            known_t = {f["name"] for f in logcore.merged_fields(schemas)}
             for label, d in (
                 ("set_exprs", set_exprs),
                 ("by_source_set", by_source_set),
@@ -4828,7 +4318,7 @@ class TransactionalLake:
                     )
         new_cols: list[str] = []
         if schema_evolution and schemas:
-            known = {f["name"] for f in self._merged_fields(schemas)}
+            known = {f["name"] for f in logcore.merged_fields(schemas)}
             new_cols = [c for c in source.columns if c not in known]
             bad_keys = [k for k in keys if k in new_cols]
             if bad_keys:
@@ -5227,7 +4717,7 @@ class TransactionalLake:
                 rt,
             )
             df = raw.select(
-                *[f["name"] for f in self._merged_fields(schemas)],
+                *[f["name"] for f in logcore.merged_fields(schemas)],
                 rid,
                 rver,
             )
@@ -5274,7 +4764,7 @@ class TransactionalLake:
         alone (partition columns included, as committed)."""
         from pyspark.sql.types import StructType
 
-        fields = self._merged_fields(schemas)
+        fields = logcore.merged_fields(schemas)
         if not files:
             if not schemas:
                 raise ValueError("empty table: no commits")
@@ -5283,7 +4773,7 @@ class TransactionalLake:
                 [],
                 StructType.fromJson({"type": "struct", "fields": fields}),
             )
-        part = {k for f in files for k in self._partition_values(f)}
+        part = {k for f in files for k in logcore.partition_values(f)}
         read = [
             {**f, "nullable": True} for f in fields if f["name"] not in part
         ]
@@ -5342,23 +4832,18 @@ class TransactionalLake:
         could also have qualified (a partial feed would silently drop
         changes — same contract as read_changes' retention check).
         O(retained log) timestamp reads, bounded by retention."""
-        if isinstance(timestamp, str):
-            dt = datetime.fromisoformat(timestamp)
-            if dt.tzinfo is None:
-                dt = dt.replace(tzinfo=timezone.utc)
-            ts = dt.timestamp()
-        else:
-            ts = float(timestamp)
-        names = self._commit_files()
-        for name in names:
-            v = int(name.split(".")[0])
+        ts = logcore.epoch(timestamp)
+        versions = logcore.commit_versions(self.log_path)
+        for v in versions:
             try:
                 cts = float(self._read_commit(v)["timestamp"])
             except (OSError, KeyError, ValueError):
                 continue
             if cts >= ts:
-                if v == int(names[0].split(".")[0]):
-                    cp = self._latest_checkpoint(max_version=v - 1)
+                if v == versions[0]:
+                    cp = logcore.latest_checkpoint(
+                        self.log_path, max_version=v - 1
+                    )
                     if cp is not None and float(
                         cp.get("timestamp") or 0
                     ) >= ts:
@@ -5403,7 +4888,7 @@ class TransactionalLake:
         (same id deleted+inserted, same values) becomes provably a
         no-op. Ids come from the immutable per-file base map in the
         log (one broadcast join per emission, no shuffle)."""
-        names = self._commit_files()
+        versions = logcore.commit_versions(self.log_path)
         all_base: dict[str, list[int]] = {}
         if with_row_ids:
             if self._row_tracking_state() is None:
@@ -5411,30 +4896,14 @@ class TransactionalLake:
                     "read_changes(with_row_ids=True) requires "
                     "enable_row_tracking()"
                 )
-            # per-file base ranges are write-once: prefold every
-            # recorded assignment (plus the pre-log checkpoint's map)
-            # so emissions from commits BEFORE a backfilling enable
-            # still resolve
-            if names:
-                cp_rt = self._latest_checkpoint(
-                    max_version=int(names[0].split(".")[0]) - 1
-                )
-                if cp_rt and cp_rt.get("row_tracking"):
-                    all_base.update(
-                        {
-                            f: list(b)
-                            for f, b in cp_rt["row_tracking"][
-                                "base"
-                            ].items()
-                        }
-                    )
-            for name in names:
-                c0 = self._read_commit(int(name.split(".")[0]))
-                for f, bv in c0.get("row_base", {}).items():
-                    all_base[f] = list(bv)
-        oldest = int(names[0].split(".")[0]) if names else self.version + 1
-        if starting_version < oldest and starting_version <= self.version:
-            cp = self._latest_checkpoint()
+            # per-file base ranges are write-once: every recorded
+            # assignment resolves, so emissions from commits BEFORE a
+            # backfilling enable still do
+            all_base = logcore.row_bases(self.log_path)
+        head = self.version
+        oldest = versions[0] if versions else head + 1
+        if starting_version < oldest and starting_version <= head:
+            cp = logcore.latest_checkpoint(self.log_path)
             if cp is not None and starting_version <= cp["version"]:
                 # the span's commits were vacuumed: emitting a partial
                 # feed would silently drop changes — fail instead
@@ -5442,10 +4911,6 @@ class TransactionalLake:
                     f"CDC from v{starting_version} predates log "
                     f"retention (oldest retained commit: v{oldest})"
                 )
-        # running schema history, seeded from the checkpoint below the
-        # oldest retained commit: each emission reads its files with
-        # the table schema as of its commit
-        run_schemas: list[str] = []
 
         def _rt_ids(df: DataFrame, paths: list[str]) -> DataFrame:
             missing = [f for f in paths if f not in all_base]
@@ -5463,28 +4928,26 @@ class TransactionalLake:
                 .drop(*self._RT_COLS)
             )
 
-        # running DV state (as of each commit's PREDECESSOR), so a
-        # rewrite's remove-emission never re-deletes rows a deletion
-        # vector already deleted; seeded from the newest checkpoint
-        # below the oldest retained commit in case early dv commits
-        # were vacuumed
-        names = self._commit_files()
-        run_dv: dict[str, list[int]] = {}
-        if names:
-            cp0 = self._latest_checkpoint(
-                max_version=int(names[0].split(".")[0]) - 1
-            )
-            if cp0:
-                run_dv = {f: list(p) for f, p in cp0.get("dv", {}).items()}
-                run_schemas.extend(cp0.get("schemas", []))
         if ending_version is not None and ending_version < starting_version:
             raise ValueError(
                 f"CDC range invalid: ending_version {ending_version} < "
                 f"starting_version {starting_version}"
             )
+        # running table state, seeded from the checkpoint below the
+        # oldest retained commit and advanced by the log's one step
+        # (logcore.apply): each emission reads its files with the
+        # table schema as of its commit, and a rewrite's
+        # remove-emission skips rows a deletion vector had already
+        # deleted as of the commit's PREDECESSOR (``run_dv``)
+        run = logcore.state_from(
+            logcore.latest_checkpoint(
+                self.log_path, max_version=versions[0] - 1
+            )
+            if versions
+            else None
+        )
         out: DataFrame | None = None
-        for name in names:
-            v = int(name.split(".")[0])
+        for v in versions:
             if ending_version is not None and v > ending_version:
                 break  # nothing past the bound emits; folds moot
             c = self._read_commit(v)
@@ -5492,9 +4955,11 @@ class TransactionalLake:
             # pre-reset history — their delete-emission reads must
             # use it, not the restarted one (see the emission loop)
             pre_schemas = (
-                list(run_schemas) if c.get("schema_reset") else None
+                list(run["schemas"]) if c.get("schema_reset") else None
             )
-            self._fold_schemas(run_schemas, c)
+            run_dv = dict(run["dv"])
+            logcore.apply(run, c)
+            run_schemas = run["schemas"]
             emit: list[DataFrame] = []
             if v >= starting_version and c["op"] not in (
                 "compact",
@@ -5607,21 +5072,12 @@ class TransactionalLake:
                             .withColumn("_change_type", F.lit(change))
                             .withColumn("_commit_version", F.lit(v))
                         )
-            for f in c.get("remove", []):
-                run_dv.pop(f, None)
-            for f, pos in c.get("dv", {}).items():
-                run_dv[f] = sorted(set(run_dv.get(f, [])) | set(pos))
-            for f, pos in c.get("dv_reset", {}).items():
-                if pos:
-                    run_dv[f] = sorted(pos)
-                else:
-                    run_dv.pop(f, None)
             for df in emit:
                 out = df if out is None else out.unionByName(
                     df, allowMissingColumns=True
                 )
         if out is None:
-            if starting_version > self.version:
+            if starting_version > head:
                 raise ValueError("no commits at or after requested version")
             # commits exist but none changed rows (e.g. only
             # compactions): an empty CDC frame, not an error — a
@@ -5897,11 +5353,11 @@ class TransactionalLake:
             # staged files) are invisible to the log, so a periodic
             # FULL vacuum still owns those.
             candidates: set[str] = set()
-            for name in self._commit_files():  # retained log only —
-                # a vacuumed prefix's removes were handled before it
-                # was truncated (or fall to the next FULL vacuum)
-                c = self._read_commit(int(name.split(".")[0]))
-                candidates.update(c.get("remove", []))
+            # retained log only — a vacuumed prefix's removes were
+            # handled before it was truncated (or fall to the next
+            # FULL vacuum)
+            for v in logcore.commit_versions(self.log_path):
+                candidates.update(self._read_commit(v).get("remove", []))
             for rel in sorted(candidates - live_set):
                 full = os.path.join(self.path, rel)
                 try:
@@ -5938,6 +5394,20 @@ class TransactionalLake:
                     removed += 1
         return sorted(would_remove) if dry_run else removed
 
+    def _file_sizes(self, files: list[str], logged: dict) -> list[int]:
+        """Each file's logged size; a pre-feature file is stat'ed
+        (0 when gone)."""
+        out = []
+        for rel in files:
+            b = logged.get(rel)
+            if b is None:
+                try:
+                    b = os.path.getsize(os.path.join(self.path, rel))
+                except OSError:
+                    b = 0
+            out.append(b)
+        return out
+
     def detail(self) -> dict:
         """Table-level metadata snapshot (Delta ``DESCRIBE DETAIL``):
         version, layout, file count/bytes, and which enrichment
@@ -5946,32 +5416,22 @@ class TransactionalLake:
         job; sizes come from the logged per-file bytes (r11), so a
         million-file table answers without a million stat calls —
         only pre-feature files degrade to one os.stat each."""
-        files, _schemas, v, dvs = self._snapshot_state()
-        bidx = self._bytes_index(v)
-        sizes = []
-        for rel in files:
-            b = bidx.get(rel)
-            if b is None:
-                try:
-                    b = os.path.getsize(os.path.join(self.path, rel))
-                except OSError:
-                    b = 0
-            sizes.append(b)
-        stats_idx = self._stats_index()
-        bloom_idx = self._blooms_index()
+        st = logcore.fold(self.log_path)
+        files, v, dvs = st["live"], st["version"], st["dv"]
         return {
             "location": self.path,
             "version": v,
             "partition_columns": list(self.partition_by),
             "num_files": len(files),
-            "size_bytes": sum(sizes),
-            "num_files_with_stats": sum(1 for f in files if stats_idx.get(f)),
-            "num_files_with_bloom": sum(1 for f in files if bloom_idx.get(f)),
+            "size_bytes": sum(self._file_sizes(files, st["bytes"])),
+            "num_files_with_stats": sum(1 for f in files if st["stats"].get(f)),
+            "num_files_with_bloom": sum(1 for f in files if st["blooms"].get(f)),
             "num_deletion_vectors": len(dvs),
             "num_deleted_rows": sum(len(p) for p in dvs.values()),
             "checkpoint_version": (
                 cp["version"]
-                if (cp := self._latest_checkpoint()) is not None
+                if (cp := logcore.latest_checkpoint(self.log_path))
+                is not None
                 else None
             ),
             # r10: DESCRIBE DETAIL surfaces the active logical ->
@@ -6010,13 +5470,11 @@ class TransactionalLake:
         }
 
     def _created_at(self) -> float | None:
-        names = self._commit_files()
+        versions = logcore.commit_versions(self.log_path)
         oldest = (
-            self._read_commit(int(names[0].split(".")[0]))["timestamp"]
-            if names
-            else None
+            self._read_commit(versions[0])["timestamp"] if versions else None
         )
-        cp = self._latest_checkpoint()
+        cp = logcore.latest_checkpoint(self.log_path)
         if cp is not None and cp.get("timestamp") is not None:
             ts = cp["timestamp"]
             return min(oldest, ts) if oldest is not None else ts
@@ -6027,28 +5485,20 @@ class TransactionalLake:
         DESCRIBE DETAIL): path, size, logged stats/bloom presence,
         and deletion-vector cardinality. Built from the log fold —
         list-of-files scale, never row scale."""
-        live, _schemas, _v, dvs = self._snapshot_state()
-        stats_idx = self._stats_index()
-        bloom_idx = self._blooms_index()
-        bidx = self._bytes_index(_v)
-        rows = []
-        for rel in live:
-            size = bidx.get(rel)
-            if size is None:
-                try:
-                    size = os.path.getsize(os.path.join(self.path, rel))
-                except OSError:
-                    size = 0
-            rows.append(
-                (
-                    rel,
-                    size,
-                    sorted(stats_idx.get(rel, {})),
-                    sorted(bloom_idx.get(rel, {})),
-                    len(dvs.get(rel, [])),
-                )
+        st = logcore.fold(self.log_path)
+        live = st["live"]
+        rows = [
+            (
+                rel,
+                size,
+                sorted(st["stats"].get(rel, {})),
+                sorted(st["blooms"].get(rel, {})),
+                len(st["dv"].get(rel, [])),
             )
-        return local_df(self.spark, 
+            for rel, size in zip(live, self._file_sizes(live, st["bytes"]))
+        ]
+        return local_df(
+            self.spark,
             rows,
             "path string, size_bytes long, stats_columns array<string>, "
             "bloom_columns array<string>, deleted_rows long",
@@ -6062,7 +5512,7 @@ class TransactionalLake:
         listing the partitions of a 100 TB table costs one walk over
         the live-file list, not a distinct-scan over rows (what
         ``SELECT DISTINCT keys`` would shuffle). Values are
-        URL-DECODED by ``_partition_values``, the same parse every
+        URL-DECODED by ``logcore.partition_values``, the same parse every
         file-skipping check uses: a partition written as
         ``sym=A%20B`` lists as ``A B``, the value predicates actually
         match (Spark/Delta SHOW PARTITIONS parity). The hive NULL
@@ -6080,7 +5530,7 @@ class TransactionalLake:
         live, _schemas, _v, _dvs = self._snapshot_state()
         seen: set[tuple] = set()
         for rel in live:
-            vals = self._partition_values(rel)
+            vals = logcore.partition_values(rel)
             seen.add(tuple(vals.get(k) for k in keys))
         rows = sorted(
             seen, key=lambda t: tuple("" if v is None else v for v in t)
@@ -6101,10 +5551,10 @@ class TransactionalLake:
         inspecting the recent history of a 100k-commit log costs n
         opens, not 100k."""
         out = []
-        for n in reversed(self._commit_files()):
+        for v in reversed(logcore.commit_versions(self.log_path)):
             if limit is not None and len(out) >= limit:
                 break
-            c = self._read_commit(int(n.split(".")[0]))
+            c = self._read_commit(v)
             rows = c.get("rows", {})
             metrics = {
                 "num_added_files": len(c.get("add", [])),
@@ -6210,10 +5660,10 @@ class TransactionalLake:
             # post-widen files may physically carry it), so fields
             # the rolled-back era widened keep the wide type.
             cur_types = {
-                f["name"]: f["type"] for f in self._merged_fields(_schemas)
+                f["name"]: f["type"] for f in logcore.merged_fields(_schemas)
             }
             fields = []
-            for t in self._merged_fields(target_schemas):
+            for t in logcore.merged_fields(target_schemas):
                 wide = cur_types.get(t["name"], t["type"])
                 a, b = (
                     self._JSON_TO_SIMPLE.get(x) if isinstance(x, str) else None
@@ -6239,7 +5689,7 @@ class TransactionalLake:
             action["column_mapping"] = {
                 "cols": {
                     f["name"]: f["name"]
-                    for f in self._merged_fields(target_schemas)
+                    for f in logcore.merged_fields(target_schemas)
                 },
                 "next": cur_map["next"],
             }
@@ -6367,7 +5817,7 @@ class TransactionalLake:
             # merged union, not the last (possibly narrow) batch —
             # else the clone's later DML re-opens the data-loss bug
             action["schema"] = json.dumps(
-                {"type": "struct", "fields": self._merged_fields(schemas)}
+                {"type": "struct", "fields": logcore.merged_fields(schemas)}
             )
         if dvs:
             action["dv"] = {f: list(p) for f, p in dvs.items()}
@@ -6424,28 +5874,12 @@ class TransactionalLake:
     # CHECK constraints (Delta `ALTER TABLE ADD CONSTRAINT` parity)
     # ------------------------------------------------------------------
     def check_constraints(self, as_of: int | None = None) -> dict[str, str]:
-        """Active CHECK constraints, name -> SQL boolean expression.
-        Resolved from the newest checkpoint (which carries the folded
-        constraint set — r9: previously a vacuum_log could silently
-        drop constraints whose defining commits it deleted) plus the
-        commit tail (add minus drop, in commit order) — constraints
-        are table metadata, versioned with the log like everything
-        else. ``as_of`` caps the fold (historical clone)."""
-        cp = self._latest_checkpoint(max_version=as_of)
-        out: dict[str, str] = dict(cp.get("constraints", {})) if cp else {}
-        start = cp["version"] + 1 if cp else 0
-        for name in self._commit_files():
-            v = int(name.split(".")[0])
-            if v < start or (as_of is not None and v > as_of):
-                continue
-            c = self._read_commit(v)
-            if c.get("op") == "add_constraint":
-                out[c["constraint"]["name"]] = c["constraint"]["expr"]
-            elif c.get("op") == "drop_constraint":
-                out.pop(c["constraint"]["name"], None)
-            elif c.get("op") == "clone" and c.get("constraints"):
-                out.update(c["constraints"])
-        return out
+        """Active CHECK constraints, name -> SQL boolean expression,
+        as of ``as_of`` (head by default; a historical clone caps
+        it). Constraints are table metadata, versioned with the log
+        and carried by every checkpoint, so a vacuum_log never drops
+        them."""
+        return logcore.fold(self.log_path, as_of)["constraints"]
 
     def add_check_constraint(self, name: str, expr: str) -> int:
         """Add a CHECK constraint: every CURRENT row must satisfy
@@ -6590,20 +6024,8 @@ class TransactionalLake:
 
     def _identity_doc(self, as_of: int | None = None) -> dict | None:
         """Folded identity record ``{"column", "next"[, "step"]}`` as
-        of a version (None while undeclared) — the newest
-        checkpoint's state plus the commit tail's ``identity_next``
-        advances."""
-        cp = self._latest_checkpoint(max_version=as_of)
-        ident: dict | None = (
-            dict(cp["identity"]) if cp and cp.get("identity") else None
-        )
-        start = cp["version"] + 1 if cp else 0
-        for c in self._iter_commits_after(start, as_of):
-            if c.get("op") in ("set_identity", "clone") and c.get("identity"):
-                ident = dict(c["identity"])
-            elif ident is not None and c.get("identity_next") is not None:
-                ident["next"] = max(ident["next"], c["identity_next"])
-        return ident
+        of a version (None while undeclared)."""
+        return logcore.fold(self.log_path, as_of)["identity"]
 
     def identity_state(self, as_of: int | None = None) -> tuple[str, int] | None:
         """(column, next id) when an identity column is declared,
@@ -6695,21 +6117,7 @@ class TransactionalLake:
     def properties(self, as_of: int | None = None) -> dict[str, str]:
         """Active table properties (key -> value) as of a version
         (None = head)."""
-        cp = self._latest_checkpoint(max_version=as_of)
-        out: dict[str, str] = (
-            dict(cp.get("properties", {})) if cp else {}
-        )
-        start = cp["version"] + 1 if cp else 0
-        for c in self._iter_commits_after(start, as_of):
-            if c.get("op") == "set_properties":
-                for k, val in c["properties"].items():
-                    if val is None:
-                        out.pop(k, None)
-                    else:
-                        out[k] = val
-            elif c.get("op") == "clone" and c.get("properties"):
-                out.update(c["properties"])
-        return out
+        return logcore.fold(self.log_path, as_of)["properties"]
 
     def set_properties(self, props: dict[str, str | None]) -> int:
         """Set (value) / unset (None) table properties in ONE commit
@@ -6741,17 +6149,7 @@ class TransactionalLake:
         """Raw mapping doc ``{"cols": {logical: physical}, "next": n}``
         as of a version (None = head), or None while the feature is
         unused (every path then short-circuits to a no-op)."""
-        cp = self._latest_checkpoint(max_version=as_of)
-        doc: dict | None = (
-            json.loads(json.dumps(cp["column_mapping"]))
-            if cp and cp.get("column_mapping")
-            else None
-        )
-        start = cp["version"] + 1 if cp else 0
-        for c in self._iter_commits_after(start, as_of):
-            if c.get("column_mapping") is not None:
-                doc = c["column_mapping"]
-        return doc
+        return logcore.fold(self.log_path, as_of)["column_mapping"]
 
     def column_mapping(self, as_of: int | None = None) -> dict[str, str] | None:
         """Active logical -> physical column map (None = identity /
@@ -6769,7 +6167,7 @@ class TransactionalLake:
                 "data first)"
             )
         cols = {
-            f["name"]: f["name"] for f in self._merged_fields(schemas)
+            f["name"]: f["name"] for f in logcore.merged_fields(schemas)
         }
         return {"cols": cols, "next": 0}
 
@@ -6809,7 +6207,7 @@ class TransactionalLake:
         logical_known = (
             set(doc["cols"])
             if doc is not None
-            else {f["name"] for f in self._merged_fields(schemas)}
+            else {f["name"] for f in logcore.merged_fields(schemas)}
         )
         if name in logical_known:
             raise ValueError(f"column {name!r} already exists")
@@ -6834,7 +6232,7 @@ class TransactionalLake:
         f_json = json.loads(
             json.dumps({**field.jsonValue(), "name": phys})
         )
-        merged = self._merged_fields(schemas)
+        merged = logcore.merged_fields(schemas)
         action["schema"] = json.dumps(
             {"type": "struct", "fields": merged + [f_json]}
         )
@@ -6931,7 +6329,7 @@ class TransactionalLake:
         if doc is not None:
             keep_phys = set(doc["cols"].values())
             phys_cols = {
-                f["name"] for f in self._merged_fields(schemas)
+                f["name"] for f in logcore.merged_fields(schemas)
             }
             drop_needed = any(c not in keep_phys for c in phys_cols)
         if not drop_needed and not dvs:
@@ -7116,12 +6514,13 @@ class TransactionalLake:
         add-version history exists). Idempotent. The state folds
         through checkpoints, ``vacuum_log``, ``clone`` and
         ``restore`` like every other table-level metadata."""
-        if self._row_tracking_state() is not None:
-            return self.version  # idempotent
-        files, schemas, read_v, _dvs = self._snapshot_state()
+        st = logcore.fold(self.log_path)
+        if st["row_tracking"] is not None:
+            return st["version"]  # idempotent
+        files, schemas, read_v = st["live"], st["schemas"], st["version"]
         if schemas:
             bad = {
-                f["name"] for f in self._merged_fields(schemas)
+                f["name"] for f in logcore.merged_fields(schemas)
             } & set(self._RT_COLS)
             if bad:
                 raise ValueError(
@@ -7129,7 +6528,7 @@ class TransactionalLake:
                     f"{sorted(bad)} collide with the reserved "
                     "row-tracking physical names"
                 )
-        rows = self._rows_index(read_v) if files else {}
+        rows = st["rows"]
         base: dict[str, list[int]] = {}
         hw = 0
         for f in files:
@@ -7154,84 +6553,12 @@ class TransactionalLake:
             read_version=read_v,
         )
 
-    def _iter_commits_after(self, start: int, as_of: int | None = None):
-        """Commit dicts for versions in ``[start, as_of or head]``,
-        in order. HEAD reads (``as_of=None``) walk version numbers
-        directly from ``start`` until the first missing file —
-        O(tail) with NO directory listing (commit files are
-        contiguous from the retention floor to the head, and the
-        latest checkpoint's tail always starts at or above the
-        floor). r11: the 1000-commit probe showed the per-op
-        listdir + name-parse loop was the one metadata cost that
-        grew with log length (~9x wall at 10x commits) even though
-        the file OPENS were already flat. Time-travel reads keep
-        the listing path: with a vacuumed prefix, a historical
-        target's tail may start below the retention floor and the
-        gap must surface through the callers' guards, not as
-        silent emptiness."""
-        if as_of is None:
-            v = start
-            while True:
-                try:
-                    c = self._read_commit(v)
-                except FileNotFoundError:
-                    return
-                yield c
-                v += 1
-        else:
-            # bounded reads walk directly too: retained commits are
-            # contiguous [floor, head], so only a vacuumed PREFIX
-            # (start below the floor) needs the listing fallback —
-            # detected by the very first read missing
-            v = start
-            first = True
-            while v <= as_of:
-                try:
-                    c = self._read_commit(v)
-                except FileNotFoundError:
-                    if first:
-                        for name in self._commit_files():
-                            w = int(name.split(".")[0])
-                            if start <= w <= as_of:
-                                yield self._read_commit(w)
-                    return
-                first = False
-                yield c
-                v += 1
-
     def _row_tracking_state(self, as_of: int | None = None) -> dict | None:
-        """``{"high_water": int, "base": {file: [base, default_ver]}}``
-        when row tracking is enabled (as of ``as_of``), else None.
-        Newest checkpoint's folded state plus the commit tail — the
-        same fold shape as :meth:`identity_state`, so ``vacuum_log``
-        can never drop it."""
-        cp = self._latest_checkpoint(max_version=as_of)
-        state: dict | None = (
-            {
-                "high_water": int(cp["row_tracking"]["high_water"]),
-                "base": {
-                    f: list(b)
-                    for f, b in cp["row_tracking"]["base"].items()
-                },
-            }
-            if cp and cp.get("row_tracking")
-            else None
-        )
-        start = cp["version"] + 1 if cp else 0
-        for c in self._iter_commits_after(start, as_of):
-            if c.get("row_tracking") is not None and state is None:
-                state = {"high_water": 0, "base": {}}
-            if state is None:
-                continue
-            for f in c.get("remove", []):
-                state["base"].pop(f, None)
-            for f, bv in c.get("row_base", {}).items():
-                state["base"][f] = list(bv)
-            if c.get("row_high_water") is not None:
-                state["high_water"] = max(
-                    state["high_water"], int(c["row_high_water"])
-                )
-        return state
+        """``{"enabled": True, "high_water": int, "base": {file:
+        [base, default_ver]}}`` for the live files when row tracking
+        is enabled (as of ``as_of``), else None. Checkpoints carry
+        it, so ``vacuum_log`` can never drop it."""
+        return logcore.fold(self.log_path, as_of)["row_tracking"]
 
     def row_tracking(self) -> dict | None:
         """Public view: ``{"enabled": True, "high_water": N}`` or
@@ -7400,17 +6727,7 @@ class TransactionalLake:
         """The table's recorded feature set (empty for plain
         tables / pre-feature logs). Cumulative per commit, so the
         newest commit at-or-before ``as_of`` carries the answer."""
-        for name in reversed(self._commit_files()):
-            v = int(name.split(".")[0])
-            if as_of is not None and v > as_of:
-                continue
-            c = self._read_commit(v)
-            if "features" in c:
-                return sorted(c["features"])
-        cp = self._latest_checkpoint(max_version=as_of)
-        if cp is not None and cp.get("features"):
-            return sorted(cp["features"])
-        return []
+        return logcore.fold(self.log_path, as_of)["features"]
 
     def _check_features(self) -> None:
         unsupported = (
@@ -7632,19 +6949,10 @@ class TransactionalLake:
         ``version_analyzed`` tells the consumer how stale it is —
         the freshness decision belongs to the caller, like Spark's
         CBO treats catalog stats."""
-        cp = self._latest_checkpoint(max_version=as_of)
-        stats: dict | None = (
-            json.loads(json.dumps(cp["table_stats"]))
-            if cp and cp.get("table_stats")
-            else None
-        )
-        start = cp["version"] + 1 if cp else 0
-        for c in self._iter_commits_after(start, as_of):
-            if c.get("table_stats") is not None:
-                stats = c["table_stats"]
+        st = logcore.fold(self.log_path, as_of)
+        stats, doc = st["table_stats"], st["column_mapping"]
         if stats is None:
             return None
-        doc = self._column_mapping_doc(as_of=as_of)
         inv = (
             {p: lg for lg, p in doc["cols"].items()}
             if doc is not None
@@ -7697,7 +7005,7 @@ class TransactionalLake:
             return None
         head = self.version
         seen = 0
-        for c in self._iter_commits_after(analyzed + 1):
+        for c in logcore.iter_commits(self.log_path, analyzed + 1):
             seen += 1
             if c.get("op") not in self._ROWCOUNT_PRESERVING_OPS:
                 return None
@@ -7878,17 +7186,7 @@ class TransactionalLake:
     # ------------------------------------------------------------------
     def column_defaults(self, as_of: int | None = None) -> dict[str, str]:
         """Active defaults, PHYSICAL column -> SQL expression."""
-        cp = self._latest_checkpoint(max_version=as_of)
-        out: dict[str, str] = dict(cp.get("defaults", {})) if cp else {}
-        start = cp["version"] + 1 if cp else 0
-        for c in self._iter_commits_after(start, as_of):
-            if c.get("defaults"):
-                for k, v in c["defaults"].items():
-                    if v is None:
-                        out.pop(k, None)
-                    else:
-                        out[k] = v
-        return out
+        return logcore.fold(self.log_path, as_of)["defaults"]
 
     def set_column_default(self, column: str, expr: str) -> int:
         """Declare a DEFAULT for ``column`` (logical name): future
@@ -7908,7 +7206,7 @@ class TransactionalLake:
         known = (
             set(doc["cols"])
             if doc is not None
-            else {f["name"] for f in self._merged_fields(schemas)}
+            else {f["name"] for f in logcore.merged_fields(schemas)}
         )
         if column not in known:
             raise ValueError(f"unknown column: {column!r}")
@@ -7954,7 +7252,7 @@ class TransactionalLake:
         if not defaults:
             return df
         committed = (
-            {f["name"]: f for f in self._merged_fields(schemas)}
+            {f["name"]: f for f in logcore.merged_fields(schemas)}
             if schemas
             else {}
         )
@@ -7987,47 +7285,14 @@ class TransactionalLake:
     # stats/blooms/partitioning, they survive renames); the rewrite
     # uses the same range layout as Z-order so per-file stats skip.
     # ------------------------------------------------------------------
-    @staticmethod
-    def _fold_clustering(state: dict | None, c: dict) -> dict | None:
-        """Fold one commit into the clustering state
-        ``{"cols": [physical], "clustered": {file, ...}}`` (None =
-        feature unused). A ``clustering`` commit key REPLACES the
-        state (set/unset/clone/restore — changing the key resets the
-        clustered set: files laid out for the old key don't satisfy
-        the new one); file adds join the clustered set only when the
-        commit is flagged ``clustered_add``; removed files drop out."""
-        if c.get("clustering") is not None:
-            cl = c["clustering"]
-            if not cl.get("cols"):
-                return None
-            state = {
-                "cols": list(cl["cols"]),
-                "clustered": set(cl.get("clustered", [])),
-            }
-        if state is None:
-            return None
-        for f in c.get("remove", []):
-            state["clustered"].discard(f)
-        if c.get("clustered_add"):
-            state["clustered"].update(c.get("add", []))
-        return state
-
     def _clustering_state(self, as_of: int | None = None) -> dict | None:
-        """Folded clustering state as of a version (checkpoint +
-        tail, same retention-proof shape as identity/mapping)."""
-        cp = self._latest_checkpoint(max_version=as_of)
-        state: dict | None = (
-            {
-                "cols": list(cp["clustering"]["cols"]),
-                "clustered": set(cp["clustering"]["clustered"]),
-            }
-            if cp and cp.get("clustering")
-            else None
-        )
-        start = cp["version"] + 1 if cp else 0
-        for c in self._iter_commits_after(start, as_of):
-            state = self._fold_clustering(state, c)
-        return state
+        """Clustering state ``{"cols": [physical], "clustered": {live
+        file, ...}}`` as of a version, or None while the feature is
+        unused (see :func:`logcore.apply` for its rules)."""
+        cl = logcore.fold(self.log_path, as_of)["clustering"]
+        if cl is None:
+            return None
+        return {"cols": cl["cols"], "clustered": set(cl["clustered"])}
 
     def set_clustering(self, columns) -> int:
         """Declare (or with an empty tuple, drop) the table's
@@ -8048,7 +7313,7 @@ class TransactionalLake:
             known = (
                 set(doc["cols"])
                 if doc is not None
-                else {f["name"] for f in self._merged_fields(schemas)}
+                else {f["name"] for f in logcore.merged_fields(schemas)}
             )
             unknown = [c for c in cols if c not in known]
             if unknown:

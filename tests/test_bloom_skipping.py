@@ -115,6 +115,32 @@ class TestBloomPruning:
         assert (len(kept), total) == (1, 1)  # conservative keep
 
 
+    def test_mistyped_probe_keeps_files(self, spark, tmp_path):
+        """A bloom hashes the value's canonical string, but Spark
+        casts a mistyped literal: ``s = 5`` on a string column
+        matches '05'. A probe runs only for a value of the column's
+        own type; the others keep the file."""
+        lake = TransactionalLake(
+            spark,
+            str(tmp_path / "typed"),
+            partition_by=(),
+            bloom_columns=("s",),
+        )
+        for vals in (("05", "07"), ("11", "13")):
+            lake.append(
+                spark.createDataFrame([(v,) for v in vals], "s string")
+                .coalesce(1)
+            )
+        want = sorted(r.s for r in lake.snapshot().filter("s = 5").collect())
+        assert want == ["05"]
+        got = lake.scan_between({}, equals={"s": 5}).collect()
+        assert sorted(r.s for r in got) == want
+        # a value of the column's own type still prunes by bloom:
+        # '06' lies inside the first file's [min, max]
+        kept, total, _ = lake.prune_files({}, equals={"s": "06"})
+        assert (len(kept), total) == (0, 2)
+
+
 class TestBloomLifecycle:
     def test_blooms_survive_checkpoint_and_vacuum(self, spark, tmp_path):
         lake = _make_lake(spark, tmp_path, checkpoint_every=2)

@@ -10,6 +10,7 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from market_data_lakehouse_spark import logcore
 from market_data_lakehouse_spark.lakehouse import DataLakehouse
 from market_data_lakehouse_spark.txnlog import TransactionalLake
 
@@ -164,14 +165,14 @@ def test_txn_append_idempotent_on_replay(spark, tmp_path):
     assert tx.last_txn_version("other") == -1
 
 
-def test_commit_version_file_is_put_if_absent(spark, tmp_path):
+def test_commit_version_file_is_put_if_absent(spark, tmp_path, monkeypatch):
     """Two writers racing to the same version number: exactly one
     commit file survives; the loser's link() must fail (not replace
     the winner's commit) and a blind append then RETRIES at the next
     version — a lost race on a pure append is always safe to redo."""
     tx = TransactionalLake(spark, str(tmp_path / "txrace"), partition_by=())
     tx.append(spark.createDataFrame([(1,)], "id long"))
-    stale = tx._commit_files()
+    stale = logcore.commit_versions(tx.log_path)
     target = os.path.join(tx.log_path, f"{tx.version + 1:08d}.json")
     with open(target, "w") as fh:  # winner's commit lands first
         json.dump({"version": tx.version + 1, "timestamp": 0.0,
@@ -179,14 +180,15 @@ def test_commit_version_file_is_put_if_absent(spark, tmp_path):
     # loser sees the pre-winner log exactly once (the TOCTOU window):
     # its link() to the same version file fails, then the retry
     # re-resolves the log and lands at the next free version
-    real_listing, seen = tx._commit_files, {"n": 0}
+    real_listing, seen = logcore.commit_versions, {"n": 0}
 
-    def stale_once():
+    def stale_once(log_path):
         seen["n"] += 1
-        return stale if seen["n"] == 1 else real_listing()
+        return stale if seen["n"] == 1 else real_listing(log_path)
 
-    tx._commit_files = stale_once
+    monkeypatch.setattr(logcore, "commit_versions", stale_once)
     v = tx._commit({"op": "append", "add": []})
+    assert seen["n"] > 1  # the stale listing was read, then the fresh one
     assert v == 2  # retried past the winner's version, no error
     with open(target) as fh:  # winner's content untouched
         assert json.load(fh)["timestamp"] == 0.0
@@ -251,6 +253,25 @@ def test_null_text_doc_gets_fallback_shingle(spark):
         by_doc.setdefault(r.doc_id, []).append(r.s)
     assert by_doc[1] == [""]  # NULL text -> whole-text fallback
     assert "a b c" in by_doc[2]
+
+
+def test_shingle_slots_type_is_pinned(spark):
+    """The long- and short-document branches unify only if arrays_zip
+    yields exactly the struct the short branch builds; the cast pins
+    that type instead of relying on Spark's field naming."""
+    from market_data_lakehouse_spark.queries.dedup import _shingle_slots
+
+    docs = spark.createDataFrame(
+        [("a b c d",), ("a b",)], "text string"
+    ).select(_shingle_slots().alias("zz"))
+    assert docs.schema["zz"].dataType.simpleString() == (
+        "array<struct<0:string,1:string,2:string>>"
+    )
+    rows = [[tuple(x) for x in r.zz] for r in docs.collect()]
+    assert rows == [
+        [("a", "b", "c"), ("b", "c", "d")],
+        [("a b", None, None)],
+    ]
 
 
 def test_knn_id_columns_are_long(spark):

@@ -4,6 +4,9 @@ version; delete-bearing commits fail loudly unless opted into."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -356,6 +359,34 @@ class TestMergedStreamSchema:
         vals = {r.k: r.x for r in got.collect()}
         assert vals == {1: 100, 2: None}, vals
 
+    def test_overwrite_resets_stream_schema(self, spark, tmp_path):
+        """An overwrite restarts the schema history (schema_reset):
+        the stream schema follows snapshot(), not the union of the
+        pre-overwrite batches."""
+        register_lake_changes_source(spark)
+        lake = TransactionalLake(
+            spark, str(tmp_path / "ow"), partition_by=()
+        )
+        lake.append(
+            spark.createDataFrame(
+                [(1, 10.0, 100)], "k long, price double, x long"
+            )
+        )
+        lake.overwrite(
+            spark.createDataFrame([(2, 20.0)], "k long, price double")
+        )
+        assert lake.snapshot().columns == ["k", "price"]
+        got = _drain(
+            spark,
+            lake.path,
+            str(tmp_path / "out"),
+            str(tmp_path / "ck"),
+            ignore_deletes="true",
+            starting_version="1",
+        )
+        assert got.columns == ["k", "price", "_commit_version"]
+        assert [(r.k, r.price) for r in got.collect()] == [(2, 20.0)]
+
 
 class TestRowIdStream:
     """r10: with_row_ids=true — row lineage in the stream. Ids are
@@ -404,6 +435,35 @@ class TestRowIdStream:
         # the rewritten file streams every surviving row under its
         # ORIGINAL id (materialized through the rewrite)
         assert {r["_row_id"]: r.k for r in got.collect()} == before
+
+    def test_ids_from_multipart_checkpoint(self, spark, tmp_path):
+        """The newest checkpoint is multipart, so its root carries no
+        row-tracking bases: the stream must reassemble the parts,
+        like every other log read."""
+        register_lake_changes_source(spark)
+        path = str(tmp_path / "rtp")
+        lake = TransactionalLake(spark, path, partition_by=())
+        lake.set_properties({"checkpoint.partSize": "1"})
+        for lo in (0, 3, 6):
+            lake.append(_rows(spark, lo, lo + 3).coalesce(1))
+        lake.enable_row_tracking()
+        lake.checkpoint()
+        with open(
+            os.path.join(path, "_txn_log", f"{lake.version:08d}.checkpoint")
+        ) as fh:
+            root = json.load(fh)
+        assert root["parts"] == 3 and root["row_tracking"]["base"] == {}
+        got = _drain(
+            spark, path, str(tmp_path / "out"), str(tmp_path / "ck"),
+            with_row_ids="true",
+        )
+        stream_ids = {r["_row_id"]: r.k for r in got.collect()}
+        snap_ids = {
+            r["_row_id"]: r.k
+            for r in lake.snapshot(with_row_ids=True).collect()
+        }
+        assert len(snap_ids) == 9
+        assert stream_ids == snap_ids
 
     def test_requires_tracking(self, spark, tmp_path):
         register_lake_changes_source(spark)

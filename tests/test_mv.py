@@ -150,6 +150,21 @@ class TestExactlyOnce:
         reopened.refresh()
         _assert_equiv(reopened, src)
 
+    def test_refresh_after_state_log_vacuum(self, spark, src, mv):
+        """Vacuuming the state table's log must not make the view's
+        long-lived handle forget what it folded: a stale
+        last_folded_version would re-fold the span and double-count."""
+        src.append(_rows(spark, 0, 30))
+        mv.refresh()
+        src.append(_rows(spark, 30, 45))
+        mv.refresh()
+        mv.state.checkpoint()
+        mv.state.vacuum_log()
+        assert mv.last_folded_version == src.version
+        src.append(_rows(spark, 45, 60))
+        mv.refresh()
+        _assert_equiv(mv, src)
+
 
 class TestContract:
     def test_nonlinear_agg_rejected(self, spark, src, tmp_path):

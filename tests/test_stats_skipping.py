@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from market_data_lakehouse_spark import logcore
 from market_data_lakehouse_spark.txnlog import TransactionalLake
 
 
@@ -44,8 +45,8 @@ class TestStatsCollection:
         lake.update_where("k = 5", {"price": "price * 2"})
         lake.delete_where("k = 250")
         lake.optimize()
-        for name in lake._commit_files():
-            c = lake._read_commit(int(name.split(".")[0]))
+        for v in logcore.commit_versions(lake.log_path):
+            c = lake._read_commit(v)
             if c.get("add"):
                 assert c.get("stats"), f"add-commit without stats: {c['op']}"
 
@@ -211,6 +212,33 @@ def test_date_against_time_spelled_bound_keeps_rows(
         lk.delete_where(pred)
         left = sorted(str(r.d) for r in lk.snapshot().collect())
         assert left == sorted(set(before) - set(matching))
+
+
+@pytest.mark.parametrize("op", ["scan", "delete"])
+def test_fractional_string_bound_on_int_column_keeps_rows(
+    spark, tmp_path, op
+):
+    """With ANSI off Spark casts the quoted bound '5.5' to the int 5,
+    so ``i >= '5.5'`` matches 5: the file holding it must not be
+    skipped by the exact compare 5 < 5.5."""
+    key = "spark.sql.ansi.enabled"
+    was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        lk = TransactionalLake(spark, str(tmp_path / "i"), partition_by=())
+        lk.append(spark.createDataFrame([(3,), (5,)], "i int").coalesce(1))
+        lk.append(spark.createDataFrame([(9,)], "i int").coalesce(1))
+        pred = "i >= '5.5'"
+        matching = sorted(r.i for r in lk.snapshot().filter(pred).collect())
+        assert matching == [5, 9]
+        if op == "scan":
+            got = lk.scan_between({"i": ("5.5", None)}).collect()
+            assert sorted(r.i for r in got) == matching
+        else:
+            lk.delete_where(pred)
+            assert [r.i for r in lk.snapshot().collect()] == [3]
+    finally:
+        spark.conf.set(key, was)
 
 
 def test_stats_unextractable_type_degrades_not_fails(spark, tmp_path):

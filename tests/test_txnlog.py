@@ -660,6 +660,28 @@ class TestSkipEmptyAppend:
         )
         assert fresh.last_txn_version("app") == 7
 
+    def test_warm_handle_reseeds_after_log_vacuum(self, spark, tmp_path):
+        """A handle whose txn memo stops below a vacuumed span must
+        reseed from the checkpoint, not stall at the deleted commit:
+        a stalled memo hides every later txn, so a replayed batch
+        commits twice."""
+        from market_data_lakehouse_spark.txnlog import TransactionalLake
+
+        lake = TransactionalLake(spark, str(tmp_path / "wv"), partition_by=())
+        lake.append(_df(spark, [("AAPL", 150)]), txn=("app", 1))
+        assert lake.last_txn_version("app") == 1  # memo now at v0
+        lake.append(_df(spark, [("MSFT", 300)]), txn=("app", 2))
+        lake.checkpoint()
+        lake.vacuum_log()  # deletes v0 and v1, the memo's next commit
+        head = lake.version
+        # txn 2 now lives only in the checkpoint's txn map
+        assert lake.append(_df(spark, [("MSFT", 300)]), txn=("app", 2)) == head
+        v = lake.append(_df(spark, [("IBM", 100)]), txn=("app", 3))
+        assert lake.append(_df(spark, [("IBM", 100)]), txn=("app", 3)) == v
+        assert lake.version == v
+        assert lake.last_txn_version("app") == 3
+        assert lake.snapshot().count() == 3
+
 
 class TestConstraintRestoreInteraction:
     def test_constraints_survive_restore(self, spark, lake):
