@@ -134,25 +134,22 @@ def main() -> None:
     print("asof:", enriched.collect())
 
     # --- incremental materialized view over the CDC feed ---------------
-    from market_data_lakehouse_spark.views import VwapView
-
-    ticks = spark.createDataFrame(
-        [("AAPL", 100.0, 10), ("AAPL", 110.0, 10)],
-        "symbol string, price double, volume long",
-    )
-    tick_lake = TransactionalLake(spark, f"{root}/ticks", partition_by=())
-    tick_lake.append(ticks)
-    view = VwapView(tick_lake, f"{root}/vwap_view")
-    view.refresh()  # folds only new commits on subsequent calls
-    print("view:", view.read().collect())
-
-    # large-cardinality tier: state is itself a TransactionalLake and
-    # a refresh MERGEs only the files holding affected groups
+    # the state is itself a TransactionalLake, and a refresh MERGEs the
+    # folded delta into it. VWAP is a ratio of two maintained sums: the
+    # tick lake generates notional = price * volume on every write
     from market_data_lakehouse_spark.mv import IncrementalAggView
 
+    tick_lake = TransactionalLake(
+        spark, f"{root}/ticks", partition_by=(),
+        generated_columns={"notional": "price * volume"},
+    )
+    tick_lake.append(spark.createDataFrame(
+        [("AAPL", 100.0, 10), ("AAPL", 110.0, 10)],
+        "symbol string, price double, volume long",
+    ))
     agg = IncrementalAggView(
         spark, tick_lake, f"{root}/tick_agg",
-        group_by=["symbol"], sum_cols=["volume"],
+        group_by=["symbol"], sum_cols=["notional", "volume"],
     )
     agg.refresh()
     tick_lake.append(
@@ -161,8 +158,11 @@ def main() -> None:
         )
     )
     agg.refresh()  # folds ONLY the new commit
-    print("incremental agg:", sorted(
-        (r.symbol, r.n_rows, r.sum_volume) for r in agg.view().collect()
+    print("incremental vwap:", sorted(
+        (r.symbol, r.n_rows, r.sum_volume, r.vwap)
+        for r in agg.view().withColumn(
+            "vwap", F.try_divide("sum_notional", "sum_volume")
+        ).collect()
     ))
 
     # --- stats-in-log file skipping ------------------------------------

@@ -33,18 +33,12 @@ recompute parity), reclaimed by an ordinary ``delete_where``.
 
 Only LINEAR aggregates are self-maintainable under deletes: count,
 sum, and anything derived from them (avg = sum / non-null count).
-min/max would need per-group recomputation on delete and are
-rejected loudly rather than silently mis-maintained.
-
-Relation to :mod:`market_data_lakehouse_spark.views` (AdditiveView /
-VwapView): that is the LIGHTWEIGHT tier — plain-parquet state with an
-atomic dir+meta swap, full state rewritten per refresh — right for
-small key cardinality (per-symbol VWAP: thousands of keys, rewrite is
-trivial). This class is the SCALE tier: when the group cardinality is
-itself large (per-user, per-document aggregates — millions of
-groups), rewriting all of state per refresh is the bottleneck, and
-the MERGE here touches only the state files containing affected
-groups. Pick by key cardinality.
+min/max are not invertible, so ``minmax_cols`` maintains them by
+recomputing exactly the groups a delete touched. A ratio of sums
+derives at read time from its partials: for VWAP, declare
+``notional = price * volume`` as a generated column on the source,
+maintain ``sum_cols=["notional", "volume"]`` and read
+``sum_notional / sum_volume``.
 """
 
 from __future__ import annotations
@@ -87,16 +81,7 @@ class IncrementalAggView:
         group_by: list[str] | tuple[str, ...],
         sum_cols: list[str] | tuple[str, ...] = (),
         minmax_cols: list[str] | tuple[str, ...] = (),
-        aggs: dict[str, str] | None = None,
     ) -> None:
-        if aggs:
-            bad = {f for f in aggs.values() if f not in ("sum", "count")}
-            if bad:
-                raise ValueError(
-                    f"aggregates {sorted(bad)} are not purely incremental "
-                    "under deletes; use count/sum here (avg derives), and "
-                    "minmax_cols for min/max hybrid maintenance"
-                )
         self.spark = spark
         self.source = source
         self.group_by = list(group_by)
@@ -126,11 +111,9 @@ class IncrementalAggView:
         start = self.last_folded_version + 1
         if end < start:
             return end
-        ch = self.source.read_changes(start).filter(
-            # a writer racing this refresh may commit while we read;
-            # bound the fold to the span we will record as folded
-            F.col("_commit_version") <= F.lit(end)
-        )
+        # a writer racing this refresh may commit while we read;
+        # bound the feed to the span we will record as folded
+        ch = self.source.read_changes(start, ending_version=end)
         sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
             F.lit(-1)
         )

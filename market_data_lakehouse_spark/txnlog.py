@@ -4933,21 +4933,24 @@ class TransactionalLake:
                 f"CDC range invalid: ending_version {ending_version} < "
                 f"starting_version {starting_version}"
             )
-        # running table state, seeded from the checkpoint below the
-        # oldest retained commit and advanced by the log's one step
-        # (logcore.apply): each emission reads its files with the
-        # table schema as of its commit, and a rewrite's
-        # remove-emission skips rows a deletion vector had already
-        # deleted as of the commit's PREDECESSOR (``run_dv``)
+        # running table state, seeded from the newest checkpoint
+        # before the span and advanced by the log's one step
+        # (logcore.apply), so the cost is O(span), not O(retained
+        # log): each emission reads its files with the table schema
+        # as of its commit, and a rewrite's remove-emission skips
+        # rows a deletion vector had already deleted as of the
+        # commit's PREDECESSOR (``run_dv``)
         run = logcore.state_from(
             logcore.latest_checkpoint(
-                self.log_path, max_version=versions[0] - 1
+                self.log_path, max_version=starting_version - 1
             )
-            if versions
+            if starting_version > 0
             else None
         )
         out: DataFrame | None = None
         for v in versions:
+            if v <= run["version"]:
+                continue
             if ending_version is not None and v > ending_version:
                 break  # nothing past the bound emits; folds moot
             c = self._read_commit(v)
@@ -5015,35 +5018,19 @@ class TransactionalLake:
                         df.withColumn("_change_type", F.lit(change))
                         .withColumn("_commit_version", F.lit(v))
                     )
+                # positional emissions: this commit's newly-deleted
+                # rows (a clone's vectors carry state, not new
+                # deletions), then a restore SURVIVOR's vector diff —
+                # positions newly hidden are deletes, positions
+                # cleared are (re-)inserts. Re-ADDED files are covered
+                # by the add-emission above.
+                positional: list[tuple[dict, str]] = []
                 if c.get("dv") and c["op"] != "clone":
-                    # positional delete: emit exactly this commit's
-                    # newly-deleted rows (a clone's vectors carry
-                    # state, not new deletions)
-                    dvp = self._dv_join(
-                        self._read_files(
-                            list(c["dv"]),
-                            run_schemas,
-                            positions=True,
-                            keep_rt=with_row_ids,
-                        ),
-                        c["dv"],
-                        "left_semi",
-                    )
-                    if with_row_ids:
-                        dvp = _rt_ids(dvp, list(c["dv"]))
-                    emit.append(
-                        dvp.drop("_row_file", "_row_pos")
-                        .withColumn("_change_type", F.lit("delete"))
-                        .withColumn("_commit_version", F.lit(v))
-                    )
+                    positional.append((c["dv"], "delete"))
                 added_set = set(c.get("add", []))
                 hidden: dict[str, list[int]] = {}
                 unhidden: dict[str, list[int]] = {}
                 for f, pos in c.get("dv_reset", {}).items():
-                    # a restore SURVIVOR's vector diff is a row-exact
-                    # change: positions newly hidden are deletes,
-                    # positions cleared are (re-)inserts. Re-ADDED
-                    # files are covered by the add-emission above.
                     if f in added_set:
                         continue
                     before = set(run_dv.get(f, []))
@@ -5052,26 +5039,27 @@ class TransactionalLake:
                         hidden[f] = sorted(after - before)
                     if before - after:
                         unhidden[f] = sorted(before - after)
-                for dv_map, change in ((hidden, "delete"),
-                                       (unhidden, "insert")):
-                    if dv_map:
-                        rp = self._dv_join(
-                            self._read_files(
-                                list(dv_map),
-                                run_schemas,
-                                positions=True,
-                                keep_rt=with_row_ids,
-                            ),
-                            dv_map,
-                            "left_semi",
-                        )
-                        if with_row_ids:
-                            rp = _rt_ids(rp, list(dv_map))
-                        emit.append(
-                            rp.drop("_row_file", "_row_pos")
-                            .withColumn("_change_type", F.lit(change))
-                            .withColumn("_commit_version", F.lit(v))
-                        )
+                positional += [(hidden, "delete"), (unhidden, "insert")]
+                for dv_map, change in positional:
+                    if not dv_map:
+                        continue
+                    rp = self._dv_join(
+                        self._read_files(
+                            list(dv_map),
+                            run_schemas,
+                            positions=True,
+                            keep_rt=with_row_ids,
+                        ),
+                        dv_map,
+                        "left_semi",
+                    )
+                    if with_row_ids:
+                        rp = _rt_ids(rp, list(dv_map))
+                    emit.append(
+                        rp.drop("_row_file", "_row_pos")
+                        .withColumn("_change_type", F.lit(change))
+                        .withColumn("_commit_version", F.lit(v))
+                    )
             for df in emit:
                 out = df if out is None else out.unionByName(
                     df, allowMissingColumns=True

@@ -167,13 +167,6 @@ class TestExactlyOnce:
 
 
 class TestContract:
-    def test_nonlinear_agg_rejected(self, spark, src, tmp_path):
-        with pytest.raises(ValueError, match="min"):
-            IncrementalAggView(
-                spark, src, str(tmp_path / "mv2"), group_by=["grp"],
-                aggs={"m": "min"},
-            )
-
     def test_view_before_refresh_raises(self, spark, src, mv):
         with pytest.raises(ValueError, match="refresh"):
             mv.view()
@@ -355,3 +348,137 @@ class TestNullGroupKeys:
         src.append(_rows(spark, 10, 16))
         mv.refresh()
         _assert_equiv(mv, src)
+
+
+def _ticks(spark, rows):
+    return spark.createDataFrame(
+        [(s, e, float(p), int(v)) for s, e, p, v in rows],
+        "symbol string, exch string, price double, volume long",
+    )
+
+
+class TestVwapOverGeneratedColumn:
+    """VWAP as a ratio of two maintained sums: the source generates
+    ``notional = price * volume`` on every write, the view keeps
+    SUM(notional) and SUM(volume) per group, and VWAP derives at read
+    time. Prices and volumes are small integers, so every sum is
+    exact and the view must equal the recompute exactly."""
+
+    @pytest.fixture()
+    def ticks(self, spark, tmp_path):
+        return TransactionalLake(
+            spark,
+            str(tmp_path / "ticks"),
+            partition_by=(),
+            generated_columns={"notional": "price * volume"},
+        )
+
+    @staticmethod
+    def _view(spark, ticks, tmp_path, keys):
+        return IncrementalAggView(
+            spark, ticks, str(tmp_path / "vwap"), group_by=keys,
+            sum_cols=["notional", "volume"],
+        )
+
+    @staticmethod
+    def _vwap(view, keys):
+        return {
+            tuple(r[k] for k in keys): (r.vwap, r.sum_notional, r.sum_volume,
+                                        r.n_rows)
+            for r in view.view()
+            .withColumn("vwap", F.col("sum_notional") / F.col("sum_volume"))
+            .collect()
+        }
+
+    @staticmethod
+    def _full(ticks, keys):
+        return {
+            tuple(r[k] for k in keys): (r.vwap, r.pv, r.v, r.n)
+            for r in ticks.snapshot()
+            .groupBy(*keys)
+            .agg(
+                (F.sum(F.col("price") * F.col("volume")) / F.sum("volume"))
+                .alias("vwap"),
+                F.sum(F.col("price") * F.col("volume")).alias("pv"),
+                F.sum("volume").alias("v"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .collect()
+        }
+
+    def test_refresh_matches_recompute_and_noop(self, spark, ticks, tmp_path):
+        keys = ["symbol"]
+        view = self._view(spark, ticks, tmp_path, keys)
+        ticks.append(_ticks(spark, [("AAPL", "N", 100, 10),
+                                    ("AAPL", "N", 110, 10),
+                                    ("MSFT", "N", 50, 4)]))
+        assert view.refresh() == ticks.version
+        got = self._vwap(view, keys)
+        assert got == self._full(ticks, keys)
+        assert got[("AAPL",)][0] == 105.0
+        # the second batch folds from the commits after the first only
+        ticks.append(_ticks(spark, [("AAPL", "N", 130, 20),
+                                    ("GOOG", "Q", 70, 1)]))
+        view.refresh()
+        got = self._vwap(view, keys)
+        assert got == self._full(ticks, keys)
+        assert got[("AAPL",)][2] == 40
+        # nothing new: the refresh commits nothing to the state table
+        state_version = view.state.version
+        assert view.refresh() == ticks.version
+        assert view.state.version == state_version
+
+    def test_fully_deleted_group_leaves_view(self, spark, ticks, tmp_path):
+        keys = ["symbol"]
+        view = self._view(spark, ticks, tmp_path, keys)
+        ticks.append(_ticks(spark, [("AAPL", "N", 100, 10),
+                                    ("MSFT", "N", 50, 4)]))
+        view.refresh()
+        ticks.delete_where("symbol = 'MSFT'")
+        view.refresh()
+        got = self._vwap(view, keys)
+        assert set(got) == {("AAPL",)}
+        assert got == self._full(ticks, keys)
+
+    def test_merge_and_update_fold_through_view(self, spark, ticks, tmp_path):
+        """MERGE and update_where emit delete+insert pairs in the
+        change feed, and an update of ``volume`` regenerates
+        ``notional``: the signed fold nets both to the post-DML
+        truth."""
+        keys = ["symbol"]
+        view = self._view(spark, ticks, tmp_path, keys)
+        ticks.append(_ticks(spark, [("AAPL", "N", 100, 10),
+                                    ("AAPL", "N", 110, 10),
+                                    ("MSFT", "N", 50, 4)]).coalesce(1))
+        view.refresh()
+        # upsert: replace MSFT (matched) and insert GOOG
+        ticks.merge(_ticks(spark, [("MSFT", "N", 60, 8),
+                                   ("GOOG", "Q", 70, 2)]), on="symbol")
+        view.refresh()
+        got = self._vwap(view, keys)
+        assert got == self._full(ticks, keys)
+        assert got[("MSFT",)] == (60.0, 480.0, 8, 1)
+        ticks.update_where("symbol = 'AAPL'", {"volume": "volume * 2"})
+        view.refresh()
+        got = self._vwap(view, keys)
+        assert got == self._full(ticks, keys)
+        assert got[("AAPL",)] == (105.0, 4200.0, 40, 2)
+
+    def test_composite_keys_with_computed_sum(self, spark, ticks, tmp_path):
+        keys = ["symbol", "exch"]
+        view = self._view(spark, ticks, tmp_path, keys)
+        ticks.append(_ticks(spark, [("AAPL", "N", 100, 10),
+                                    ("AAPL", "Q", 101, 5),
+                                    ("MSFT", "N", 50, 4)]))
+        view.refresh()
+        assert self._vwap(view, keys) == self._full(ticks, keys)
+        ticks.merge(_ticks(spark, [("AAPL", "N", 120, 20),
+                                   ("GOOG", "Q", 70, 1)]),
+                    on=("symbol", "exch"))
+        ticks.delete_where("symbol = 'MSFT'")
+        ticks.update_where("exch = 'Q'", {"volume": "volume + 1"})
+        view.refresh()
+        got = self._vwap(view, keys)
+        assert got == self._full(ticks, keys)
+        assert ("MSFT", "N") not in got
+        assert got[("AAPL", "Q")] == (101.0, 606.0, 6, 1)

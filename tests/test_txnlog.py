@@ -987,6 +987,35 @@ class TestLogCheckpoints:
         assert fast[1] == slow[1] and fast[2] == slow[2]
         assert lk.snapshot().count() == 1 + 4
 
+    def test_change_feed_reads_only_its_span(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """read_changes seeds its running state from the newest
+        checkpoint before ``starting_version`` and parses only the
+        commits after it: O(span), not O(retained log)."""
+        from market_data_lakehouse_spark import logcore
+
+        lk = self._lake(spark, tmp_path, every=5)  # checkpoints at 4, 9
+        for i in range(12):
+            lk.append(_df(spark, [(f"S{i}", float(i))]))
+        seen: list[int] = []
+        orig = logcore.read_commit
+
+        def spy(log_path, v):
+            seen.append(v)
+            return orig(log_path, v)
+
+        monkeypatch.setattr(logcore, "read_commit", spy)
+        tail = lk.read_changes(11)
+        assert min(seen) > 9, f"commits read below the checkpoint: {seen}"
+        seen.clear()
+        window = lk.read_changes(7, ending_version=8)
+        assert min(seen) > 4, f"commits read below the checkpoint: {seen}"
+        assert [r.symbol for r in tail.collect()] == ["S11"]
+        assert sorted(
+            (r.symbol, r._commit_version) for r in window.collect()
+        ) == [("S7", 7), ("S8", 8)]
+
     def test_time_travel_before_checkpoint_still_works(self, spark, tmp_path):
         lk = self._lake(spark, tmp_path, every=3)
         for i in range(8):

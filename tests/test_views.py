@@ -1,196 +1,9 @@
-"""Incremental materialized view over the CDC feed: refresh folds
-only new commits; results match a full recompute after appends,
-deletes, and idempotent re-refresh."""
+"""SQL-facing catalog: base tables and catalog operator results
+registered as temp views and consumed purely through spark.sql."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
-
-from market_data_lakehouse_spark.txnlog import TransactionalLake
-from market_data_lakehouse_spark.views import VwapView
-
-
-def _ticks(spark, rows):
-    return spark.createDataFrame(
-        [(s, float(p), int(v)) for s, p, v in rows],
-        "symbol string, price double, volume long",
-    )
-
-
-def _full_vwap(df):
-    return {
-        r.symbol: (r.vwap, r.tv)
-        for r in df.groupBy("symbol")
-        .agg(
-            (F.sum(F.col("price") * F.col("volume")) / F.sum("volume")).alias("vwap"),
-            F.sum("volume").alias("tv"),
-        )
-        .collect()
-    }
-
-
-@pytest.fixture()
-def lake(spark, tmp_path):
-    return TransactionalLake(spark, str(tmp_path / "lake"), partition_by=())
-
-
-def test_incremental_refresh_matches_full_recompute(spark, lake, tmp_path):
-    view = VwapView(lake, str(tmp_path / "view"))
-    lake.append(_ticks(spark, [("AAPL", 100, 10), ("AAPL", 110, 10), ("MSFT", 50, 4)]))
-    v1 = view.refresh()
-    assert v1 == lake.version
-    got = {r.symbol: (r.vwap, r.total_volume) for r in view.read().collect()}
-    assert got == _full_vwap(lake.snapshot())
-    assert got["AAPL"][0] == pytest.approx(105.0)
-
-    # second batch folds incrementally (CDC from v1+1 only)
-    lake.append(_ticks(spark, [("AAPL", 130, 20), ("GOOG", 70, 1)]))
-    view.refresh()
-    got = {r.symbol: (r.vwap, r.total_volume) for r in view.read().collect()}
-    assert got == _full_vwap(lake.snapshot())
-    assert got["AAPL"][1] == 40
-
-    # refresh with no new commits is a no-op
-    assert view.refresh() == lake.version
-
-
-def test_deletes_fold_negatively_and_empty_keys_drop(spark, lake, tmp_path):
-    view = VwapView(lake, str(tmp_path / "view"))
-    lake.append(_ticks(spark, [("AAPL", 100, 10), ("MSFT", 50, 4)]))
-    view.refresh()
-    lake.delete_where("symbol = 'MSFT'")
-    view.refresh()
-    got = {r.symbol for r in view.read().collect()}
-    assert got == {"AAPL"}  # fully-deleted key dropped from state
-    full = _full_vwap(lake.snapshot())
-    read = {r.symbol: (r.vwap, r.total_volume) for r in view.read().collect()}
-    assert read == full
-
-
-def test_merge_and_update_commits_fold_through_view(spark, lake, tmp_path):
-    """MERGE and update_where emit delete+insert pairs in the CDC
-    feed; the view's signed fold must net them to the post-DML truth
-    without any special-casing of the new commit types."""
-    view = VwapView(lake, str(tmp_path / "view"))
-    lake.append(
-        _ticks(
-            spark, [("AAPL", 100, 10), ("AAPL", 110, 10), ("MSFT", 50, 4)]
-        ).coalesce(1)
-    )
-    view.refresh()
-    # upsert: replace MSFT (matched) and insert GOOG
-    lake.merge(
-        _ticks(spark, [("MSFT", 60, 8), ("GOOG", 70, 2)]), on="symbol"
-    )
-    view.refresh()
-    got = {r.symbol: (r.vwap, r.total_volume) for r in view.read().collect()}
-    assert got == _full_vwap(lake.snapshot())
-    assert got["MSFT"] == (pytest.approx(60.0), 8)
-    # in-place update: double AAPL volumes
-    lake.update_where("symbol = 'AAPL'", {"volume": "volume * 2"})
-    view.refresh()
-    got = {r.symbol: (r.vwap, r.total_volume) for r in view.read().collect()}
-    assert got == _full_vwap(lake.snapshot())
-    assert got["AAPL"][1] == 40
-
-
-def test_additive_view_multi_key_multi_sum(spark, lake, tmp_path):
-    """The generalized view: composite keys, several SUM expressions
-    (incl. a computed one), incremental across append + DML, always
-    equal to a full recompute."""
-    from market_data_lakehouse_spark.views import AdditiveView
-
-    def rows(data):
-        return spark.createDataFrame(
-            [(s, e, float(p), int(v)) for s, e, p, v in data],
-            "symbol string, exch string, price double, volume long",
-        )
-
-    lk = TransactionalLake(spark, str(tmp_path / "lk2"), partition_by=())
-    view = AdditiveView(
-        lk,
-        str(tmp_path / "view2"),
-        keys=("symbol", "exch"),
-        sums={"notional": "price * volume", "vol": "volume"},
-    )
-    lk.append(rows([("AAPL", "N", 100, 10), ("AAPL", "Q", 101, 5),
-                    ("MSFT", "N", 50, 4)]))
-    view.refresh()
-
-    def full():
-        return {
-            (r.symbol, r.exch): (r.notional, r.vol, r.n)
-            for r in lk.snapshot().groupBy("symbol", "exch").agg(
-                F.sum(F.expr("price * volume")).alias("notional"),
-                F.sum("volume").alias("vol"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()
-        }
-
-    def state():
-        return {
-            (r.symbol, r.exch): (r.notional, r.vol, r.n)
-            for r in view.read().collect()
-        }
-
-    assert state() == full()
-    lk.merge(rows([("AAPL", "N", 120, 20), ("GOOG", "Q", 70, 1)]),
-             on=("symbol", "exch"))
-    lk.delete_where("symbol = 'MSFT'")
-    view.refresh()
-    assert state() == full()
-    assert ("MSFT", "N") not in state()
-
-
-def test_additive_view_rejects_bad_config(spark, lake, tmp_path):
-    from market_data_lakehouse_spark.views import AdditiveView
-
-    with pytest.raises(ValueError, match="at least one"):
-        AdditiveView(lake, str(tmp_path / "v"), keys=("k",), sums={})
-    with pytest.raises(ValueError, match="collision"):
-        AdditiveView(lake, str(tmp_path / "v"), keys=("n",),
-                     sums={"x": "1"})
-
-
-def test_additive_view_rejects_reserved_n(spark, lake, tmp_path):
-    from market_data_lakehouse_spark.views import AdditiveView
-
-    with pytest.raises(ValueError, match="collision"):
-        AdditiveView(lake, str(tmp_path / "v"), keys=("k",),
-                     sums={"n": "volume"})
-
-
-def test_view_state_schema_mismatch_self_heals(spark, lake, tmp_path):
-    """State persisted under an older/different view definition (no
-    state_cols marker, or different columns) must trigger a full
-    rebuild from the CDC feed — not an unresolvable unionByName
-    crash that bricks the view directory."""
-    import json as _json
-    import os as _os
-
-    view = VwapView(lake, str(tmp_path / "view"))
-    lake.append(_ticks(spark, [("AAPL", 100, 10), ("MSFT", 50, 4)]))
-    view.refresh()
-    # rewrite the meta as the PREVIOUS format: legacy 'key' state
-    # column, no state_cols marker
-    meta_path = view._meta_path
-    with open(meta_path) as fh:
-        meta = _json.load(fh)
-    legacy_dir = _os.path.join(view.path, meta["state_dir"])
-    spark.read.parquet(legacy_dir).withColumnRenamed(
-        "symbol", "key"
-    ).write.mode("overwrite").parquet(legacy_dir + "_legacy")
-    with open(meta_path, "w") as fh:
-        _json.dump({"applied_version": meta["applied_version"],
-                    "state_dir": meta["state_dir"].split("/")[-1] + "_legacy"},
-                   fh)
-    # new commits + refresh: the mismatched state is discarded and the
-    # view rebuilds from version 0, landing on the full-recompute truth
-    lake.append(_ticks(spark, [("AAPL", 130, 20)]))
-    view.refresh()
-    got = {r.symbol: (r.vwap, r.total_volume) for r in view.read().collect()}
-    assert got == _full_vwap(lake.snapshot())
 
 
 class TestSqlCatalog:
@@ -228,9 +41,7 @@ class TestSqlCatalog:
         assert not spark.catalog.tableExists("q_a2_vwap_top10")
 
     def test_unknown_query_name_raises(self, spark):
-        import pytest as _pytest
-
         from market_data_lakehouse_spark.sql_catalog import register_views
 
-        with _pytest.raises(ValueError, match="unknown"):
+        with pytest.raises(ValueError, match="unknown"):
             register_views(spark, "/root/testdata/sf0.001", ["nope"])
