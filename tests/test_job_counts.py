@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
+
 from market_data_lakehouse_spark.lakehouse import DataLakehouse
 
 
@@ -140,32 +142,45 @@ def _bars_pdf(n, start, step_s, seed):
     })
 
 
+def _bar_lake(spark, root):
+    """A 10-file, 10x60-row bar lake."""
+    from market_data_lakehouse_spark.txnlog import TransactionalLake
+
+    tx = TransactionalLake(spark, root)
+    for d in range(10):
+        tx.append(
+            _bar_frame(spark, _bars_pdf(60, datetime(2024, 1, 1 + d), 600, d))
+        )
+    assert len(tx._snapshot_state()[0]) >= 10
+    return tx
+
+
+def _upsert_source(spark, tx):
+    """The bench's upsert: 40 existing bars with a new close plus 40
+    new bars."""
+    import pandas as pd
+
+    upd = tx.snapshot().limit(40).toPandas()
+    upd["close"] += 0.25
+    new = _bars_pdf(40, datetime(2024, 2, 1), 60, 99)
+    return _bar_frame(spark, pd.concat([upd, new], ignore_index=True))
+
+
 def test_merge_and_view_refresh_job_budget(spark, tmp_path):
     """A source under the broadcast threshold is read in one pass, so
     the bench's 40-update + 40-insert upsert on (symbol, timestamp)
     runs at most 5 jobs (source pass, probe, write, and the probe's
     and write's broadcasts) and an IncrementalAggView refresh after a
     300-row append at most 7."""
-    import pandas as pd
-
     from market_data_lakehouse_spark.mv import IncrementalAggView
-    from market_data_lakehouse_spark.txnlog import TransactionalLake
 
-    tx = TransactionalLake(spark, str(tmp_path / "tx"))
-    for d in range(10):
-        tx.append(
-            _bar_frame(spark, _bars_pdf(60, datetime(2024, 1, 1 + d), 600, d))
-        )
-    assert len(tx._snapshot_state()[0]) >= 10
+    tx = _bar_lake(spark, str(tmp_path / "tx"))
     view = IncrementalAggView(
         spark, tx, str(tmp_path / "mv"), group_by=["symbol", "date"],
         sum_cols=["volume"],
     )
     view.refresh()
-    upd = tx.snapshot().limit(40).toPandas()
-    upd["close"] += 0.25
-    new = _bars_pdf(40, datetime(2024, 2, 1), 60, 99)
-    src = _bar_frame(spark, pd.concat([upd, new], ignore_index=True))
+    src = _upsert_source(spark, tx)
     before = _jobs_so_far(spark)
     tx.merge(src, on=["symbol", "timestamp"])
     used = _jobs_so_far(spark) - before
@@ -177,3 +192,36 @@ def test_merge_and_view_refresh_job_budget(spark, tmp_path):
     view.refresh()
     used = _jobs_so_far(spark) - before
     assert used <= 7, f"view refresh ran {used} jobs"
+
+
+# (merge, update_where, delete_where) job budgets per DML writer. A
+# dv delete writes no file, so it runs one job fewer than a rewrite.
+DML_JOB_BUDGET = {"rewrite": (5, 3, 3), "dv": (5, 3, 2)}
+
+
+@pytest.mark.parametrize("mode", sorted(DML_JOB_BUDGET))
+def test_dml_job_budget(spark, tmp_path, mode):
+    """The bench's upsert, then an UPDATE and a DELETE that each touch
+    a few rows of every file, in either writer, stay within the
+    budget: copy-on-write probes, re-reads and writes; dv reads
+    positions once and writes only postimages."""
+    tx = _bar_lake(spark, str(tmp_path / "tx"))
+    src = _upsert_source(spark, tx)
+    ops = {
+        "merge": lambda: tx.merge(src, on=["symbol", "timestamp"], mode=mode),
+        "update": lambda: tx.update_where(
+            "symbol = 'AAPL' AND volume < 100", {"close": "close + 1"},
+            mode=mode,
+        ),
+        "delete": lambda: tx.delete_where(
+            "symbol = 'MSFT' AND volume < 50", mode=mode
+        ),
+    }
+    used = {}
+    for name, op in ops.items():
+        before = _jobs_so_far(spark)
+        op()
+        used[name] = _jobs_so_far(spark) - before
+    assert all(
+        u <= b for u, b in zip(used.values(), DML_JOB_BUDGET[mode])
+    ), f"{mode} DML ran {used} jobs, budget {DML_JOB_BUDGET[mode]}"
