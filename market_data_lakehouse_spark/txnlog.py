@@ -2879,6 +2879,11 @@ class TransactionalLake:
         ConcurrentAppendException semantics). Appends that might
         match, and all non-append commits, still conflict.
 
+        Which rows go is the one DML row rule (:meth:`_dml_rule`): a
+        row goes when ``predicate`` is TRUE; NULL keeps it (SQL DELETE
+        removes only provably-true matches). ``mode`` picks only how
+        the change is recorded:
+
         ``mode="rewrite"`` — copy-on-write (Delta DELETE semantics):
         rewrite ONLY the files containing a matching row, minus those
         rows; files with no match are untouched — a delete hitting
@@ -2893,14 +2898,7 @@ class TransactionalLake:
         drop kilobytes. Readers apply vectors as a broadcast anti-join
         on ``_metadata.row_index``; ``optimize()`` materializes them
         away (its rewrite drops deleted rows and removing the old
-        files drops their vectors).
-
-        The state is resolved ONCE and both the rewrite input and the
-        remove-list derive from that same file list — resolving twice
-        would let an interleaved commit slip between them and pass the
-        optimistic-concurrency check while its rows are dropped.
-        NULL predicates keep the row (SQL DELETE removes only
-        provably-true matches)."""
+        files drops their vectors)."""
         mode = self._resolve_dml_mode(mode)
         mdoc = self._column_mapping_doc()
         predicate = self._map_expr(predicate, mdoc)
@@ -2921,44 +2919,9 @@ class TransactionalLake:
         fast = self._try_partition_delete(predicate, read_bounds)
         if fast is not None:
             return fast
-        if mode == "dv":
-            return self._delete_where_dv(predicate, read_bounds)
-        old, schemas, read_v, dvs = self._snapshot_state()
-        self._check_read_bounds(predicate, read_bounds, schemas)
-        # data-skipping DML: only stats-possible files are scanned
-        # for the affected set (r12) — pruned files provably hold no
-        # matching row, so correctness is untouched
-        cand = self._dml_prune(old, predicate) if old else []
-        if not cand:
-            # live-file set empty, or no file can possibly match:
-            # nothing to do — no-op commit, not a metadata error
-            return self._commit(
-                {"op": "delete", "predicate": predicate, "add": [],
-                 "remove": []},
-                read_version=read_v, read_bounds=read_bounds,
-            )
-        snap = self._read_files(cand, schemas, dvs=dvs)
-        match = F.coalesce(F.expr(predicate), F.lit(False))
-        affected = self._affected_files(snap, match)
-        if not affected:
-            return self._commit(
-                {"op": "delete", "predicate": predicate, "add": [],
-                 "remove": []},
-                read_version=read_v, read_bounds=read_bounds,
-            )
-        # conform BEFORE filtering: a predicate referencing a column
-        # only later files carry must see it (null-filled) on
-        # pre-evolution files too, not raise UNRESOLVED_COLUMN;
-        # _rewrite_src additionally materializes row-tracking ids so
-        # surviving rows keep them through the rewrite
-        kept = self._rewrite_src(
-            affected, schemas, dvs, self._row_tracking_state()
-        ).filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-        added = self._write_files(kept)
-        return self._commit(
-            {"op": "delete", "predicate": predicate, "add": added,
-             "remove": affected},
-            read_version=read_v, read_bounds=read_bounds,
+        return self._dml_where(
+            "delete", predicate, {"action": "delete", "condition": predicate},
+            mode, read_bounds,
         )
 
     def truncate(self) -> int:
@@ -3102,56 +3065,6 @@ class TransactionalLake:
             "num_files_skipped": len(found) - len(new),
         }
 
-    def _delete_where_dv(
-        self,
-        predicate: str,
-        read_bounds: dict[str, tuple] | None = None,
-    ) -> int:
-        """Positional delete: resolve the matched VISIBLE rows'
-        (file, row-index) pairs with one job and commit them as this
-        delete's vector. The collect moves row positions (bounded by
-        the number of deleted rows), never row data — the same class
-        of metadata collect as the commit log itself; a cluster
-        deployment would write roaring bitmaps to sidecar files from
-        the executors (Delta's DV format) with an identical log
-        protocol."""
-        old, schemas, read_v, dvs = self._snapshot_state()
-        self._check_read_bounds(predicate, read_bounds, schemas)
-        action_base = {"op": "delete_dv", "predicate": predicate}
-        # data-skipping DML (r12): position-resolve only the
-        # stats-possible files
-        cand = self._dml_prune(old, predicate) if old else []
-        if not cand:
-            return self._commit({**action_base, "dv": {}},
-                                read_version=read_v,
-                                read_bounds=read_bounds)
-        raw = self._read_files(cand, schemas, dvs, positions=True)
-        hits = (
-            raw.filter(F.coalesce(F.expr(predicate), F.lit(False)))
-            .select("_row_file", "_row_pos")
-            .collect()
-        )
-        if not hits:
-            return self._commit({**action_base, "dv": {}},
-                                read_version=read_v,
-                                read_bounds=read_bounds)
-        return self._commit(
-            {**action_base, "dv": self._dv_from_hits(hits, old)},
-            read_version=read_v, read_bounds=read_bounds,
-        )
-
-    def _dv_from_hits(self, hits, old: list[str]) -> dict[str, list[int]]:
-        """(file, position) collect rows -> the commit's dv map,
-        keyed by table-relative path."""
-        by_base = {os.path.basename(f): f for f in old}
-        new_dv: dict[str, list[int]] = {}
-        for r in hits:
-            rel = by_base.get(r["_row_file"])
-            if rel is None:  # pragma: no cover - basenames are uuids
-                raise RuntimeError(f"unknown file in DV scan: {r}")
-            new_dv.setdefault(rel, []).append(int(r["_row_pos"]))
-        return {f: sorted(p) for f, p in new_dv.items()}
-
     def update_where(
         self,
         predicate: str,
@@ -3163,11 +3076,15 @@ class TransactionalLake:
         (default) honors the table's ``delta.enableDeletionVectors``
         property — Delta's own resolution; plain tables rewrite.
 
+        What each row becomes is the one DML row rule
+        (:meth:`_dml_rule`): rows matching ``predicate`` get each
+        ``assignments`` column replaced by its SQL expression
+        (evaluated against the row, store-assigned to the column's
+        type); a NULL predicate leaves the row unchanged. ``mode``
+        picks only how the change is recorded:
+
         ``mode="rewrite"`` — copy-on-write (Delta UPDATE semantics):
-        rows matching ``predicate`` get each ``assignments`` column
-        replaced by its SQL expression (evaluated against the row);
-        only files containing a match are rewritten. NULL predicates
-        leave the row unchanged (only provably-true matches update).
+        only files containing a match are rewritten.
 
         ``mode="dv"`` — merge-on-read (Delta DV UPDATE / Iceberg
         positional delete + append): ONE commit records the matched
@@ -3195,373 +3112,254 @@ class TransactionalLake:
             self._map_cols(read_bounds, mdoc) if read_bounds else read_bounds
         )
         read_bounds = self._auto_read_bounds(predicate, read_bounds)
-        if mode == "dv":
-            return self._update_where_dv(predicate, assignments, read_bounds)
-        if mode != "rewrite":
+        if mode not in ("dv", "rewrite"):
             raise ValueError(f"unknown update mode: {mode!r}")
-        old, schemas, read_v, dvs = self._snapshot_state()
-        self._check_read_bounds(predicate, read_bounds, schemas)
-        if not old:
-            return self._commit(
-                {"op": "update", "predicate": predicate, "add": [],
-                 "remove": []},
-                read_version=read_v, read_bounds=read_bounds,
-            )
-        # data-skipping DML (r12): scan only stats-possible files;
-        # a one-file read still serves the column validation below
-        # when nothing can match
-        cand = self._dml_prune(old, predicate)
-        snap = self._read_files(cand or old[:1], schemas, dvs=dvs)
-        # validate against the FULL table schema: a legitimately
-        # evolved column is assignable even when no affected file
-        # happens to carry it physically
-        unknown = set(assignments) - set(snap.columns)
-        if unknown:
-            raise ValueError(f"update_where: unknown columns {sorted(unknown)}")
-        match = F.coalesce(F.expr(predicate), F.lit(False))
-        affected = self._affected_files(snap, match) if cand else []
-        if not affected:
-            return self._commit(
-                {"op": "update", "predicate": predicate, "add": [],
-                 "remove": []},
-                read_version=read_v, read_bounds=read_bounds,
-            )
-        # conform before predicate/assignment evaluation (see
-        # delete_where) so evolved columns resolve on every file;
-        # with row tracking the rewrite keeps every row's id and
-        # resets the UPDATED rows' version to this commit (carried
-        # rows keep theirs) — Delta's row-commit-version semantics
-        aff_df = self._rewrite_src(
-            affected, schemas, dvs, self._row_tracking_state()
-        )
-        rewritten = aff_df.select(
-            *[
-                F.when(
-                    F.coalesce(F.expr(predicate), F.lit(False)),
-                    F.expr(assignments[c]).cast(dict(aff_df.dtypes)[c]),
-                ).otherwise(F.col(c)).alias(c)
-                if c in assignments
-                else (
-                    F.when(match, F.lit(None).cast("bigint"))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    if c == self._RT_VER
-                    else F.col(c)
-                )
-                for c in aff_df.columns
-            ]
-        )
-        rewritten = self._regen_after_assign(rewritten, assignments)
-        self._enforce_constraints(rewritten, "update")
-        added = self._write_files(rewritten)
-        return self._commit(
-            {"op": "update", "predicate": predicate, "add": added,
-             "remove": affected},
-            read_version=read_v, read_bounds=read_bounds,
+        return self._dml_where(
+            "update", predicate,
+            {"action": "update", "condition": predicate, "set": assignments},
+            mode, read_bounds,
         )
 
-    def _update_where_dv(
+    def _dml_where(
         self,
+        op: str,
         predicate: str,
-        assignments: dict[str, str],
-        read_bounds: dict[str, tuple] | None = None,
+        clause: dict,
+        mode: str,
+        read_bounds: dict[str, tuple] | None,
     ) -> int:
-        """Positional UPDATE: one scan resolves the matched visible
-        rows; their (file, position) pairs become this commit's
-        deletion vector (hiding the preimages) and their assigned
-        versions are written as new files — both under ONE commit, so
-        readers never observe the intermediate state. The collect
-        moves row positions only (bounded by matched rows); row DATA
-        flows executor-side from scan to the new parquet files."""
+        """DELETE / UPDATE: the one row rule (:meth:`_dml_rule`) over
+        the rows ``predicate`` may hold for, recorded by the writer
+        ``mode`` picks. The state is resolved ONCE and the rows read,
+        the remove-list and the vector all derive from that file list
+        — resolving twice would let an interleaved commit slip between
+        them and pass the optimistic-concurrency check while its rows
+        are dropped."""
         old, schemas, read_v, dvs = self._snapshot_state()
         self._check_read_bounds(predicate, read_bounds, schemas)
-        action_base = {"op": "update_dv", "predicate": predicate}
-        # data-skipping DML (r12): position-resolve only the
-        # stats-possible files; one file stays for column validation
+        if old:
+            # a legitimately evolved column is assignable even when no
+            # candidate file carries it physically
+            unknown = set(clause.get("set") or ()) - {
+                f["name"] for f in logcore.merged_fields(schemas)
+            }
+            if unknown:
+                raise ValueError(
+                    f"{op}_where: unknown columns {sorted(unknown)}"
+                )
+        action = {"op": op, "predicate": predicate, "remove": []}
+        if mode == "dv":
+            action = {"op": f"{op}_dv", "predicate": predicate, "dv": {}}
+        # data-skipping DML (r12): only stats-possible files are read
+        # — pruned files provably hold no matching row
         cand = self._dml_prune(old, predicate) if old else []
-        if not old:
-            return self._commit(
-                {**action_base, "dv": {}, "add": []}, read_version=read_v, read_bounds=read_bounds
-            )
-        rt = self._row_tracking_state()
-        raw = self._read_files(
-            cand or old[:1], schemas, dvs, positions=True, keep_rt=bool(rt)
-        )
-        unknown = set(assignments) - (
-            set(raw.columns) - {"_row_file", "_row_pos", *self._RT_COLS}
-        )
-        if unknown:
-            raise ValueError(
-                f"update_where: unknown columns {sorted(unknown)}"
-            )
-        # matched rows feed two actions (postimage write + position
-        # collect); checkpoint so the scan+filter runs once
-        matched = raw.filter(
-            F.coalesce(F.expr(predicate), F.lit(False))
-        )
-        if rt is not None:
-            # postimage keeps the row's id; its version defaults to
-            # THIS commit (drop the carried _rt_row_ver)
-            matched = self._rt_attach(matched, old, rt).drop(self._RT_VER)
-        matched = matched.localCheckpoint(eager=False)
-        hits = matched.select("_row_file", "_row_pos").collect()
-        if not hits:
-            return self._commit(
-                {**action_base, "dv": {}, "add": []}, read_version=read_v, read_bounds=read_bounds
-            )
-        types = dict(matched.dtypes)
-        post = matched.select(
-            *[
-                F.expr(assignments[c]).cast(types[c]).alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in matched.columns
-                if c not in ("_row_file", "_row_pos")
-            ]
-        )
-        post = self._regen_after_assign(post, assignments)
-        post = self._conform(post, schemas, keep=(self._RT_ID,))
-        self._enforce_constraints(post, "update")
-        added = self._write_files(post)
-        return self._commit(
-            {**action_base,
-             "dv": self._dv_from_hits(hits, old),
-             "add": added},
-            read_version=read_v, read_bounds=read_bounds,
+        out = None
+        if cand:
+            rt = self._row_tracking_state()
+            if mode == "rewrite":
+                snap = self._read_files(cand, schemas, dvs=dvs)
+                affected = self._affected_files(
+                    snap, F.coalesce(F.expr(predicate), F.lit(False))
+                )
+                if affected:
+                    ruled, cols = self._dml_rule(
+                        self._rewrite_src(affected, schemas, dvs, rt),
+                        [clause],
+                    )
+                    out = self._rewrite_write(ruled, cols)
+                    action["remove"] = affected
+            else:
+                writes = clause["action"] == "update"
+                rt = rt if writes else None
+                rows = self._read_files(
+                    cand, schemas, dvs, positions=True, keep_rt=bool(rt)
+                )
+                if rt is not None:
+                    rows = self._rt_attach(rows, old, rt)
+                ruled, cols = self._dml_rule(rows, [clause])
+                # only touched rows reach the vector or the new files
+                out, action["dv"], _got = self._dv_write(
+                    ruled.filter("_m_touch"), cols, old, writes
+                )
+        return self._dml_commit(
+            action, out, schemas, read_v, read_bounds
         )
 
-    def _merge_dv(
+    def _dml_rule(
         self,
-        src: _MergeSource,
-        keys: list[str],
-        when_matched: str,
-        when_not_matched: str,
-        old: list[str],
+        rows: DataFrame,
+        clauses: list[dict],
+        src_cols: list[str] | None = None,
+    ) -> tuple[DataFrame, list[str]]:
+        """THE row semantics of every DML statement, whichever writer
+        records them. ``clauses`` is the statement as an ordered list,
+        FIRST-TRUE-WINS per row: ``{"action": "update" | "delete",
+        "condition": SQL or None (= TRUE), "set": {col: SQL} or None,
+        "by_source": bool}``. A DELETE is one delete clause and an
+        UPDATE one update clause with its SET list, both conditioned
+        on the predicate.
+
+        ``src_cols`` None: ``rows`` are the table's own rows. For a
+        MERGE, ``rows`` are target rows joined to the source by
+        :meth:`_join_src_slots` (``_m_hit`` NULL where no source row
+        matched) and ``src_cols`` the source's non-key columns:
+        matched clauses fire only on matched rows and BY SOURCE ones
+        only on the rest, ``source.<col>`` reads the ``_src_<col>``
+        slot, and an update clause without ``set`` takes the source's
+        value for every source column (Delta update-by-name; evolved
+        columns included).
+
+        Adds ``_m_touch`` (some clause fired; a NULL condition is not
+        TRUE, SQL's three-valued guard) and ``_m_keep`` (the fired
+        clause is not a delete) and projects every output column: a
+        touched row that is kept takes its clause's postimage — SET
+        results store-assigned to the column's type, the row-tracking
+        version reset to this commit's (the row id carries), generated
+        columns over assigned inputs recomputed — and every other row
+        passes through unchanged. Returns the frame and its output
+        columns; the positional columns and ``_m_row`` ride along."""
+        carry = ("_row_file", "_row_pos", "_m_row")
+        types = dict(rows.dtypes)
+        cols = [
+            c for c in rows.columns
+            if c not in (*carry, "_m_hit") and not c.startswith("_src_")
+        ]
+
+        def bind(e: str) -> str:
+            return e if src_cols is None else self._rewrite_source_refs(
+                e, src_cols
+            )
+
+        fired, deletes, posts, assigned = None, [], {}, set()
+        for i, cl in enumerate(clauses, start=1):
+            cond = (
+                F.lit(True)
+                if cl.get("condition") is None
+                else F.coalesce(F.expr(bind(cl["condition"])), F.lit(False))
+            )
+            if src_cols is not None:
+                hit = F.col("_m_hit").isNotNull()
+                cond = (~hit if cl.get("by_source") else hit) & cond
+            fired = F.when(cond, i) if fired is None else fired.when(cond, i)
+            if cl["action"] == "delete":
+                deletes.append(i)
+                continue
+            sset = cl.get("set")
+            post = (
+                {c: F.col(f"_src_{c}") for c in src_cols}
+                if sset is None
+                else {
+                    c: F.expr(bind(e)).cast(types[c])
+                    for c, e in sset.items()
+                }
+            )
+            assigned |= set(sset or ())
+            if self._RT_VER in types:
+                post[self._RT_VER] = F.lit(None).cast("bigint")
+            for c, e in post.items():
+                posts.setdefault(c, []).append((i, e))
+        rows = rows.withColumn(
+            "_m_fired", F.lit(0) if fired is None else fired.otherwise(0)
+        )
+
+        def out(c: str) -> "F.Column":
+            e = None
+            for i, p in posts.get(c, ()):
+                on = F.col("_m_fired") == i
+                e = F.when(on, p) if e is None else e.when(on, p)
+            if e is None:
+                return F.col(c)
+            return (e.otherwise(F.col(c)) if c in types else e).alias(c)
+
+        cols += [c for c in posts if c not in types]
+        ruled = rows.select(
+            *[out(c) for c in cols],
+            (F.col("_m_fired") > 0).alias("_m_touch"),
+            (
+                ~F.col("_m_fired").isin(deletes) if deletes else F.lit(True)
+            ).alias("_m_keep"),
+            *[c for c in carry if c in types],
+        )
+        return self._regen_after_assign(ruled, assigned), cols
+
+    @staticmethod
+    def _rewrite_write(ruled: DataFrame, cols: list[str]) -> DataFrame:
+        """The copy-on-write writer: the re-read files' rows the
+        statement keeps — untouched survivors and kept postimages —
+        replace those files, which the commit removes."""
+        return ruled.filter(~F.col("_m_touch") | F.col("_m_keep")).select(
+            *cols
+        )
+
+    def _dv_write(
+        self, ruled: DataFrame, cols: list[str], old: list[str],
+        writes: bool,
+    ) -> tuple[DataFrame | None, dict[str, list[int]], object]:
+        """The deletion-vector writer: the (file, position) pairs of
+        the touched rows of a positional read become the commit's
+        vector, hiding their old versions, and with ``writes`` the
+        touched rows the statement keeps are written as new files; no
+        existing data file is touched. The collect moves positions —
+        O(touched rows) of metadata, never row data — and, for a MERGE
+        over a collected source, the ``_m_row`` of every matched row.
+        Returns (rows to write or None, the vector, the collected
+        Arrow table)."""
+        if writes:
+            # the collect and the write both read the frame:
+            # checkpoint so the scan runs once
+            ruled = ruled.localCheckpoint(eager=False)
+        got = ruled.select(
+            *[
+                c for c in ("_row_file", "_row_pos", "_m_touch", "_m_row")
+                if c in ruled.columns
+            ]
+        ).toArrow()
+        hits = got.filter(got["_m_touch"]).to_pylist()
+        out = (
+            ruled.filter(F.col("_m_touch") & F.col("_m_keep")).select(*cols)
+            if writes
+            else None
+        )
+        return out, self._dv_from_hits(hits, old), got
+
+    def _dv_from_hits(self, hits, old: list[str]) -> dict[str, list[int]]:
+        """(file, position) collect rows -> the commit's dv map,
+        keyed by table-relative path."""
+        by_base = {os.path.basename(f): f for f in old}
+        new_dv: dict[str, list[int]] = {}
+        for r in hits:
+            rel = by_base.get(r["_row_file"])
+            if rel is None:  # pragma: no cover - basenames are uuids
+                raise RuntimeError(f"unknown file in DV scan: {r}")
+            new_dv.setdefault(rel, []).append(int(r["_row_pos"]))
+        return {f: sorted(p) for f, p in new_dv.items()}
+
+    def _dml_commit(
+        self,
+        action: dict,
+        out: DataFrame | None,
         schemas: list[str],
         read_v: int,
-        dvs: dict[str, list[int]],
-        txn_action: dict,
-        read_bounds: dict[str, tuple] | None = None,
-        new_cols: list[str] | None = None,
-        map_doc: dict | None = None,
-        set_exprs: dict[str, str] | None = None,
-        insert_values: dict[str, str] | None = None,
-        matched_condition: str | None = None,
-        not_matched_condition: str | None = None,
-        matched_clauses: list[dict] | None = None,
+        read_bounds: dict[str, tuple] | None,
+        evolved: tuple = (),
     ) -> int:
-        """Positional MERGE: one dv-filtered scan with position
-        columns resolves the matched target rows; their positions
-        become this commit's deletion vector, and the postimages
-        (matched rows with source-carried columns replaced) plus the
-        unmatched-source inserts are appended as new files — all
-        under ONE commit. The collect moves (file, position) pairs
-        only — O(matched rows) of metadata, never row data; with a
-        local source it also names the matched source rows, so the
-        inserts need no anti-join. The matched frame is checkpointed
-        because the collect and the postimage build both read it."""
-        action_base = {"op": "merge_dv", **txn_action}
-        source = src.df
-        rt = self._row_tracking_state()
-        raw = self._read_files(
-            old, schemas, dvs, positions=True, keep_rt=bool(rt)
-        )
-        matched = raw.join(src.keys, keys)
-        if rt is not None:
-            # update postimages keep their row id; versions default
-            # to this commit; INSERTS carry no id column at all and
-            # get base + row_index in their fresh files
-            matched = self._rt_attach(matched, old, rt).drop(self._RT_VER)
-        src_cols = [c for c in source.columns if c not in keys]
-        if src.table is None:
-            # the insert anti-join keys are ALL key-matched rows — a
-            # matched clause's condition narrows what the clause
-            # touches, never what counts as "matched" (Delta
-            # semantics). Pinned: the condition filter below would
-            # otherwise force the anti-join to re-run the scan
-            all_matched_keys = (
-                matched.select(*keys).distinct().localCheckpoint(eager=False)
-            )
-        fires = F.lit(True)
-        if matched_clauses is not None:
-            # multi-clause (r13): one join, ordered first-true-wins
-            # dispatch; EVERY fired row is dv-hidden (delete-fired
-            # rows hide with no postimage, update-fired rows re-emit
-            # their clause's postimage below)
-            matched = self._join_src_slots(
-                matched, source, keys, src_cols, src.sizes
-            ).withColumn(
-                "_m_fired", self._fired_col(matched_clauses, src_cols)
-            )
-            fires = F.col("_m_fired") > 0
-        elif matched_condition is not None:
-            # conditioned matched clause: the dv hides exactly the
-            # condition-passing rows — join the source columns the
-            # condition may read, and carry the _src_ slots forward
-            # so the postimage build skips its own join
-            matched = self._join_src_slots(
-                matched, source, keys, src_cols, src.sizes
-            )
-            fires = F.coalesce(
-                F.expr(
-                    self._rewrite_source_refs(matched_condition, src_cols)
-                ),
-                F.lit(False),
-            )
-        matched = matched.withColumn("_m_fires", fires).localCheckpoint(
-            eager=False
-        )
-        # insert-only merge (r13): no matched clause hides nothing —
-        # matched target rows stay untouched
-        insert_only = when_matched is None and matched_clauses is None
-        hits: list = []
-        if src.table is not None:
-            got = matched.select(
-                "_row_file", "_row_pos", "_m_row", "_m_fires"
-            ).toArrow()
-            matched_rows = got["_m_row"].to_numpy()
-            if not insert_only:
-                hits = got.filter(got["_m_fires"]).to_pylist()
-        elif not insert_only:
-            hits = (
-                matched.filter("_m_fires")
-                .select("_row_file", "_row_pos")
-                .collect()
-            )
-        matched = matched.filter("_m_fires")
-        out_cols = [
-            c for c in matched.columns
-            if c not in (
-                "_row_file", "_row_pos", "_m_fired", "_m_fires", "_m_row"
-            )
-            and not c.startswith("_src_")
-        ]
-        parts: list[DataFrame] = []
-        if hits and matched_clauses is not None:
-            # update-fired rows re-emit their clause's postimage;
-            # delete-fired rows are dv-hidden with no postimage
-            upd_idx = [
-                i
-                for i, cl in enumerate(matched_clauses, start=1)
-                if cl["action"] == "update"
-            ]
-            if upd_idx:
-                ttypes = dict(matched.dtypes)
-                cl_assigned = set().union(
-                    *[
-                        set(cl.get("set") or ())
-                        for cl in matched_clauses
-                        if cl["action"] == "update"
-                    ]
-                )
-                parts.append(
-                    self._regen_after_assign(
-                        matched.filter(
-                            F.col("_m_fired").isin(upd_idx)
-                        ).select(
-                            *[
-                                self._clause_proj(
-                                    c, matched_clauses, src_cols,
-                                    ttypes,
-                                ).alias(c)
-                                for c in out_cols
-                            ]
-                        ),
-                        cl_assigned,
-                    )
-                )
-        elif hits and when_matched == "update":
-            # postimage multiplicity equals the TARGET's (duplicate-
-            # keyed target rows each updated, like the rewrite path);
-            # columns the source lacks keep the target value
-            upd = (
-                matched
-                if matched_condition is not None
-                else self._join_src_slots(
-                    matched, source, keys, src_cols, src.sizes
-                )
-            )
-            if set_exprs is not None:
-                # per-column SET (r13): same projection contract as
-                # the rewrite path — assigned columns evaluate, the
-                # rest keep the target value, store-assign casts
-                rw = {
-                    c: self._rewrite_source_refs(e, src_cols)
-                    for c, e in set_exprs.items()
-                }
-                ttypes = dict(matched.dtypes)
-                parts.append(
-                    self._regen_after_assign(
-                        upd.select(
-                            *[
-                                F.expr(rw[c]).cast(ttypes[c]).alias(c)
-                                if c in rw
-                                else F.col(c)
-                                for c in out_cols
-                            ]
-                        ),
-                        set_exprs,
-                    )
-                )
-            else:
-                parts.append(
-                    upd.select(
-                        *[
-                            F.col(f"_src_{c}").alias(c) if c in src_cols
-                            else F.col(c)
-                            for c in out_cols
-                        ],
-                        # schema evolution: postimages carry the
-                        # source's new columns (matched lacks them by
-                        # definition)
-                        *[
-                            F.col(f"_src_{c}").alias(c)
-                            for c in (new_cols or [])
-                        ],
-                    )
-                )
-        if when_not_matched == "insert":
-            parts.append(
-                self._insert_rows(
-                    self._unmatched_source(src, matched_rows)
-                    if src.table is not None
-                    else source.join(all_matched_keys, keys, "left_anti"),
-                    not_matched_condition,
-                    insert_values,
-                    schemas,
-                )
-            )
-        out: DataFrame | None = None
-        for p in parts:
-            out = p if out is None else out.unionByName(
-                p, allowMissingColumns=True
-            )
-        if out is None and not hits:
-            return self._commit(
-                {**action_base, "dv": {}, "add": []}, read_version=read_v, read_bounds=read_bounds
-            )
+        """Both writers' commit: ``out`` (or nothing) conformed to the
+        table schema, checked against every CHECK constraint unless
+        the statement only deletes, and written; then one commit with
+        the writer's remove-list or vector. A MERGE also records its
+        output schema, ``evolved`` columns included."""
         added: list[str] = []
+        op = action["op"].removesuffix("_dv")
         if out is not None:
-            out = self._conform(
-                out, schemas, keep=(self._RT_ID, *(new_cols or ()))
-            )
-            self._enforce_constraints(out, "merge")
+            out = self._conform(out, schemas, keep=(*self._RT_COLS, *evolved))
+            if op != "delete":
+                self._enforce_constraints(out, op)
             added = self._write_files(out)
-        action = {**action_base,
-                  "dv": self._dv_from_hits(hits, old),
-                  "add": added}
-        if map_doc:
-            action["column_mapping"] = map_doc
-        if new_cols and out is not None:
-            # evolved columns ride this commit's schema — without it
-            # the scan would keep projecting only the committed
-            # fields and the new data would be invisible
-            sch = out
-            if self._RT_ID in sch.columns:
-                sch = sch.drop(self._RT_ID)
-            action["schema"] = sch.schema.json()
+            if op == "merge":
+                action["schema"] = out.drop(*self._RT_COLS).schema.json()
         return self._commit(
-            action, read_version=read_v, read_bounds=read_bounds,
+            {**action, "add": added},
+            read_version=read_v, read_bounds=read_bounds,
         )
 
     @staticmethod
@@ -3591,73 +3389,6 @@ class TransactionalLake:
             rf"{guard}(\d+){guard}", lambda m: lits[int(m.group(1))], s
         )
 
-    @classmethod
-    def _fired_col(cls, matched_clauses: list[dict], src_cols) -> "F.Column":
-        """First-true-wins clause dispatch: a 1-based clause index
-        per joined row (0 = no clause fired). ``F.when`` chains
-        evaluate in order, so the FIRST true condition claims the
-        row — Delta's multi-clause ordering. NULL conditions are
-        not-true (three-valued guard)."""
-        chain = None
-        for i, cl in enumerate(matched_clauses, start=1):
-            c = cl.get("condition")
-            cond = (
-                F.coalesce(
-                    F.expr(cls._rewrite_source_refs(c, src_cols)),
-                    F.lit(False),
-                )
-                if c is not None
-                else F.lit(True)
-            )
-            chain = (
-                F.when(cond, F.lit(i))
-                if chain is None
-                else chain.when(cond, F.lit(i))
-            )
-        return chain.otherwise(F.lit(0))
-
-    @classmethod
-    def _clause_proj(
-        cls,
-        c: str,
-        matched_clauses: list[dict],
-        src_cols,
-        ttypes: dict[str, str],
-    ) -> "F.Column":
-        """Output expression for column ``c`` over the joined +
-        ``_m_fired`` frame: each UPDATE clause contributes its
-        postimage when it fired (whole-row: source value for
-        source-carried columns; SET list: the expression for
-        assigned columns), everything else keeps the target value.
-        Row-tracking version resets whenever an update fired."""
-        e = None
-        for i, cl in enumerate(matched_clauses, start=1):
-            if cl["action"] != "update":
-                continue
-            sset = cl.get("set")
-            if sset is None:
-                post = (
-                    F.col(f"_src_{c}")
-                    if c in src_cols
-                    else (
-                        F.lit(None).cast("bigint")
-                        if c == cls._RT_VER
-                        else None
-                    )
-                )
-            elif c in sset:
-                post = F.expr(
-                    cls._rewrite_source_refs(sset[c], src_cols)
-                ).cast(ttypes[c])
-            elif c == cls._RT_VER:
-                post = F.lit(None).cast("bigint")
-            else:
-                post = None
-            if post is not None:
-                hit = F.col("_m_fired") == i
-                e = F.when(hit, post) if e is None else e.when(hit, post)
-        return e.otherwise(F.col(c)) if e is not None else F.col(c)
-
     def _join_src_slots(
         self,
         left: DataFrame,
@@ -3671,17 +3402,15 @@ class TransactionalLake:
         source columns renamed to their ``_src_<col>`` slots — the
         frame every SET expression, clause condition, and whole-row
         postimage reads. Broadcast-gated by the measured source
-        bytes; the ONE join shape all merge branches share (review
-        find r13: this block was copy-pasted five times). A ``left``
-        join also carries ``_m_hit``: TRUE on rows with a source
-        match, NULL on the rest."""
-        hit = [F.lit(True).alias("_m_hit")] if how == "left" else []
+        bytes; the ONE join shape both MERGE writers share. The join
+        also carries ``_m_hit``: TRUE on rows with a source match, NULL
+        on the rest of a ``left`` join."""
         return left.join(
             self._maybe_broadcast(
                 source.select(
                     *keys,
                     *[F.col(c).alias(f"_src_{c}") for c in src_cols],
-                    *hit,
+                    F.lit(True).alias("_m_hit"),
                 ),
                 est_bytes=sum(src_bytes[c] for c in (*keys, *src_cols)),
             ),
@@ -3918,6 +3647,9 @@ class TransactionalLake:
         silent evolution. Merge KEYS must already exist in the
         target either way.
 
+        Every clause below becomes one entry of the DML row rule
+        (:meth:`_dml_rule`), which alone decides what each target row
+        becomes; ``mode`` picks only the writer that records it.
         ``mode=None`` (default) honors the table's
         ``delta.enableDeletionVectors`` property — Delta's own
         resolution; plain tables rewrite. ``mode="rewrite"`` is
@@ -4030,12 +3762,12 @@ class TransactionalLake:
         ``not_matched_condition`` — unmatched source rows failing it
         (source columns) do not insert; ``by_source_condition`` —
         unmatched target rows failing it (target columns only) are
-        left untouched by the BY SOURCE action. Matched/by-source
-        conditions are rewrite-mode; dv mode supports
-        ``not_matched_condition`` and conditioned matched clauses
-        via the same joined filter (hits shrink to the
-        condition-passing rows, so the dv hides exactly what the
-        clause touches).
+        left untouched by the BY SOURCE action.
+
+        Modes: ``mode="dv"`` accepts every clause and condition except
+        the BY SOURCE ones (``when_not_matched_by_source``,
+        ``by_source_set``, ``by_source_condition``), which are
+        copy-on-write only; ``mode="rewrite"`` accepts all of them.
         """
         # mode=None honors delta.enableDeletionVectors (Delta's own
         # resolution); an implicit dv resolution with a BY SOURCE
@@ -4249,6 +3981,25 @@ class TransactionalLake:
                 "copy-on-write shape — a dv that hides most of the "
                 "table defeats merge-on-read's point"
             )
+        # the statement as the row rule's ordered clause list
+        # (:meth:`_dml_rule`): the matched clauses, then BY SOURCE
+        clauses = (
+            list(matched_clauses)
+            if matched_clauses is not None
+            else [
+                {"action": when_matched, "condition": matched_condition,
+                 "set": set_exprs}
+            ]
+            if when_matched is not None
+            else []
+        )
+        has_matched = bool(clauses)
+        if when_not_matched_by_source != "ignore":
+            clauses.append(
+                {"action": when_not_matched_by_source,
+                 "condition": by_source_condition, "set": by_source_set,
+                 "by_source": True}
+            )
         old, schemas, read_v, dvs = self._snapshot_state()
         # a merge READS the target rows matching the join keys, so
         # declared bounds must cover every key column or the scoped
@@ -4271,18 +4022,10 @@ class TransactionalLake:
         # expression naming a column the source lacks still fails
         # loudly at analysis (r15 — correlated-scalar DML sources
         # carry keys + one computed column, never the target schema)
-        whole_row_action = (
-            (
-                matched_clauses is None
-                and when_matched == "update"
-                and set_exprs is None
-            )
-            or any(
-                cl["action"] == "update" and not cl.get("set")
-                for cl in (matched_clauses or ())
-            )
-            or (when_not_matched == "insert" and insert_values is None)
-        )
+        whole_row_action = any(
+            cl["action"] == "update" and cl.get("set") is None
+            for cl in clauses
+        ) or (when_not_matched == "insert" and insert_values is None)
         if whole_row_action or schema_evolution:
             self._check_schema(
                 source, merge_schema=schema_evolution, schemas=schemas
@@ -4386,284 +4129,127 @@ class TransactionalLake:
         # rows table-wide, so it probes unpruned.
         probe_files = (
             self._prune_by_key_ranges(old, src.ranges) if src.ranges else old
-        )
-        if mode == "dv":
-            return self._merge_dv(
-                src, keys, when_matched, when_not_matched,
-                probe_files or old[:1], schemas, read_v, dvs,
-                txn_action, read_bounds,
-                new_cols=new_cols, map_doc=ext_doc,
-                set_exprs=set_exprs,
-                insert_values=insert_values,
-                matched_condition=matched_condition,
-                not_matched_condition=not_matched_condition,
-                matched_clauses=matched_clauses,
-            )
-        import pyarrow.compute as pc
-
-        snap = self._read_files(probe_files or old[:1], schemas, dvs=dvs)
-        # the probe: target rows joined to the source keys. For a
-        # local source the collect moves (file, source row) pairs,
-        # and so also names the source rows that matched: at most
-        # one pair per source row unless the target repeats a key,
-        # so past that many the pairs are aggregated instead and the
-        # driver still holds O(files + source rows). Above the bound
-        # it moves the file set alone (collect_set bounds each task
-        # at the file count).
-        hits = snap.select(
-            F.col("_metadata.file_path").alias("_m_file"), *keys
-        ).join(src.keys, keys)
-        if src.table is not None:
-            import numpy as np
-
-            pairs = hits.select("_m_file", "_m_row")
-            got = pairs.limit(src.table.num_rows + 1).toArrow()
-            if got.num_rows <= src.table.num_rows:
-                files = pc.unique(got["_m_file"]).to_pylist()
-                matched_rows = got["_m_row"].to_numpy()
-            else:
-                files, rows = pairs.agg(
-                    F.collect_set("_m_file"), F.collect_set("_m_row")
-                ).first()
-                matched_rows = np.array(rows, dtype=np.int64)
-            affected = self._rel_paths(files)
-        else:
-            affected = self._rel_paths(
-                list(hits.agg(F.collect_set("_m_file")).first()[0] or [])
-            )
-        if when_not_matched_by_source in ("delete", "update"):
-            # Delta WHEN NOT MATCHED BY SOURCE THEN DELETE/UPDATE:
-            # target rows with no source key match go (or take the
-            # by_source_set assignments). Files holding such a
-            # row join the affected set (their survivors are the
-            # MATCHED rows now); a file whose every row matches stays
-            # scoped by the probe, not swept in wholesale.
-            unmatched_files = self._rel_paths(
-                list(
-                    snap.select(
-                        F.col("_metadata.file_path").alias("f"), *keys
-                    )
-                    .join(src.keys.select(*keys), keys, "left_anti")
-                    .agg(F.collect_set("f").alias("fs"))
-                    .first()["fs"]
-                    or []
-                )
-            )
-            affected = sorted(set(affected) | set(unmatched_files))
-        parts: list[DataFrame] = []
+        ) or old[:1]
         rt = self._row_tracking_state()
-        # INSERT-ONLY merge (r13, review find): no matched clause and
-        # no by-source clause means NO existing row changes — the
-        # affected files stay live (remove nothing, rewrite nothing).
-        # Before this, the matched rows were silently whole-row
-        # updated.
-        has_matched = when_matched is not None or matched_clauses is not None
-        insert_only = (
-            not has_matched and when_not_matched_by_source == "ignore"
-        )
-        removes = [] if insert_only else affected
-        aff_df = (
-            self._rewrite_src(affected, schemas, dvs, rt)
-            if affected
-            else None
-        )
         src_cols = [c for c in source.columns if c not in keys]
-        if aff_df is not None and not insert_only:
-            # ONE left join of the affected files' rows to the source
-            # yields every output row from one scan: a row with no
-            # source match (``_m_hit`` NULL) is a survivor or a BY
-            # SOURCE target, a matched row takes the matched clause.
-            # Each clause is a keep condition plus per-column
-            # postimages; the output is one filter and one CASE per
-            # column. Without a matched clause the join needs only
-            # the (unique) keys, so matched rows never multiply.
-            j = self._join_src_slots(
-                aff_df,
-                source if has_matched else src.keys,
-                keys,
-                src_cols if has_matched else [],
-                src.sizes,
-                how="left",
-            )
-            hit = F.col("_m_hit").isNotNull()
-            ttypes = dict(aff_df.dtypes)
-            # an updated row keeps its row id; its commit version
-            # resets to this commit (the file default)
-            reset = {self._RT_VER: F.lit(None).cast("bigint")}
-            keep_m, post_m, evolved = F.lit(True), {}, []
-            assigned: set = set()
-            if matched_clauses is not None:
-                # multi-clause, FIRST-TRUE-WINS (r13): ``_m_fired`` is
-                # the 1-based index of the first clause whose
-                # condition holds (0 = none fired -> untouched);
-                # delete-fired rows drop, update-fired rows take
-                # their clause's postimage
-                j = j.withColumn(
-                    "_m_fired", self._fired_col(matched_clauses, src_cols)
-                )
-                del_idx = [
-                    i
-                    for i, cl in enumerate(matched_clauses, start=1)
-                    if cl["action"] == "delete"
-                ]
-                if del_idx:
-                    keep_m = ~F.col("_m_fired").isin(del_idx)
-                post_m = {
-                    c: self._clause_proj(c, matched_clauses, src_cols, ttypes)
-                    for c in aff_df.columns
-                }
-                for cl in matched_clauses:
-                    if cl["action"] == "update":
-                        assigned |= set(cl.get("set") or ())
-            elif when_matched is not None:
-                # a clause condition that is not TRUE leaves the row
-                # untouched (kept on update, surviving a delete)
-                m_cond = F.coalesce(
-                    F.expr(
-                        self._rewrite_source_refs(
-                            matched_condition or "true", src_cols
-                        )
-                    ),
-                    F.lit(False),
-                )
-                if when_matched == "delete":
-                    keep_m = ~m_cond
+        if mode == "rewrite":
+            import pyarrow.compute as pc
+
+            snap = self._read_files(probe_files, schemas, dvs=dvs)
+            # the probe: target rows joined to the source keys. For a
+            # local source the collect moves (file, source row) pairs,
+            # and so also names the source rows that matched: at most
+            # one pair per source row unless the target repeats a key,
+            # so past that many the pairs are aggregated instead and
+            # the driver still holds O(files + source rows). Above the
+            # bound it moves the file set alone (collect_set bounds
+            # each task at the file count).
+            hits = snap.select(
+                F.col("_metadata.file_path").alias("_m_file"), *keys
+            ).join(src.keys, keys)
+            if src.table is not None:
+                import numpy as np
+
+                pairs = hits.select("_m_file", "_m_row")
+                got = pairs.limit(src.table.num_rows + 1).toArrow()
+                if got.num_rows <= src.table.num_rows:
+                    files = pc.unique(got["_m_file"]).to_pylist()
+                    matched_rows = got["_m_row"].to_numpy()
                 else:
-                    if set_exprs is not None:
-                        # per-column SET (r13): assigned columns take
-                        # their expression (target cols bare, source
-                        # cols via _src_ slots) store-assigned to the
-                        # committed type; the rest keep the target
-                        assigned = set(set_exprs)
-                        post = {
-                            c: F.expr(
-                                self._rewrite_source_refs(e, src_cols)
-                            ).cast(ttypes[c])
-                            for c, e in set_exprs.items()
-                        }
-                    else:
-                        # whole row (Delta update-by-name): columns the
-                        # source carries take its value, the rest keep
-                        # the target's — never nulled. Evolved source
-                        # columns ride the postimage too.
-                        post = {c: F.col(f"_src_{c}") for c in src_cols}
-                        evolved = [
-                            F.when(hit & m_cond, F.col(f"_src_{c}")).alias(c)
-                            for c in new_cols
-                        ]
-                    post_m = {
-                        c: F.when(m_cond, e).otherwise(F.col(c))
-                        for c, e in {**post, **reset}.items()
-                        if c in ttypes
-                    }
-            # the unmatched side: survivors, or the BY SOURCE clause
-            # (r12/r13; target columns only — there is no source row)
-            keep_u, post_u = F.lit(True), {}
-            bs_cond = F.coalesce(
-                F.expr(by_source_condition or "true"), F.lit(False)
-            )
-            if when_not_matched_by_source == "delete":
-                keep_u = ~bs_cond
-            elif when_not_matched_by_source == "update":
-                assigned |= set(by_source_set)
-                post_u = {
-                    c: F.when(bs_cond, e).otherwise(F.col(c))
-                    for c, e in {
-                        **{
-                            c: F.expr(e).cast(ttypes[c])
-                            for c, e in by_source_set.items()
-                        },
-                        **reset,
-                    }.items()
-                    if c in ttypes
-                }
-            parts.append(
-                self._regen_after_assign(
-                    j.filter(F.when(hit, keep_m).otherwise(keep_u)).select(
-                        *[
-                            F.when(hit, post_m.get(c, F.col(c)))
-                            .otherwise(post_u.get(c, F.col(c)))
-                            .alias(c)
-                            for c in aff_df.columns
-                        ],
-                        *evolved,
-                    ),
-                    assigned,
+                    files, rows = pairs.agg(
+                        F.collect_set("_m_file"), F.collect_set("_m_row")
+                    ).first()
+                    matched_rows = np.array(rows, dtype=np.int64)
+                read = self._rel_paths(files)
+            else:
+                read = self._rel_paths(
+                    list(hits.agg(F.collect_set("_m_file")).first()[0] or [])
                 )
-            )
-        if when_not_matched == "insert":
-            parts.append(
-                self._insert_rows(
-                    self._unmatched_source(src, matched_rows)
-                    if src.table is not None
-                    # a source key with ANY target match made its
-                    # file affected, so the anti-join needs only the
-                    # affected files' keys — never a full-table
-                    # distinct
-                    else source.join(
-                        aff_df.select(*keys).distinct(), keys, "left_anti"
+            # INSERT-ONLY merge (r13): no clause touches an existing
+            # row, so no file is rewritten
+            affected = read if clauses else []
+            if when_not_matched_by_source != "ignore":
+                # WHEN NOT MATCHED BY SOURCE: files holding a target row
+                # with no source key match join the affected set; a
+                # file whose every row matches stays scoped by the
+                # probe, not swept in wholesale
+                affected = sorted(set(affected) | set(self._rel_paths(
+                    list(
+                        snap.select(
+                            F.col("_metadata.file_path").alias("f"), *keys
+                        )
+                        .join(src.keys.select(*keys), keys, "left_anti")
+                        .agg(F.collect_set("f").alias("fs"))
+                        .first()["fs"]
+                        or []
                     )
-                    if aff_df is not None
-                    else source,
-                    not_matched_condition,
-                    insert_values,
-                    schemas,
+                )))
+            action = {"op": "merge", "remove": affected}
+            out = None
+            if affected:
+                # ONE left join of the affected files' rows to the
+                # source yields survivors and postimages from one scan.
+                # Without a matched clause the join needs only the
+                # (unique) keys, so matched rows never multiply.
+                ruled, cols = self._dml_rule(
+                    self._join_src_slots(
+                        self._rewrite_src(affected, schemas, dvs, rt),
+                        source if has_matched else src.keys,
+                        keys,
+                        src_cols if has_matched else [],
+                        src.sizes,
+                        how="left",
+                    ),
+                    clauses, src_cols,
                 )
+                out = self._rewrite_write(ruled, cols)
+        else:
+            # the positional read of the candidate files, inner-joined
+            # to the source: every row is a matched target row
+            read = probe_files
+            writes = any(cl["action"] == "update" for cl in clauses)
+            rows = self._read_files(
+                read, schemas, dvs, positions=True, keep_rt=bool(rt) and writes
+            ).join(src.keys, keys)
+            if rt is not None and writes:
+                rows = self._rt_attach(rows, old, rt)
+            if clauses:
+                rows = self._join_src_slots(
+                    rows, source, keys, src_cols, src.sizes
+                )
+            ruled, cols = self._dml_rule(rows, clauses, src_cols)
+            out, dv, got = self._dv_write(ruled, cols, old, writes)
+            action = {"op": "merge_dv", "dv": dv}
+            if src.table is not None:
+                matched_rows = got["_m_row"].to_numpy()
+        if when_not_matched == "insert":
+            # a source key with ANY target match lies in the files the
+            # writer read, so the large-source anti-join needs only
+            # their keys — never a full-table distinct
+            ins = self._insert_rows(
+                self._unmatched_source(src, matched_rows)
+                if src.table is not None
+                else source.join(
+                    self._read_files(read, schemas, dvs).select(*keys)
+                    .distinct(),
+                    keys,
+                    "left_anti",
+                ),
+                not_matched_condition,
+                insert_values,
+                schemas,
             )
-        out: DataFrame | None = None
-        for p in parts:
             # null-fill columns a part lacks: inserts carry only the
             # source's columns, survivors and postimages lack the
             # columns this merge evolves in
-            out = p if out is None else out.unionByName(
-                p, allowMissingColumns=True
+            out = ins if out is None else out.unionByName(
+                ins, allowMissingColumns=True
             )
-        if out is not None:
-            types = dict(snap.dtypes)
-            want = list(snap.columns)
-            if new_cols:
-                # evolved columns join the schema AFTER the committed
-                # fields (Delta's evolution order), typed by the source
-                src_types = dict(source.dtypes)
-                want += new_cols
-                types.update({c: src_types[c] for c in new_cols})
-            if rt is not None:
-                # inserts carry no rt columns — null-fill so fresh
-                # rows take base + row_index in their new files
-                want += list(self._RT_COLS)
-                types.update(dict.fromkeys(self._RT_COLS, "bigint"))
-            missing = [c for c in want if c not in out.columns]
-            out = out.select(
-                *[
-                    F.lit(None).cast(types[c]).alias(c)
-                    if c in missing
-                    else c
-                    for c in want
-                ]
-            )
-        if out is None:
-            # delete+ignore with nothing affected is a no-op commit —
-            # but a by-source/matched delete combination can empty
-            # the affected set entirely (every probed file's rows
-            # deleted, nothing inserted): the removals must still
-            # commit (r12)
-            return self._commit(
-                {"op": "merge", "add": [], "remove": removes,
-                 **txn_action},
-                read_version=read_v, read_bounds=read_bounds,
-            )
-        self._enforce_constraints(out, "merge")
-        added = self._write_files(out)
-        v = self._commit(
-            {
-                "op": "merge",
-                "add": added,
-                "remove": removes,
-                "schema": out.drop(*self._RT_COLS).schema.json(),
-                **({"column_mapping": ext_doc} if ext_doc else {}),
-                **txn_action,
-            },
-            read_version=read_v, read_bounds=read_bounds,
+        if ext_doc and out is not None:
+            action["column_mapping"] = ext_doc
+        v = self._dml_commit(
+            {**action, **txn_action}, out, schemas, read_v, read_bounds,
+            evolved=tuple(new_cols),
         )
         self._maybe_auto_compact()
         return v
@@ -4890,16 +4476,11 @@ class TransactionalLake:
         log (one broadcast join per emission, no shuffle)."""
         versions = logcore.commit_versions(self.log_path)
         all_base: dict[str, list[int]] = {}
-        if with_row_ids:
-            if self._row_tracking_state() is None:
-                raise ValueError(
-                    "read_changes(with_row_ids=True) requires "
-                    "enable_row_tracking()"
-                )
-            # per-file base ranges are write-once: every recorded
-            # assignment resolves, so emissions from commits BEFORE a
-            # backfilling enable still do
-            all_base = logcore.row_bases(self.log_path)
+        if with_row_ids and self._row_tracking_state() is None:
+            raise ValueError(
+                "read_changes(with_row_ids=True) requires "
+                "enable_row_tracking()"
+            )
         head = self.version
         oldest = versions[0] if versions else head + 1
         if starting_version < oldest and starting_version <= head:
@@ -4947,13 +4528,27 @@ class TransactionalLake:
             if starting_version > 0
             else None
         )
+        tail = [
+            self._read_commit(v)
+            for v in versions
+            if v > run["version"]
+            and (ending_version is None or v <= ending_version)
+        ]
+        span = [c for c in tail if c["version"] >= starting_version]
+        for c in tail[: len(tail) - len(span)]:
+            logcore.apply(run, c)
+        if with_row_ids:
+            # per-file base ranges are write-once: the files live just
+            # before the span plus every base the span records (a
+            # remove pops one, a restore re-records it) cover every
+            # file the span emits — emissions from commits BEFORE a
+            # backfilling enable included
+            all_base = dict((run["row_tracking"] or {"base": {}})["base"])
+            for c in span:
+                all_base.update(c.get("row_base", {}))
         out: DataFrame | None = None
-        for v in versions:
-            if v <= run["version"]:
-                continue
-            if ending_version is not None and v > ending_version:
-                break  # nothing past the bound emits; folds moot
-            c = self._read_commit(v)
+        for c in span:
+            v = c["version"]
             # a reset commit's REMOVED files were written under the
             # pre-reset history — their delete-emission reads must
             # use it, not the restarted one (see the emission loop)
@@ -4964,7 +4559,7 @@ class TransactionalLake:
             logcore.apply(run, c)
             run_schemas = run["schemas"]
             emit: list[DataFrame] = []
-            if v >= starting_version and c["op"] not in (
+            if c["op"] not in (
                 "compact",
                 "cluster",
                 "set_partitioning",

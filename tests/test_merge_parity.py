@@ -3,7 +3,9 @@ threshold is collected once and merged against LocalRelations; with
 ``spark.sql.autoBroadcastJoinThreshold=-1`` the same merge takes the
 checkpointed distributed plan. Each case runs both ways on fresh
 tables and compares the snapshot, the change feed of the merge and
-any error."""
+any error. The two DML writers agree too: every MERGE shape a
+deletion vector can record, and UPDATE and DELETE, leave the same
+rows and row ids with ``mode="rewrite"`` and ``mode="dv"``."""
 
 from __future__ import annotations
 
@@ -35,7 +37,10 @@ def _rows(df, ids=None):
 
 
 def _outcome(spark, root, *, target, source, schema, src_schema=None,
-             partition_by=(), row_tracking=False, **merge_kw):
+             partition_by=(), row_tracking=False, dml=None, **merge_kw):
+    """(snapshot, change feed) after merging ``source`` into a fresh
+    ``target`` table — or after ``dml(lake)`` instead, when given —
+    or ("error", message)."""
     lk = TransactionalLake(spark, root, partition_by=partition_by)
     for rows in target:
         lk.append(spark.createDataFrame(rows, schema))
@@ -46,8 +51,11 @@ def _outcome(spark, root, *, target, source, schema, src_schema=None,
         ids = {r["_row_id"]: r["note"] for r in lk.snapshot(**kw).collect()}
     base = lk.version
     try:
-        lk.merge(spark.createDataFrame(source, src_schema or schema),
-                 **merge_kw)
+        if dml is not None:
+            dml(lk)
+        else:
+            lk.merge(spark.createDataFrame(source, src_schema or schema),
+                     **merge_kw)
     except ValueError as e:
         return "error", str(e)
     changes = lk.read_changes(base + 1, **kw)
@@ -123,6 +131,57 @@ def test_local_and_distributed_merge_agree(spark, tmp_path, monkeypatch,
     )
     assert local[0] != "error", local
     assert local == dist
+
+
+def _modes_agree(spark, tmp_path, statement=None, **kw):
+    """The snapshot, with row ids, after the same MERGE — or the
+    ``statement(mode)`` DML — in each writer. Change feeds differ by
+    design: a copy-on-write rewrite emits its survivors, a deletion
+    vector does not."""
+    got = {
+        mode: _outcome(
+            spark, str(tmp_path / mode), target=TARGET, schema=SCHEMA,
+            row_tracking=True,
+            **({"dml": statement(mode)} if statement else {"mode": mode}),
+            **kw,
+        )[0]
+        for mode in ("rewrite", "dv")
+    }
+    assert got["rewrite"] != "error", got
+    assert got["rewrite"] == got["dv"]
+    return got["dv"]
+
+
+# BY SOURCE clauses are copy-on-write only
+DV_CASES = sorted(
+    c for c, kw in CASES.items() if "when_not_matched_by_source" not in kw
+)
+
+
+@pytest.mark.parametrize("case", DV_CASES)
+def test_rewrite_and_dv_merge_agree(spark, tmp_path, case):
+    kw = {k: v for k, v in CASES[case].items() if k != "mode"}
+    _modes_agree(spark, tmp_path, source=SOURCE, on="k", **kw)
+
+
+DML_CASES = {
+    "delete": lambda mode: lambda lk: lk.delete_where(
+        "k > 1 AND qty < 40", mode=mode),
+    "delete_none": lambda mode: lambda lk: lk.delete_where(
+        "qty > 1000", mode=mode),
+    "update": lambda mode: lambda lk: lk.update_where(
+        "k >= 2", {"qty": "qty + k", "note": "upper(note)"}, mode=mode),
+    "update_null_predicate": lambda mode: lambda lk: lk.update_where(
+        "k * 0 = 0", {"note": "concat(note, '!')"}, mode=mode),
+}
+
+
+@pytest.mark.parametrize("case", sorted(DML_CASES))
+def test_rewrite_and_dv_update_delete_agree(spark, tmp_path, case):
+    """UPDATE and DELETE on a row-tracked table. The NULL-keyed row
+    never satisfies a predicate over ``k``, so it is never touched."""
+    snap = _modes_agree(spark, tmp_path, DML_CASES[case], source=None)
+    assert any(r[0] is None for r in snap)
 
 
 def test_schema_evolution_agrees(spark, tmp_path, monkeypatch):

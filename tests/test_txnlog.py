@@ -1016,6 +1016,45 @@ class TestLogCheckpoints:
             (r.symbol, r._commit_version) for r in window.collect()
         ) == [("S7", 7), ("S8", 8)]
 
+    def test_change_feed_row_ids_read_only_its_span(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """With row ids, the base ids of files live before the span
+        come from the same running state and those of the span's own
+        files from its ``row_base`` entries: no commit at or below the
+        checkpoint is read, and a removed file still resolves."""
+        from market_data_lakehouse_spark import logcore
+
+        lk = self._lake(spark, tmp_path, every=5)  # checkpoints at 4, 9
+        lk.append(_df(spark, [("S0", 0.0)]))
+        lk.enable_row_tracking()
+        for i in range(1, 10):
+            lk.append(_df(spark, [(f"S{i}", float(i))]))
+        ids = {
+            r.symbol: r._row_id
+            for r in lk.snapshot(with_row_ids=True).collect()
+        }
+        start = lk.delete_where("symbol = 'S3'")
+        assert start == 11
+        lk.update_where("symbol = 'S0'", {"price": "price + 1"})
+        seen: list[int] = []
+        orig = logcore.read_commit
+
+        def spy(log_path, v):
+            seen.append(v)
+            return orig(log_path, v)
+
+        monkeypatch.setattr(logcore, "read_commit", spy)
+        feed = lk.read_changes(start, with_row_ids=True)
+        assert min(seen) > 9, f"commits read below the checkpoint: {seen}"
+        assert sorted(
+            (r.symbol, r._change_type, r._row_id) for r in feed.collect()
+        ) == sorted([
+            ("S3", "delete", ids["S3"]),
+            ("S0", "delete", ids["S0"]),
+            ("S0", "insert", ids["S0"]),
+        ])
+
     def test_time_travel_before_checkpoint_still_works(self, spark, tmp_path):
         lk = self._lake(spark, tmp_path, every=3)
         for i in range(8):

@@ -68,7 +68,7 @@ IDENTITY = {
     ],
     "q_deletion_vectors": [
         ("market_data_lakehouse_spark/queries/lakehouse_query.py", "s12_deletion_vectors"),
-        ("market_data_lakehouse_spark/txnlog.py", "TransactionalLake._delete_where_dv"),
+        ("market_data_lakehouse_spark/txnlog.py", "TransactionalLake._dv_write"),
         ("market_data_lakehouse_spark/txnlog.py", "TransactionalLake._read_files"),
         ("market_data_lakehouse_spark/txnlog.py", "TransactionalLake.snapshot"),
     ],
