@@ -3154,36 +3154,34 @@ class TransactionalLake:
         # — pruned files provably hold no matching row
         cand = self._dml_prune(old, predicate) if old else []
         out = None
-        if cand:
-            rt = self._row_tracking_state()
-            if mode == "rewrite":
-                snap = self._read_files(cand, schemas, dvs=dvs)
-                affected = self._affected_files(
-                    snap, F.coalesce(F.expr(predicate), F.lit(False))
+        if cand and mode == "rewrite":
+            snap = self._read_files(cand, schemas, dvs=dvs)
+            affected = self._affected_files(
+                snap, F.coalesce(F.expr(predicate), F.lit(False))
+            )
+            if affected:
+                ruled, cols = self._dml_rule(
+                    self._rewrite_src(
+                        affected, schemas, dvs, self._row_tracking_state()
+                    ),
+                    [clause],
                 )
-                if affected:
-                    ruled, cols = self._dml_rule(
-                        self._rewrite_src(affected, schemas, dvs, rt),
-                        [clause],
-                    )
-                    out = self._rewrite_write(ruled, cols)
-                    action["remove"] = affected
-            else:
-                writes = clause["action"] == "update"
-                rt = rt if writes else None
-                rows = self._read_files(
-                    cand, schemas, dvs, positions=True, keep_rt=bool(rt)
-                )
-                if rt is not None:
-                    rows = self._rt_attach(rows, old, rt)
-                ruled, cols = self._dml_rule(rows, [clause])
-                # only touched rows reach the vector or the new files
-                out, action["dv"], _got = self._dv_write(
-                    ruled.filter("_m_touch"), cols, old, writes
-                )
-        return self._dml_commit(
-            action, out, schemas, read_v, read_bounds
-        )
+                out = self._rewrite_write(ruled, cols)
+                action["remove"] = affected
+        elif cand:
+            writes = clause["action"] == "update"
+            rt = self._row_tracking_state() if writes else None
+            rows = self._read_files(
+                cand, schemas, dvs, positions=True, keep_rt=bool(rt)
+            )
+            if rt is not None:
+                rows = self._rt_attach(rows, old, rt)
+            ruled, cols = self._dml_rule(rows, [clause])
+            # only touched rows reach the vector or the new files
+            out, action["dv"], _ = self._dv_write(
+                ruled.filter("_m_touch"), cols, old, writes
+            )
+        return self._dml_commit(action, out, schemas, read_v, read_bounds)
 
     def _dml_rule(
         self,
