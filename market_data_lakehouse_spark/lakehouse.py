@@ -1,4 +1,5 @@
-"""DataLakehouse — the reference engine's API, rebuilt on Spark.
+"""DataLakehouse — the reference engine's API, rebuilt on Spark over
+one transaction-logged table.
 
 Reference behavior being matched (citations into /root/reference):
 
@@ -20,43 +21,45 @@ Reference behavior being matched (citations into /root/reference):
 - ``QueryResult(bars, query_time_ms, total_rows_scanned)``
   (lakehouse.py:108-124) and ``IngestionStats`` (lakehouse.py:127-140).
 
+Storage is a :class:`~market_data_lakehouse_spark.txnlog.TransactionalLake`
+at the lake root, partitioned by ``date`` (the Delta-style ACID the
+reference README promises): every flush or batch is one append
+commit, every read resolves its files and schema from the log, and
+``compact()`` is an ``optimize`` commit. The same root opened as a
+``TransactionalLake`` sees the same table, with time travel, DML and
+vacuum on top.
+
 Where the reference materializes Python objects row-by-row and
 filters in list comprehensions, every method body here is a
 DataFrame plan: scan / filter / sort run JVM-side under whole-stage
 codegen, partition pruning and column pruning are Catalyst's.
 
 Scale posture (100 TB): partition by date only (not date+symbol —
-8000 symbols x 365 days = small-files explosion); rely on row-group
-statistics + optional sort-within-partition by symbol for data
-skipping on symbol predicates; ``maxRecordsPerFile`` bounds file
-size instead of the reference's uncontrolled file-per-flush
-(lakehouse.py:404).
+8000 symbols x 365 days = small-files explosion); rely on per-file
+and row-group statistics for data skipping on symbol predicates;
+``maxRecordsPerFile`` bounds file size instead of the reference's
+uncontrolled file-per-flush (lakehouse.py:404).
 """
 
 from __future__ import annotations
 
 import os
-import threading
 import time
-import uuid
 from dataclasses import dataclass, field
 from datetime import datetime
 from enum import Enum
-from typing import Iterable, Sequence
+from typing import Iterable
 
 from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from market_data_lakehouse_spark import logcore
 from market_data_lakehouse_spark.localrel import local_df
 from market_data_lakehouse_spark.schema import ASSET_CLASSES, BAR_SCHEMA
+from market_data_lakehouse_spark.txnlog import LOG_DIR, TransactionalLake
 
 DEFAULT_BATCH_SIZE = 10_000  # reference lakehouse.py:20
-
-# Serializes the write-scoped advisory-partition-size override in
-# _append: the SQL conf is session-global, so concurrent writers must
-# not interleave their set/restore sequences (see _append).
-_ADVISORY_LOCK = threading.Lock()
 
 # Staging schema for row-built batches: nullable, so a structurally
 # malformed row (missing/None field) reaches the validity split and
@@ -65,6 +68,11 @@ _ADVISORY_LOCK = threading.Lock()
 # (lakehouse.py:263-269, 292-296).
 _STAGING_SCHEMA = T.StructType(
     [T.StructField(f.name, f.dataType, True) for f in BAR_SCHEMA.fields]
+)
+
+# The table as read: the bar columns, then the ``date`` partition key.
+_LAKE_SCHEMA = T.StructType(
+    list(BAR_SCHEMA.fields) + [T.StructField("date", T.DateType())]
 )
 
 
@@ -263,12 +271,20 @@ def valid_bar() -> F.Column:
 
 
 class DataLakehouse:
-    """Date-partitioned Parquet lakehouse with buffered ingest.
+    """Date-partitioned, transaction-logged Parquet lakehouse with
+    buffered ingest.
 
     API parity with reference ``DataLakehouse`` (lakehouse.py:216-372):
     ``ingest`` / ``ingest_batch`` / ``flush`` / ``query``, plus the
     README-layer ``sql()`` surface (README.md:76-82) served by Spark
-    SQL instead of DuckDB.
+    SQL instead of DuckDB, and ``compact()``.
+
+    A facade over ``self.txn``, the
+    :class:`~market_data_lakehouse_spark.txnlog.TransactionalLake` at
+    ``base_path`` (its ``_txn_log/`` sits beside the ``date=``
+    directories). A root that holds parquet files but no log — a lake
+    written before the log existed — is adopted once, on first open,
+    by ``TransactionalLake.convert``; its files are not rewritten.
     """
 
     def __init__(
@@ -276,19 +292,23 @@ class DataLakehouse:
         spark: SparkSession,
         base_path: str,
         batch_size: int = DEFAULT_BATCH_SIZE,
-        file_format: str = "parquet",
         dead_letter_path: str | None = None,
     ) -> None:
-        if file_format not in ("parquet", "csv"):
-            raise ValueError(f"unsupported format: {file_format}")
         self.spark = spark
         self.base_path = base_path.rstrip("/")
         self.batch_size = batch_size
-        self.file_format = file_format
         self.dead_letter_path = dead_letter_path
         self._buffer: list[Row] = []
         self._total_ingested = 0
         self._total_errors = 0
+        if not os.path.isdir(
+            os.path.join(self.base_path, LOG_DIR)
+        ) and _has_parquet(self.base_path):
+            self.txn = TransactionalLake.convert(spark, self.base_path)
+        else:
+            self.txn = TransactionalLake(
+                spark, self.base_path, partition_by=("date",)
+            )
 
     @property
     def buffer_size(self) -> int:
@@ -342,7 +362,8 @@ class DataLakehouse:
         """Validated batch append (reference lakehouse.py:275-304).
 
         For DataFrame input this is the scale path: one valid/invalid
-        split, one partitioned write, no driver-side loop.
+        split, one partitioned write and one log commit, no
+        driver-side loop.
         """
         t0 = time.perf_counter()
         if isinstance(bars, DataFrame):
@@ -440,11 +461,13 @@ class DataLakehouse:
         return stats
 
     def _append(self, df: DataFrame, validate: bool) -> IngestionStats:
-        """Split valid/invalid, append valid rows partitioned by date.
+        """Split valid/invalid and commit the valid rows as one
+        ``TransactionalLake.append``, partitioned by ``date``.
 
         The reference writes one file per flush x partition
-        (lakehouse.py:392-408); ``partitionBy("date")`` is the same
-        grouping done by the writer, shuffle-free.
+        (lakehouse.py:392-408); the log's writer does the same
+        grouping after a rebalance on ``date``, and a batch with no
+        valid row commits nothing (``skip_empty``).
         """
         # ONE scan of the batch for everything (VERDICT r1 item 3):
         # the stats (valid/invalid counts, touched partitions) ride
@@ -471,69 +494,11 @@ class DataLakehouse:
                 F.collect_set(F.when(F.col("_ok"), F.col("date")))
             ).alias("n_parts"),
         )
-        out = staged.filter("_ok").drop("_ok")
-        if self.file_format == "csv":
-            # Spark's CSV writer emits MILLIsecond precision no matter
-            # the timestampFormat — "SSSSSS" zero-pads to 6 digits
-            # (.179575 -> .179000), silently truncating. A
-            # timestamp->string CAST keeps full microsecond text
-            # (mirroring the reference's ISO-text storage,
-            # /root/reference/src/market_data_lakehouse/lakehouse.py:542);
-            # _read() casts back, so X1/X2 round-trip at µs precision.
-            out = out.withColumn(
-                "timestamp", F.col("timestamp").cast("string")
-            )
-        # Rebalance on the partition column before the write:
-        # without it every input task writes a file into every
-        # touched date dir (tasks × dates small files; measured 6 s
-        # for 600 k rows / 30 dates at sf0.1) — and a narrow input
-        # (one big parquet file → 3 tasks) serializes the write.
-        # REBALANCE lets AQE both merge small dates into one task
-        # and split oversized dates across tasks, so file count
-        # tracks data size, not task count (1.3 s same batch).
-        writer = (
-            out.hint("rebalance", F.col("date"))
-            .write.mode("append")
-            .option("maxRecordsPerFile", 5_000_000)
-            .partitionBy("date")
+        out = staged.filter("_ok").select(
+            *BAR_SCHEMA.fieldNames(),
+            F.col("date").cast(self._key_type()).alias("date"),
         )
-        # Encode-parallelism override, scoped to this write: AQE's
-        # rebalance sizes output partitions by the 64 MB advisory, so
-        # a batch smaller than ~64 MB x cores encodes parquet on a
-        # handful of tasks (measured 2.5 s -> 1.5 s on a 600 k-row
-        # batch by dropping the advisory to size/cores). Target =
-        # clamp(estimated batch bytes / cores, 4..64 MB): a 100 TB
-        # batch clamps to the 64 MB default (unchanged shuffle
-        # granularity at scale); only latency-bound small batches
-        # split finer. Estimate comes free from plan statistics
-        # (scan-based; Python-row inputs report "unknown" = huge,
-        # which clamps to the default — correct, their size is
-        # bounded by batch_size anyway).
-        # The SQL conf is session-global, so the set/write/restore
-        # sequence is serialized under a process-wide lock: two
-        # concurrent writers would otherwise capture each other's
-        # temporary value as "old" and pin a tiny advisory on the
-        # session permanently. (Queries on OTHER threads compiled
-        # during a write still see the temporary value — a benign
-        # over-split; per-query confs don't exist in classic Spark.)
-        adv_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        est = int(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        cores = max(1, self.spark.sparkContext.defaultParallelism)
-        target = max(4 << 20, min(64 << 20, est // cores))
-        with _ADVISORY_LOCK:
-            old_adv = self.spark.conf.get(adv_key, None)
-            self.spark.conf.set(adv_key, str(target))
-            try:
-                if self.file_format == "csv":
-                    # timestamp already serialized as µs-exact string
-                    writer.option("header", True).csv(self.base_path)
-                else:
-                    writer.parquet(self.base_path)
-            finally:
-                if old_adv is None:
-                    self.spark.conf.unset(adv_key)
-                else:
-                    self.spark.conf.set(adv_key, old_adv)
+        self.txn.append(out, skip_empty=True)
         try:
             got = obs.get  # available once the write's action finished
         except Exception:
@@ -569,44 +534,34 @@ class DataLakehouse:
             rows_ingested=n_rows, partitions_written=n_parts, errors=errors
         )
 
+    def _key_type(self) -> str:
+        """The committed type of ``date``: ``date`` as this class
+        writes it, ``string`` on a lake adopted by
+        ``TransactionalLake.convert``, which commits partition keys
+        untyped. The append refuses a ``date`` value into a ``string``
+        column, so the key is written in the table's own type."""
+        schemas = self.txn._snapshot_state()[1]
+        return next(
+            (
+                f["type"]
+                for f in logcore.merged_fields(schemas)
+                if f["name"] == "date"
+            ),
+            "date",
+        )
+
     # ------------------------------------------------------------------
     # query (reference lakehouse.py:338-372)
     # ------------------------------------------------------------------
     def table(self) -> DataFrame:
-        df = self._read()
-        # restore canonical column order (partition col lands last)
-        return df.select(*[f.name for f in BAR_SCHEMA.fields], "date")
-
-    def _read(self) -> DataFrame:
-        full_schema = T.StructType(
-            list(BAR_SCHEMA.fields) + [T.StructField("date", T.DateType())]
-        )
-        if not os.path.isdir(self.base_path):
+        """The lake's head snapshot, its files and schema read from the
+        log (no directory listing, no footer schema inference), in
+        canonical column order with ``date`` last."""
+        if self.txn.version < 0:
             # Never-written lake: the reference returns an empty
             # QueryResult (lakehouse.py:352-356), not an error.
-            return local_df(self.spark, [], schema=full_schema)
-        if self.file_format == "csv":
-            # timestamp is stored as µs-exact CAST text (see _append);
-            # read it as a string and cast back — Spark's CSV
-            # timestampFormat parser cannot express "variable-width
-            # fraction", the cast can.
-            text_schema = T.StructType(
-                [
-                    T.StructField(f.name, T.StringType(), f.nullable)
-                    if f.name == "timestamp"
-                    else f
-                    for f in full_schema.fields
-                ]
-            )
-            df = (
-                self.spark.read.schema(text_schema)
-                .option("header", True)
-                .csv(self.base_path)
-            )
-            return df.withColumn(
-                "timestamp", F.col("timestamp").cast("timestamp")
-            )
-        return self.spark.read.parquet(self.base_path)
+            return local_df(self.spark, [], schema=_LAKE_SCHEMA)
+        return self.txn.snapshot().select(*_LAKE_SCHEMA.fieldNames())
 
     def query(
         self,
@@ -623,9 +578,10 @@ class DataLakehouse:
         - result ordered by timestamp ascending (lakehouse.py:529)
 
         Partition pruning: predicates on the ``date`` partition column
-        are derived from the time bounds so Catalyst prunes at the
-        metastore/file-listing level — including one-sided ranges the
-        reference cannot prune (lakehouse.py:374-390).
+        are derived from the time bounds so Catalyst prunes the log's
+        file list by the files' ``date=`` paths (``PartitionFilters``)
+        — including one-sided ranges the reference cannot prune
+        (lakehouse.py:374-390).
         """
         t0 = time.perf_counter()
         df = self.table()
@@ -661,77 +617,19 @@ class DataLakehouse:
     # maintenance (README-layer: compaction, README.md:138/170)
     # ------------------------------------------------------------------
     def compact(self, target_files_per_partition: int = 1) -> None:
-        """Rewrite the lake to bounded file counts per partition —
-        the reference's acknowledged small-file problem (README.md:138)
-        fixed by a repartition-rewrite (Delta OPTIMIZE equivalent
-        without the Delta jar).
+        """Rewrite each date partition into at most
+        ``target_files_per_partition`` files — the reference's
+        acknowledged small-file problem (README.md:138) — as one log
+        commit, ``TransactionalLake.optimize`` (Delta OPTIMIZE).
 
-        Distribution: hashing on (date, bucket) spreads each date
-        across ``target_files_per_partition`` shuffle tasks — NOT
-        ``repartition(n, "date")``, which buckets the whole lake into
-        n tasks total (VERDICT r1 item 4).
-
-        **Txn delegation**: when the lake root carries a transaction
-        log (a :class:`TransactionalLake` was pointed at the same
-        path), the directory swap below would bypass the log — live
-        files would change under committed versions. In that case
-        this method delegates to ``TransactionalLake.optimize()``,
-        which compacts as an ordinary LOG COMMIT: concurrent readers
-        resolve a complete snapshot before or after, never a torn
-        directory, and time travel keeps working.
-
-        **Non-txn path is best-effort only**: the swap is two
-        driver-local directory renames — the live lake is moved aside
-        BEFORE the compacted copy moves in, so no crash point ever
-        leaves the data deleted-but-unreplaced (a crash window leaves
-        either the live lake or the ``__pre_compact`` sibling fully
-        intact; recover by renaming it back). But a reader racing the
-        swap can still observe a missing directory for an instant.
-        For atomic, cluster-safe maintenance, put the lake under a
-        :class:`~market_data_lakehouse_spark.txnlog.TransactionalLake`.
+        A reader that resolved its snapshot before the commit keeps
+        reading the superseded files, and time travel keeps working:
+        they stay on disk until ``TransactionalLake.vacuum`` removes
+        them.
         """
-        from market_data_lakehouse_spark import txnlog
-
-        if os.path.isdir(os.path.join(self.base_path, txnlog.LOG_DIR)):
-            if self.file_format != "parquet":
-                raise ValueError(
-                    "a transaction log manages parquet files; a "
-                    f"{self.file_format} lake cannot share its root"
-                )
-            lake = txnlog.TransactionalLake(
-                self.spark, self.base_path, partition_by=None
-            )
-            lake.optimize(
-                files_per_partition=max(1, target_files_per_partition)
-            )
-            return
-        n = max(1, target_files_per_partition)
-        bucket = F.pmod(F.xxhash64("symbol", "timestamp"), F.lit(n))
-        tmp = f"{self.base_path}__compact_{uuid.uuid4().hex[:8]}"
-        df = self.table()
-        if self.file_format == "csv":
-            # same µs-exact text serialization as _append — a CSV
-            # timestampFormat would silently truncate to milliseconds
-            df = df.withColumn("timestamp", F.col("timestamp").cast("string"))
-        writer = (
-            df.repartition(F.col("date"), bucket)
-            .write.mode("overwrite")
-            .partitionBy("date")
+        self.txn.optimize(
+            files_per_partition=max(1, target_files_per_partition)
         )
-        if self.file_format == "csv":
-            writer.option("header", True).csv(tmp)
-        else:
-            writer.parquet(tmp)
-        import shutil
-
-        old = f"{self.base_path}__pre_compact_{uuid.uuid4().hex[:8]}"
-        shutil.move(self.base_path, old)  # live data set aside, intact
-        try:
-            shutil.move(tmp, self.base_path)  # compacted copy in place
-        except BaseException:
-            shutil.move(old, self.base_path)  # roll back, lake restored
-            raise
-        shutil.rmtree(old)  # only after the new lake is live
 
     # ------------------------------------------------------------------
     @staticmethod
@@ -755,3 +653,13 @@ class DataLakehouse:
         if r.get("asset_class") not in ASSET_CLASSES:
             return False
         return True
+
+
+def _has_parquet(root: str) -> bool:
+    """Whether ``root`` holds a data file outside hidden (``.``/``_``)
+    directories — the files ``TransactionalLake.convert`` adopts."""
+    for _dirpath, dirs, names in os.walk(root):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        if any(n.endswith(".parquet") for n in names):
+            return True
+    return False

@@ -79,13 +79,20 @@ def lakehouse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s2_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CSV sink + scan fallback (S2/S4, reference lakehouse.py:
-    427-452/603-628): same bar stream through a csv-format lake, read
-    back through the schema-applied CSV scan, aggregated per symbol.
-    Timestamps survive the text round-trip at microsecond precision."""
-    lake_dir = scratch_dir("csv")
-    lake = DataLakehouse(spark, lake_dir, file_format="csv")
-    lake.ingest_batch(_bars_from_events(spark, sf_dir))
+    """CSV sink + scan (S2/S4, reference lakehouse.py:427-452/603-628):
+    the same bar stream written as headed CSV text, loaded back through
+    ``ingest_csv_files`` (the schema-applied, PERMISSIVE CSV scan) into
+    a fresh lake, aggregated per symbol. Timestamps are written as
+    µs-exact text (a timestamp->string CAST: Spark's CSV writer pads
+    ``SSSSSS`` from milliseconds), so they survive the round-trip at
+    microsecond precision."""
+    root = scratch_dir("csv")
+    csv_dir = os.path.join(root, "bars")
+    _bars_from_events(spark, sf_dir).withColumn(
+        "timestamp", F.col("timestamp").cast("string")
+    ).write.option("header", True).csv(csv_dir)
+    lake = DataLakehouse(spark, os.path.join(root, "lake"))
+    lake.ingest_csv_files(csv_dir)
     return (
         lake.table()
         .groupBy("symbol")

@@ -57,7 +57,9 @@ def stream_ingest(
     """Micro-batch ingest into the lakehouse (T1): every trigger, the
     accumulated events go through the SAME validated append as batch
     ingest (valid/invalid split, DLQ, date-partitioned write) —
-    ``foreachBatch`` is the streaming twin of ``ingest_batch``.
+    ``foreachBatch`` is the streaming twin of ``ingest_batch``, so
+    each non-empty micro-batch is one commit to the lake's
+    transaction log (a batch with no valid row commits nothing).
 
     ``available_now=True`` drains the current source contents and
     stops (for tests / backfills); otherwise runs a 100 ms

@@ -35,8 +35,9 @@ def _jobs_so_far(spark) -> int:
 
 def test_query_is_lazy(spark, tmp_path):
     """Building a QueryResult must run ZERO jobs: the metrics count
-    (total_rows_scanned) is computed only on first access, and the
-    result DataFrame is untouched until the caller acts."""
+    (total_rows_scanned) is computed only on first access, the
+    result DataFrame is untouched until the caller acts, and the
+    scan's files and schema are read from the log."""
     lake = DataLakehouse(spark, str(tmp_path / "lake"))
     lake.ingest_batch(_bars())
     before = _jobs_so_far(spark)
@@ -45,9 +46,10 @@ def test_query_is_lazy(spark, tmp_path):
     )
     assert res.df is not None
     used = _jobs_so_far(spark) - before
-    # exactly one footer-only schema-inference job is acceptable;
-    # any more means a hidden data scan (the r1 metrics regression)
-    assert used <= 1, f"query() ran {used} jobs before any action"
+    # the files and schema come from the transaction log: no listing
+    # or footer schema-inference job, and no hidden data scan (the r1
+    # metrics regression)
+    assert used == 0, f"query() ran {used} jobs before any action"
 
 
 def test_ingest_batch_bounded_jobs(spark, tmp_path):

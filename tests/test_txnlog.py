@@ -883,12 +883,30 @@ class TestCompactDelegation:
     def test_datalakehouse_compact_delegates_to_txn_log(
         self, spark, tmp_path
     ):
-        """DataLakehouse.compact on a root that carries a txn log must
-        compact via a LOG COMMIT (TransactionalLake.optimize), never
-        the directory swap — a reader holding a pre-compact snapshot
-        keeps reading its exact file set mid-maintenance."""
+        """DataLakehouse.compact must compact via a LOG COMMIT
+        (TransactionalLake.optimize), never a directory swap — a reader
+        holding a pre-compact snapshot keeps reading its exact file set
+        mid-maintenance. Checked on a root a TransactionalLake created
+        and on one DataLakehouse created itself; on the latter, rows
+        acknowledged by every ingest path (auto-flush, flush,
+        ingest_batch) read back equal through a fresh DataLakehouse and
+        a fresh TransactionalLake."""
         from market_data_lakehouse_spark.lakehouse import DataLakehouse
+        from market_data_lakehouse_spark.schema import BAR_SCHEMA
 
+        from tests.conftest import make_bar
+
+        def assert_compacted_by_commit(path):
+            fresh = TransactionalLake(spark, path, partition_by=None)
+            assert fresh.history()[0]["op"] == "compact"  # latest first
+            assert not [
+                d
+                for d in os.listdir(str(tmp_path))
+                if "__pre_compact" in d or "__compact_" in d
+            ]
+            return fresh
+
+        # a root a TransactionalLake created
         path = str(tmp_path / "shared")
         lake = TransactionalLake(spark, path, partition_by=("date",))
         for i in range(4):
@@ -896,18 +914,9 @@ class TestCompactDelegation:
         v_before = lake.version
         reader = lake.snapshot(version=v_before)  # concurrent reader
 
-        dlh = DataLakehouse(spark, path)
-        dlh.compact(target_files_per_partition=1)
+        DataLakehouse(spark, path).compact(target_files_per_partition=1)
 
-        # compaction landed as a commit, not a swap: history records
-        # it, the log survived, and no __pre_compact sibling exists
-        fresh = TransactionalLake(spark, path, partition_by=None)
-        assert fresh.history()[0]["op"] == "compact"  # latest first
-        assert not [
-            d
-            for d in os.listdir(str(tmp_path))
-            if "__pre_compact" in d or "__compact_" in d
-        ]
+        fresh = assert_compacted_by_commit(path)
         # the pre-compact reader still resolves its full snapshot
         # (old files retained until vacuum) and sees identical data
         assert sorted(r.price for r in reader.collect()) == [
@@ -917,16 +926,29 @@ class TestCompactDelegation:
         live, _s, _v, _dv = fresh._snapshot_state()
         assert len(live) == 1  # actually compacted
 
-    def test_csv_lake_with_txn_log_refuses(self, spark, tmp_path):
-        from market_data_lakehouse_spark.lakehouse import DataLakehouse
+        # a root DataLakehouse created itself
+        path = str(tmp_path / "own")
+        dlh = DataLakehouse(spark, path, batch_size=2)
+        bars = [make_bar(i) for i in range(30)]  # two calendar dates
+        assert dlh.ingest(bars[0]) and dlh.ingest(bars[1])  # auto-flush
+        assert dlh.ingest(bars[2])
+        dlh.flush()
+        dlh.ingest_batch(bars[3:])
+        cols = BAR_SCHEMA.fieldNames()
+        acked = sorted(tuple(b[c] for c in cols) for b in bars)
+        pre = dlh.query()  # built before compact, collected after
 
-        path = str(tmp_path / "shared")
-        lake = TransactionalLake(spark, path, partition_by=("date",))
-        lake.append(_df(spark, [("AAPL", 150)]))
-        dlh = DataLakehouse(spark, path, file_format="csv")
-        with pytest.raises(ValueError, match="transaction log"):
-            dlh.compact()
+        dlh.compact()
 
+        fresh = assert_compacted_by_commit(path)
+        assert len(fresh._snapshot_state()[0]) == 2  # one per date
+        assert sorted(tuple(r) for r in pre.bars) == acked
+        reopened = DataLakehouse(spark, path).table()
+        got = reopened.select(*cols).collect()
+        assert sorted(tuple(r) for r in got) == acked
+        assert sorted(fresh.snapshot().collect()) == sorted(
+            reopened.collect()
+        )
 
 class TestLogCheckpoints:
     def _lake(self, spark, tmp_path, every=5):

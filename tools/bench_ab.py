@@ -62,13 +62,17 @@ CONTROL = {
 # (file, qualname) — qualname "Class.method" or bare function name.
 # Beyond the flagged entry points, the session-level dependencies the
 # r5 VERDICT named: the observe chain in _append, the validity
-# predicate, and the session conf defaults.
+# predicate, and the session conf defaults; and the log writer that
+# _append hands its batch to.
 IDENTITY_TARGETS = [
     ("market_data_lakehouse_spark/lakehouse.py", "DataLakehouse.ingest_batch"),
     ("market_data_lakehouse_spark/lakehouse.py", "DataLakehouse._append"),
     ("market_data_lakehouse_spark/lakehouse.py", "DataLakehouse.flush"),
     ("market_data_lakehouse_spark/lakehouse.py", "DataLakehouse.__init__"),
     ("market_data_lakehouse_spark/lakehouse.py", "valid_bar"),
+    ("market_data_lakehouse_spark/txnlog.py", "TransactionalLake.append"),
+    ("market_data_lakehouse_spark/txnlog.py", "TransactionalLake._checked_write"),
+    ("market_data_lakehouse_spark/txnlog.py", "TransactionalLake._write_files"),
     ("market_data_lakehouse_spark/session.py", "get_spark"),
 ]
 
