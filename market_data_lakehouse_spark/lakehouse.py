@@ -184,9 +184,8 @@ class QueryResult:
     ``df`` is the lazy DataFrame; ``bars`` materializes it (the
     reference always materializes). ``total_rows_scanned`` is the
     pre-filter cardinality of the partitions touched, matching the
-    reference's metric semantics (lakehouse.py:476) — collected via
-    ``df.observe()`` as a side-effect of the result's own action, so
-    the metric costs zero extra Spark jobs (VERDICT r1 item 2).
+    reference's metric semantics (lakehouse.py:476) — one ``count()``
+    job over the pruned scan, run lazily on first access.
     """
 
     df: DataFrame = None
@@ -460,7 +459,12 @@ class DataLakehouse:
         stats.elapsed_ms = (time.perf_counter() - t0) * 1e3
         return stats
 
-    def _append(self, df: DataFrame, validate: bool) -> IngestionStats:
+    def _append(
+        self,
+        df: DataFrame,
+        validate: bool,
+        txn: tuple[str, int] | None = None,
+    ) -> IngestionStats:
         """Split valid/invalid and commit the valid rows as one
         ``TransactionalLake.append``, partitioned by ``date``.
 
@@ -468,7 +472,12 @@ class DataLakehouse:
         (lakehouse.py:392-408); the log's writer does the same
         grouping after a rebalance on ``date``, and a batch with no
         valid row commits nothing (``skip_empty``).
+
+        ``txn=(app_id, version)`` makes the call idempotent: an id
+        already committed returns before writing rows or DLQ rows.
         """
+        if txn is not None and txn[1] <= self.txn.last_txn_version(txn[0]):
+            return IngestionStats()
         # ONE scan of the batch for everything (VERDICT r1 item 3):
         # the stats (valid/invalid counts, touched partitions) ride
         # the write itself as an ``observe()`` side-metric, so the
@@ -498,7 +507,7 @@ class DataLakehouse:
             *BAR_SCHEMA.fieldNames(),
             F.col("date").cast(self._key_type()).alias("date"),
         )
-        self.txn.append(out, skip_empty=True)
+        self.txn.append(out, txn=txn, skip_empty=True)
         try:
             got = obs.get  # available once the write's action finished
         except Exception:

@@ -39,9 +39,9 @@ SHINGLE_ARRAY = "array<struct<`0`:string,`1`:string,`2`:string>>"
 # family's cost is governed by band-collision pair volume, which
 # tracks duplicate density — an input property nothing else measures.
 # Each run registers zero-cost CollectMetrics observations on the
-# candidate stream; bench.py / scale_probe harvest them after the
-# action so BENCH_r{N}.json carries the pair counts and sf1+
-# extrapolation is arithmetic, not hope.
+# candidate stream; a caller reads them after the action (today only
+# the funnel-invariant tests do), so the pair counts at one scale make
+# sf1+ extrapolation arithmetic, not hope.
 # ---------------------------------------------------------------------------
 
 PAIR_METRICS: dict[str, dict[str, Observation]] = {}

@@ -47,6 +47,18 @@ def read_tick_stream(
     return reader.json(source_dir)
 
 
+def _start(stream, sink, checkpoint_dir, trigger_ms, available_now):
+    """Start ``sink`` as the stream's checkpointed foreachBatch sink."""
+    writer = stream.writeStream.foreachBatch(sink).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=f"{trigger_ms} milliseconds")
+    return writer.start()
+
+
 def stream_ingest(
     stream: DataFrame,
     lake: DataLakehouse,
@@ -57,26 +69,23 @@ def stream_ingest(
     """Micro-batch ingest into the lakehouse (T1): every trigger, the
     accumulated events go through the SAME validated append as batch
     ingest (valid/invalid split, DLQ, date-partitioned write) —
-    ``foreachBatch`` is the streaming twin of ``ingest_batch``, so
-    each non-empty micro-batch is one commit to the lake's
-    transaction log (a batch with no valid row commits nothing).
+    ``foreachBatch`` is the streaming twin of ``ingest_batch``. Each
+    micro-batch commits exactly once: its id rides the commit as
+    ``txn=(app_id, batch_id)``, so a batch replayed after a crash
+    between the lake commit and Spark's checkpoint commit writes
+    nothing, DLQ rows included (a batch with no valid row commits a
+    data-less ``txn_marker``).
 
     ``available_now=True`` drains the current source contents and
     stops (for tests / backfills); otherwise runs a 100 ms
     processing-time trigger like the reference's flush cadence.
     """
+    app_id = f"stream_ingest:{checkpoint_dir}"
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        lake.ingest_batch(batch_df)
+        lake._append(batch_df, validate=True, txn=(app_id, batch_id))
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_ms} milliseconds")
-    return writer.start()
+    return _start(stream, sink, checkpoint_dir, trigger_ms, available_now)
 
 
 def stream_upsert(
@@ -153,14 +162,7 @@ def stream_upsert(
             matched_condition=matched_condition,
         )
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_ms} milliseconds")
-    return writer.start()
+    return _start(stream, sink, checkpoint_dir, trigger_ms, available_now)
 
 
 def streaming_ohlcv_bars(
@@ -290,14 +292,7 @@ def stream_ingest_transactional(
         for view in refresh_views or ():
             view.refresh()
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_ms} milliseconds")
-    return writer.start()
+    return _start(stream, sink, checkpoint_dir, trigger_ms, available_now)
 
 
 def streaming_running_vwap(ticks: DataFrame) -> DataFrame:
@@ -608,11 +603,4 @@ def stream_scd2(
             txn=(app_id, batch_id),
         )
 
-    writer = stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_ms} milliseconds")
-    return writer.start()
+    return _start(stream, sink, checkpoint_dir, trigger_ms, available_now)

@@ -10,22 +10,17 @@
    commits (finally-clear) or failed ops (cleared at staging entry).
 4. low — footer-count anchors cross-check the scan's own file list
    (df.inputFiles()) before being trusted as exact.
-5. low — bench.py's host-calibrated write band is env-overridable.
 """
 
 from __future__ import annotations
 
 import os
-import subprocess
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
 from market_data_lakehouse_spark.sqlfront import LakeSQL
 from market_data_lakehouse_spark.txnlog import TransactionalLake
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 class TestStripQualifierPathStart:
@@ -159,43 +154,3 @@ class TestRowcountExactCrossCheck:
         )
         assert parquet_rowcount_exact(str(sf), "tbl", df) is None
 
-
-class TestWriteBandOverride:
-    def test_env_override_parses(self):
-        out = subprocess.run(
-            [sys.executable, "-c",
-             "import bench; print(bench.WRITE_BAND_SEC, "
-             "bench.WRITE_LIMIT_SEC)"],
-            capture_output=True, text=True, cwd=REPO,
-            env={**os.environ, "SPARK_GRAFT_WRITE_BAND": "0.2,0.9"},
-        )
-        assert out.returncode == 0, out.stderr
-        assert "(0.2, 0.9) 1.1" in out.stdout
-
-    def test_bad_override_refuses(self):
-        out = subprocess.run(
-            [sys.executable, "-c", "import bench"],
-            capture_output=True, text=True, cwd=REPO,
-            env={**os.environ, "SPARK_GRAFT_WRITE_BAND": "0.9,0.2"},
-        )
-        assert out.returncode != 0
-        assert "SPARK_GRAFT_WRITE_BAND" in out.stderr
-
-    def test_non_numeric_override_refuses_cleanly(self):
-        out = subprocess.run(
-            [sys.executable, "-c", "import bench"],
-            capture_output=True, text=True, cwd=REPO,
-            env={**os.environ, "SPARK_GRAFT_WRITE_BAND": "0.2,abc"},
-        )
-        assert out.returncode != 0
-        assert "SPARK_GRAFT_WRITE_BAND" in out.stderr
-        assert "Traceback" not in out.stderr
-
-    def test_limit_below_band_max_refuses(self):
-        out = subprocess.run(
-            [sys.executable, "-c", "import bench"],
-            capture_output=True, text=True, cwd=REPO,
-            env={**os.environ, "SPARK_GRAFT_WRITE_BAND": "0.1,0.5,0.3"},
-        )
-        assert out.returncode != 0
-        assert "SPARK_GRAFT_WRITE_BAND" in out.stderr

@@ -87,6 +87,37 @@ class TestStreamIngest:
         q.awaitTermination(120)
         assert lake.query().df.count() == 2
 
+    def test_replayed_batch_commits_once(self, spark, tmp_path):
+        # a crash after the lake commit but before Spark's checkpoint
+        # commit: batch 0's offsets are logged, its commit marker is
+        # not, so the restarted query re-runs batch 0
+        src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+        dlq = str(tmp_path / "dlq")
+        _write_json(
+            src + "/b0.json",
+            [_bar("2024-06-15T10:00:00"), _bar("2024-06-15T11:00:00", o=200.0)],
+        )
+        lake = DataLakehouse(spark, str(tmp_path / "lake"), dead_letter_path=dlq)
+
+        def run():
+            q = stream_ingest(
+                read_bar_stream(spark, src), lake, ckpt, available_now=True
+            )
+            q.awaitTermination(120)
+
+        run()
+        assert lake.query().df.count() == 1
+        assert spark.read.parquet(dlq).count() == 1
+        version = lake.txn.version
+        for name in ("0", ".0.crc"):
+            p = os.path.join(ckpt, "commits", name)
+            if os.path.exists(p):
+                os.remove(p)
+        run()
+        assert lake.query().df.count() == 1
+        assert spark.read.parquet(dlq).count() == 1
+        assert lake.txn.version == version
+
 
 class TestStreamingBars:
     def _run(self, spark, tmp_path, fn, name):
